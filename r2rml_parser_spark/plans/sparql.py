@@ -58,13 +58,14 @@ there; closures follow §18.4 reachability SET
 semantics, evaluated eagerly by path-doubling joins with
 localCheckpoint lineage truncation (log₂(diameter) rounds), where
 ``*`` / ``?`` include the zero-length identity over every graph node
-per spec; a constant endpoint switches to a seeded breadth-first
-frontier walk, and a variable endpoint that sibling patterns in the
-same group already bind seeds a MULTI-source frontier walk from
-their distinct terms instead of materializing the full reachability
-relation; (r4) closures nested inside a closed group — ``(p+/q)*``
-— compile too: the inner closure becomes a derived edge relation and
-the outer fixpoint runs over it. Negated property sets ``!p`` /
+per spec; an endpoint that is a constant, or a variable that
+sibling patterns in the same group already bind, seeds a breadth-first
+frontier walk from its distinct terms (a constant is a one-row seed)
+instead of materializing the full reachability relation. A closed
+group's edge relation is the group's binary relation evaluated
+recursively (``_path_relation``), so closures nested inside it —
+``(p+/q)*`` — compile too: the inner closure becomes a derived edge
+relation and the outer fixpoint runs over it. Negated property sets ``!p`` /
 ``!(p1|^p2|...)`` are full path PRIMARIES per the §9.1 grammar:
 forward members compile to a per-triple predicate-exclusion filter,
 inverse members to its endpoint flip (``!(F|^I)`` ≡ ``!F | ^!I``,
@@ -435,6 +436,7 @@ table).
 
 from __future__ import annotations
 
+import functools
 import itertools
 import re
 from dataclasses import dataclass
@@ -541,6 +543,16 @@ def _fold_regex_flags(pat: str, flags: str) -> str:
         pat = "\\Q" + pat + "\\E"
     emb = "".join(c for c in "smix" if c in flags)
     return f"(?{emb})" + pat if emb else pat
+
+
+def _group_all_vars(pats, nested, gbinds) -> set[str]:
+    """Every variable a group may bind: its patterns' variables, its
+    BIND targets and its nested OPTIONALs' (recursively)."""
+    out = {t.name for pat in pats for t in pat if isinstance(t, Var)}
+    out |= {b[1] for b in gbinds}
+    for npats, _nf, nnested, _ne, nb in nested:
+        out |= _group_all_vars(npats, nnested, nb)
+    return out
 
 
 def _is_internal(v: str) -> bool:
@@ -891,48 +903,13 @@ class _Parser:
             alts = [[base] * k for k in range(n, m + 1)]
         return (False, alts, None)
 
-    def _normalize_rel(self, alts) -> list[list[tuple]]:
-        """Flatten a closed path group into alternatives of sequences of
-        (inverse, Iri) — the FAST edge-relation spec a closure fixpoint
-        runs over (pruned pattern joins, ``_edge_relation``). Groups
-        whose elements this spec cannot carry — nested closures
-        (``(p+/q)*``) or negated-set members — raise, and the caller
-        (``_expand_pathx``) falls back to the general ("closure_path",
-        ast, mod) spec evaluated by ``_path_relation``."""
-        out: list[list[tuple]] = []
-        for seq in alts:
-            expanded: list[list[tuple]] = [[]]
-            for inv, prim, mod in seq:
-                if mod:
-                    raise SparqlError(
-                        "closure nested inside a closed path group: "
-                        "general-relation fallback"
-                    )
-                if isinstance(prim, tuple):
-                    raise SparqlError(
-                        "negated set inside a closed path group: "
-                        "general-relation fallback"
-                    )
-                if isinstance(prim, Iri):
-                    expanded = [e + [(inv, prim)] for e in expanded]
-                else:
-                    subrels = self._normalize_rel(prim)
-                    if inv:  # ^(a/b) = ^b/^a
-                        subrels = [
-                            [(not i2, p2) for (i2, p2) in reversed(sr)]
-                            for sr in subrels
-                        ]
-                    expanded = [e + sr for e in expanded for sr in subrels]
-            out.extend(expanded)
-        return out
-
     def _expand_pathx(self, s, alts, o) -> list[list[tuple]]:
         """Desugar a path AST between endpoints (s, o) into BRANCHES of
         pattern tuples: alternation distributes into branches (bag
         union preserves SPARQL's per-alternative multiplicity, §18.4),
         sequences chain through fresh internal variables (§9.3), and a
         closed element becomes a ("closure", Iri, mod) or
-        ("closure_rel", alternatives, mod) pattern evaluated by the
+        ("closure_path", path-AST, mod) pattern evaluated by the
         reachability fixpoint — so ``(p1|p2)/p3``, ``(p1/p2)+``, and
         closure elements inside sequences (``p1/p2+``) all compile."""
 
@@ -957,14 +934,12 @@ class _Parser:
                         pat = (a, prim, b)
                     branches = [br + [pat] for br in branches]
                 elif mod:
-                    try:
-                        spec = ("closure_rel", self._normalize_rel(prim), mod)
-                    except SparqlError:
-                        # nested closures / negated sets inside the
-                        # closed group: evaluate the group's binary
-                        # relation recursively (_path_relation)
-                        spec = ("closure_path", prim, mod)
-                    branches = [br + [(a, spec, b)] for br in branches]
+                    # a closed group: the fixpoint runs over the group's
+                    # binary relation, evaluated recursively
+                    # (_path_relation — nested closures and negated
+                    # sets included)
+                    pat = (a, ("closure_path", prim, mod), b)
+                    branches = [br + [pat] for br in branches]
                 else:
                     sub = expand_alts(a, prim, b)
                     branches = [br + sb for br in branches for sb in sub]
@@ -1378,14 +1353,6 @@ class _Parser:
         def _pattern_vars(pats: list[tuple]) -> set[str]:
             return {t.name for pat in pats for t in pat if isinstance(t, Var)}
 
-        def _group_all_vars(pats, nested, gbinds) -> set[str]:
-            # every variable a branch/group may bind, including its
-            # nested OPTIONALs (recursively) and BIND targets
-            out = _pattern_vars(pats) | {b[1] for b in gbinds}
-            for npats, _nf, nnested, _ne, nb in nested:
-                out |= _group_all_vars(npats, nnested, nb)
-            return out
-
         while self._peek() != ("punct", "}"):
             if self._kw_is("FILTER"):
                 self._next()
@@ -1404,14 +1371,7 @@ class _Parser:
                     allow_bind=True,
                 )
                 timeline.append(("optional", group))
-
-                def _deep(npats, nnested) -> set[str]:
-                    out = _pattern_vars(npats)
-                    for mpats, _mf, mnested, _me, mb in nnested:
-                        out |= _deep(mpats, mnested) | {b[1] for b in mb}
-                    return out
-
-                gvars = _deep(group[0], group[2]) | {b[1] for b in group[4]}
+                gvars = _group_all_vars(group[0], group[2], group[4])
                 guard_vars |= gvars
                 null_vars |= gvars - seen_vars
                 seen_vars |= gvars
@@ -1449,7 +1409,7 @@ class _Parser:
                 self._next()
                 # (late r4) the MINUS group may carry nested OPTIONALs;
                 # a shared key they leave nullable takes the two-sided
-                # §8.3 slice decomposition (_minus_compat_anti)
+                # §8.3 slice decomposition (_compat_join)
                 mp, mf, mn, me, mb = self._group(
                     allow_nested_optional=True, allow_exists=True,
                     allow_bind=True,
@@ -2075,7 +2035,7 @@ class _Parser:
         variable is bound inside the group; an OPTIONAL filter that
         also needs variables of the immediately enclosing group
         compiles into the left-join CONDITION (LeftJoin(A, G, F) with
-        cross-group F; see _left_join_group). Nested OPTIONAL
+        cross-group F; see _compat_join). Nested OPTIONAL
         groups are accepted to ARBITRARY depth inside OPTIONAL groups,
         UNION branches, EXISTS probes, and MINUS groups
         (``allow_nested_optional``; each nested entry is recursively
@@ -2874,69 +2834,16 @@ def _apply_group_exists(
     """Filter(EXISTS(P), G): apply ``[NOT] EXISTS`` entries over a
     group's solution relation as semi/anti joins correlated through
     variables the group itself binds. Recursive (r4): the probe group
-    may carry its own nested EXISTS filters, compiled the same way
-    over ITS solutions before the outer semi/anti join, and (late r4)
-    nested OPTIONAL groups — LeftJoin never removes a probe solution,
-    so the existence test's key set and emptiness are unchanged. An
-    EXISTS correlating only through variables bound outside the group
-    would need SPARQL's substitution semantics — rejected, as is a
-    join variable a nested OPTIONAL of the GROUP may have left
-    unbound. A correlation key bound only inside the PROBE's own
-    OPTIONAL (late r4, formerly rejected): with no top-level probe
-    filter and no nested probe EXISTS, nothing can remove a probe
-    base solution — LeftJoin keeps every required-part row, Extend
-    never drops — so §18.6 substitution of that key constrains only
-    the OPTIONAL's extensions, never emptiness; existence is
-    INDEPENDENT of the key and it simply leaves the correlation. With
-    probe filters/EXISTS present (they CAN remove rows whose
-    OPTIONAL bindings the substitution would constrain) the rejection
-    stands."""
+    may carry its own nested EXISTS filters and OPTIONAL groups
+    (``_exists_probe``). An EXISTS correlating through variables bound
+    outside the group would need SPARQL's substitution semantics —
+    rejected; a join variable a nested OPTIONAL of the GROUP may have
+    left unbound takes the bound-mask slice decomposition."""
     for positive, payload in gexists:
-        epats, efilters, enested, eexists, ebinds = payload
-        # (late r4) OPTIONAL inside the probe: compile the probe as
-        # a group via the recursive LeftJoin machinery. LeftJoin
-        # preserves every base solution, so the existence test —
-        # key set AND emptiness — is unchanged unless a
-        # correlation key is bound only inside the probe's
-        # OPTIONAL, which needs §18.6 substitution (rejected
-        # below). Probe filters must be probe-local.
-        edf, evars, e_nullable, edeferred = _compile_optional_group(
-            triples, epats, efilters, enested, eexists, ebinds,
-            outer_bound | gvars, graph_var=graph_var,
+        edf, evars, eshared = _exists_probe(
+            triples, payload, outer_bound | gvars, scope, graph_var
         )
-        if edeferred:
-            deep = sorted({
-                v
-                for f in edeferred
-                for v in _expr_vars(f)
-                if not _is_internal(v) and v not in evars
-            })
-            raise SparqlError(
-                f"an EXISTS filter references variable(s) {deep} "
-                "not bound in the probe group — SPARQL's §18.6 "
-                "substitution for that correlation is not "
-                "expressible here"
-            )
-        eshared = sorted(v for v in evars if v in gvars)
-        probe_null = sorted(v for v in eshared if v in e_nullable)
-        if probe_null:
-            if efilters or eexists:
-                raise SparqlError(
-                    f"an EXISTS inside {scope} correlates through "
-                    f"variable(s) {probe_null} its own OPTIONAL may leave "
-                    "unbound — §18.6 substitution over a nullable probe "
-                    "key is not expressible as a semi-join when the "
-                    "probe carries top-level filters or nested EXISTS"
-                )
-            # (late r4) exact refinement: with NO top-level probe
-            # filter and NO nested probe EXISTS, nothing can REMOVE a
-            # probe base solution — LeftJoin keeps every required-part
-            # row and Extend never drops — so substituting the
-            # OPTIONAL-only key constrains only the OPTIONAL's
-            # extensions, never emptiness: existence is INDEPENDENT of
-            # that key. Drop it from the correlation instead of
-            # rejecting.
-            eshared = [v for v in eshared if v not in e_nullable]
+        eshared = [v for v in eshared if v in gvars]
         outer_corr = sorted(
             v for v in evars
             if not _is_internal(v) and v in outer_bound and v not in gvars
@@ -2948,29 +2855,65 @@ def _apply_group_exists(
                 "substitution semantics for that correlation are not "
                 "expressible as a semi-join on group keys"
             )
-        if not eshared:
-            # uncorrelated existence test = a constant over the whole
-            # group (§18.6: substituting nothing leaves the pattern
-            # as-is): keep or empty the group on one emptiness probe
-            if edf.isEmpty() == positive:
-                gdf = gdf.limit(0)
-            continue
-        ebad = sorted(v for v in eshared if v in (nullable_vars or ()))
-        if ebad:
-            # a shared variable a nested OPTIONAL may have left unbound:
-            # §18.6 substitution via the bound-mask slice decomposition
-            gdf = _nullable_corr_filter(
-                gdf, edf, eshared, ebad,
-                "semi" if positive else "anti", f"an EXISTS inside {scope}",
-            )
-            continue
-        ekeys = [x for v in eshared for x in _term_key(v)]
-        gdf = gdf.join(
-            edf.select(*ekeys),
-            on=ekeys,
-            how="left_semi" if positive else "left_anti",
+        # a shared variable a nested OPTIONAL may have left unbound
+        # takes the bound-mask slice decomposition (§18.6 substitution)
+        gdf = _compat_join(
+            gdf, nullable_vars or set(), edf, set(), eshared,
+            "semi" if positive else "anti", f"an EXISTS inside {scope}",
         )
     return gdf
+
+
+def _exists_probe(
+    triples: DataFrame,
+    payload: tuple,
+    outer: set[str],
+    scope: str,
+    graph_var: str | None = None,
+) -> tuple[DataFrame, set[str], list[str]]:
+    """Compile one [NOT] EXISTS probe group → (probe solutions, probe
+    variables, correlation variables: those ``outer`` binds). The probe
+    compiles as a group through the recursive LeftJoin machinery
+    (nested OPTIONALs, BINDs, its own EXISTS): LeftJoin preserves
+    every base solution, so the existence test's key set and emptiness
+    are unchanged. Probe filters must be probe-local.
+
+    A correlation key bound only inside the PROBE's own OPTIONAL: with
+    no top-level probe filter and no nested probe EXISTS, nothing can
+    remove a probe base solution — LeftJoin keeps every required-part
+    row, Extend never drops — so §18.6 substitution of that key
+    constrains only the OPTIONAL's extensions, never emptiness;
+    existence is INDEPENDENT of the key and it simply leaves the
+    correlation. With probe filters/EXISTS present (they CAN remove
+    rows whose OPTIONAL bindings the substitution would constrain) it
+    is rejected."""
+    pats, filters, nested, inner, binds = payload
+    gdf, gvars, p_nullable, deferred = _compile_optional_group(
+        triples, pats, filters, nested, inner, binds, outer,
+        graph_var=graph_var,
+    )
+    if deferred:
+        deep = sorted({
+            v
+            for f in deferred
+            for v in _expr_vars(f)
+            if not _is_internal(v) and v not in gvars
+        })
+        raise SparqlError(
+            f"an EXISTS in {scope} references variable(s) {deep} not "
+            "bound in the probe group — SPARQL's §18.6 substitution for "
+            "that correlation is not expressible here"
+        )
+    shared = sorted(v for v in gvars if v in outer)
+    probe_null = [v for v in shared if v in p_nullable]
+    if probe_null and (filters or inner):
+        raise SparqlError(
+            f"an EXISTS in {scope} correlates through variable(s) "
+            f"{probe_null} its own OPTIONAL may leave unbound — §18.6 "
+            "substitution over a nullable probe key is not expressible "
+            "when the probe carries top-level filters or nested EXISTS"
+        )
+    return gdf, gvars, [v for v in shared if v not in p_nullable]
 
 
 def _pattern_df(
@@ -3085,42 +3028,6 @@ def _flip_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-_REL_N = [0]  # fresh-variable counter for derived edge relations
-
-
-def _edge_relation(triples: DataFrame, alts: list[list[tuple]]) -> DataFrame:
-    """Derived edge relation for a closed path GROUP — ``(p1/p2)+`` or
-    ``(p1|p2)*``: the union over alternatives of the endpoint pairs of
-    each sequence, as a SET (SPARQL 1.1 §9.1 path translation composes
-    ZeroOrMorePath over the group's binary relation). Each sequence is
-    one chain of pruned pattern joins; the result is checkpointed by
-    the caller so fixpoint rounds scan it instead of re-joining."""
-    s, o = Var("__ceS"), Var("__ceO")
-    rel: DataFrame | None = None
-    for seq in alts:
-        pats: list[tuple] = []
-        cur = s
-        for j, (inv, pred) in enumerate(seq):
-            nxt = o if j == len(seq) - 1 else Var(f"__ce{_REL_N[0]}")
-            _REL_N[0] += 1
-            pats.append((nxt, pred, cur) if inv else (cur, pred, nxt))
-            cur = nxt
-        d, _ = _join_patterns(triples, pats)
-        sk, sl, sd = _shadow_cols(s.name)
-        ok, ol, od = _shadow_cols(o.name)
-        e = F.coalesce
-        empty = F.lit("")
-        part = d.select(
-            F.col(s.name).alias("_sv"), F.col(sk).alias("_sk"),
-            e(F.col(sl), empty).alias("_sl"), e(F.col(sd), empty).alias("_sd"),
-            F.col(o.name).alias("_dv"), F.col(ok).alias("_dk"),
-            e(F.col(ol), empty).alias("_dl"), e(F.col(od), empty).alias("_dd"),
-        )
-        rel = part if rel is None else rel.unionByName(part)
-    assert rel is not None
-    return rel.distinct()
-
-
 def _slice_edges(triples: DataFrame, cond) -> DataFrame:
     """Predicate-filtered triple slice in the canonical 8-column edge
     layout, WITHOUT dedup — the bag-semantics building block of
@@ -3148,12 +3055,12 @@ def _path_relation(triples: DataFrame, alts: list[list[tuple]]) -> DataFrame:
     modifier runs the reachability fixpoint over the element's own
     relation (SET semantics per §18.4 — the only dedup points).
 
-    This is the fallback evaluator behind two surfaces the fast paths
-    cannot carry: closures over groups that THEMSELVES contain closures
-    or negated sets (``(p+/q)*`` — the "closure_path" spec), and full
-    path expressions inside braced OPTIONAL/UNION/EXISTS/MINUS groups
-    (the "pathrel" pattern), where alternation cannot distribute into
-    a top-level UNION. Plans stay join/union/aggregate-only — no UDFs,
+    It evaluates two surfaces: the edge relation of every closed path
+    group (``(p1/p2)+``, ``(p1|^p2)*``, ``(p+/q)*`` — the
+    "closure_path" spec, deduplicated by the caller), and full path
+    expressions inside braced OPTIONAL/UNION/EXISTS/MINUS groups (the
+    "pathrel" pattern), where alternation cannot distribute into a
+    top-level UNION. Plans stay join/union/aggregate-only — no UDFs,
     no driver loops beyond the bounded fixpoint rounds."""
     rel: DataFrame | None = None
     for seq in alts:
@@ -3194,18 +3101,14 @@ def _path_relation(triples: DataFrame, alts: list[list[tuple]]) -> DataFrame:
 
 
 def _closure_edges(triples: DataFrame, spec: tuple) -> DataFrame:
-    """Edge relation for a closure spec: ("closure", Iri, mod) → one
-    predicate slice; ("closure_rel", alts, mod) → derived group
-    relation (checkpointed — fixpoint rounds must not re-run its
-    joins); ("closure_path", ast, mod) → the general recursive
-    relation for groups carrying nested closures or negated sets."""
+    """Edge SET for a closure spec: ("closure", Iri, mod) → one
+    predicate slice; ("closure_path", ast, mod) → the closed group's
+    binary relation (SPARQL 1.1 §9.1 composes the closure over it),
+    checkpointed so fixpoint rounds scan it instead of re-running its
+    joins."""
     if spec[0] == "closure":
         return _pred_edges(triples, spec[1])
-    if spec[0] == "closure_path":
-        return _path_relation(triples, spec[1]).distinct().localCheckpoint(
-            eager=True
-        )
-    return _edge_relation(triples, spec[1]).localCheckpoint(eager=True)
+    return _path_relation(triples, spec[1]).distinct().localCheckpoint(eager=True)
 
 
 def _closure_pairs(triples: DataFrame, edges: DataFrame, mod: str) -> DataFrame:
@@ -3308,79 +3211,6 @@ def _walk_edges(edges: DataFrame, forward: bool) -> DataFrame:
     )
 
 
-def _seeded_closure_pairs(
-    triples: DataFrame, edges: DataFrame, mod: str, seed, forward: bool
-) -> DataFrame:
-    """Closure pairs when one endpoint is a CONSTANT: breadth-first
-    frontier iteration from the seed instead of the full-relation
-    doubling — work scales with the REACHABLE subgraph, not with the
-    whole edge relation (the dominant case at 100 TB: hierarchy
-    walks from a handful of roots). ``forward=False`` walks the edges
-    backwards for a constant OBJECT; the returned relation is always
-    in (src..., dst...) orientation.
-
-    Per SPARQL 1.1 §18.4 (the ALP procedure), the zero-length pair for
-    ``*``/``?`` is the seed itself, INCLUDED even when the seed term
-    does not occur in the graph."""
-    spark = triples.sparkSession
-    edges = _walk_edges(edges, forward)
-    if isinstance(seed, Iri):
-        seed_row = (seed.value, "iri", "", "")
-    else:  # Lit seed (matches nothing forward, but ?/* include identity)
-        seed_row = (seed.lexical, "literal", seed.lang or "", seed.dtype or "")
-    tcols = ["_tv", "_tk", "_tl", "_td"]
-    start = spark.createDataFrame([seed_row], ", ".join(f"`{c}` string" for c in tcols))
-    def step(fr: DataFrame) -> DataFrame:
-        return (
-            fr.select(
-                F.col("_tv").alias("_fv"), F.col("_tk").alias("_fk"),
-                F.col("_tl").alias("_fl"), F.col("_td").alias("_fd"),
-            )
-            .join(edges, on=["_fv", "_fk", "_fl", "_fd"], how="inner")
-            .select(*tcols)
-            .distinct()
-        )
-
-    if mod == "?":
-        reached = step(start).unionByName(start).distinct()
-    else:
-        # '+' starts the accumulation at the 1-step set (so the seed is
-        # a member only if some cycle returns to it); '*' starts at the
-        # seed itself (the zero-length pair)
-        reached = (step(start) if mod == "+" else start).localCheckpoint(eager=True)
-        frontier = reached
-        for _ in range(_SEEDED_MAX_ITERS):
-            fresh = step(frontier).join(
-                reached, on=tcols, how="left_anti"
-            ).localCheckpoint(eager=True)
-            if fresh.isEmpty():
-                break
-            reached = reached.unionByName(fresh).localCheckpoint(eager=True)
-            frontier = fresh
-        else:
-            raise SparqlError(
-                f"seeded property-path closure exceeded {_SEEDED_MAX_ITERS} "
-                "rounds"
-            )
-    src_side = [
-        F.lit(seed_row[0]).alias("_sv"), F.lit(seed_row[1]).alias("_sk"),
-        F.lit(seed_row[2]).alias("_sl"), F.lit(seed_row[3]).alias("_sd"),
-    ]
-    pairs = reached.select(
-        *src_side,
-        F.col("_tv").alias("_dv"), F.col("_tk").alias("_dk"),
-        F.col("_tl").alias("_dl"), F.col("_td").alias("_dd"),
-    )
-    if not forward:  # restore (src, dst) = (walked-to, seed) orientation
-        pairs = pairs.select(
-            F.col("_dv").alias("_sv"), F.col("_dk").alias("_sk"),
-            F.col("_dl").alias("_sl"), F.col("_dd").alias("_sd"),
-            F.col("_sv").alias("_dv"), F.col("_sk").alias("_dk"),
-            F.col("_sl").alias("_dl"), F.col("_sd").alias("_dd"),
-        )
-    return pairs
-
-
 def _multi_seeded_closure_pairs(
     edges: DataFrame, mod: str, seeds: DataFrame, forward: bool
 ) -> DataFrame:
@@ -3395,11 +3225,16 @@ def _multi_seeded_closure_pairs(
     relation even when a sibling pattern restricts one endpoint to a
     handful of terms).
 
+    A CONSTANT endpoint is the one-row seed frame: work then scales
+    with the REACHABLE subgraph, not with the whole edge relation (the
+    dominant case at scale: hierarchy walks from a handful of roots).
+
     ``seeds`` columns: (_ov, _ok, _ol, _od) — origin terms, oriented
     in walk direction. Zero-length semantics per §18.4 ALP: for
-    ``*``/``?`` every seed pairs with itself (seeds come from graph
-    bindings, so this equals the identity-over-graph-nodes the
-    unseeded evaluator adds, restricted to the join domain)."""
+    ``*``/``?`` every seed pairs with itself — a constant seed
+    INCLUDED even when the term does not occur in the graph; seeds
+    from graph bindings make this the identity-over-graph-nodes the
+    unseeded evaluator adds, restricted to the join domain."""
     edges = _walk_edges(edges, forward)
     ocols = ["_ov", "_ok", "_ol", "_od"]
     tcols = ["_tv", "_tk", "_tl", "_td"]
@@ -3454,8 +3289,8 @@ def _closure_pattern_df(
 ) -> tuple[DataFrame, list[str]]:
     """A closure pattern → (projection with shadow columns, bound
     vars), mirroring ``_pattern_df``'s output contract so it joins
-    into a BGP like any triple pattern. A constant endpoint switches
-    to seeded frontier iteration (see ``_seeded_closure_pairs``);
+    into a BGP like any triple pattern. A constant endpoint seeds the
+    frontier walk (``_multi_seeded_closure_pairs``) with itself;
     ``pairs`` injects a pre-computed relation (the sibling-seeded
     walk built by ``_join_patterns``)."""
     mod = spec[2]
@@ -3463,12 +3298,21 @@ def _closure_pattern_df(
         d = pairs
     else:
         edges = _closure_edges(triples, spec)
-        if not isinstance(s, Var):
-            d = _seeded_closure_pairs(triples, edges, mod, s, forward=True)
-        elif not isinstance(o, Var):
-            d = _seeded_closure_pairs(triples, edges, mod, o, forward=False)
-        else:
+        if isinstance(s, Var) and isinstance(o, Var):
             d = _closure_pairs(triples, edges, mod)
+        else:
+            seed = o if isinstance(s, Var) else s
+            row = (
+                (seed.value, "iri", "", "")
+                if isinstance(seed, Iri)
+                else (seed.lexical, "literal", seed.lang or "", seed.dtype or "")
+            )
+            seeds = triples.sparkSession.createDataFrame(
+                [row], "_ov string, _ok string, _ol string, _od string"
+            )
+            d = _multi_seeded_closure_pairs(
+                edges, mod, seeds, forward=not isinstance(s, Var)
+            )
     cols: dict[str, tuple] = {}
     variables: list[str] = []
 
@@ -3511,9 +3355,7 @@ def _closure_pattern_df(
 
 
 def _is_closure(p) -> bool:
-    return isinstance(p, tuple) and p[0] in (
-        "closure", "closure_rel", "closure_path"
-    )
+    return isinstance(p, tuple) and p[0] in ("closure", "closure_path")
 
 
 def _join_patterns(
@@ -3536,7 +3378,11 @@ def _join_patterns(
     the full reachability relation — the plan-level fix for the
     hub-heavy-graph blowup (VERDICT r3 #2). Deferral is
     semantics-preserving: inner/cross joins commute under bag
-    semantics, and the closure relation is a set either way."""
+    semantics, and the closure relation is a set either way. Closures
+    with a bound endpoint run first, so a chain of closures seeds from
+    its constant at either end — the zero-length pair of a constant
+    absent from the graph (§18.4 ALP) carries through the chain the
+    same way forward and backward."""
     df: DataFrame | None = None
     bound: set[str] = set()
 
@@ -3599,7 +3445,14 @@ def _join_patterns(
             pat_df, variables = _pattern_df(triples, s, p, o, graph_var=graph_var)
         attach(pat_df, variables)
 
-    for s, p, o in deferred:
+    while deferred:
+        # a closure with a sibling-bound endpoint goes first, so seeds
+        # propagate along a chain of closures from either end
+        s, p, o = deferred.pop(next(
+            (i for i, (a, _p, b) in enumerate(deferred)
+             if a.name in bound or b.name in bound),
+            0,
+        ))
         pairs = None
         if df is not None and (s.name in bound or o.name in bound):
             # seed the walk from the endpoint the siblings restrict
@@ -3650,8 +3503,7 @@ def _compile_graph_block(
         gvars = {
             v
             for v in (
-                {t.name for pat in pats for t in pat if isinstance(t, Var)}
-                | {b[1] for b in gbinds}
+                _group_all_vars(pats, nested, gbinds)
                 | ({gterm.name} if isinstance(gterm, Var) else set())
             )
             if not _is_internal(v)
@@ -4730,11 +4582,31 @@ def sparql_ask(
     return not _compile(triples, parsed).isEmpty()
 
 
-#: rename suffix for group-side columns in a conditional left join
+#: rename suffix for right-side columns under a conditional join
 _GSUF = "__lj"
 
-#: decomposition cap: 2^k equi-join slices per compatible join
+#: decomposition cap: bound-mask bits (2^k slices) per compatible join
 _COMPAT_MAX_NULLABLE = 4
+
+
+def _bound_slices(df: DataFrame, null_vars: list[str]):
+    """Yield (bound set, slice) for each of the 2^k bound-masks over
+    ``null_vars``: which of the possibly-unbound (NULL) variables a row
+    binds. The slices are disjoint and tile ``df``; with no nullable
+    variable the one slice is ``df`` itself."""
+    for mask in range(1 << len(null_vars)):
+        b = {v for i, v in enumerate(null_vars) if mask >> i & 1}
+        sl = df
+        for v in null_vars:
+            sl = sl.where(F.col(v).isNotNull() if v in b else F.col(v).isNull())
+        yield b, sl
+
+
+def _term_vars(df: DataFrame) -> list[str]:
+    """The variables a solution relation carries: value columns that
+    have term shadow columns."""
+    cols = set(df.columns)
+    return sorted(c for c in cols if _shadow_cols(c)[0] in cols)
 
 
 def _compat_join(
@@ -4743,33 +4615,77 @@ def _compat_join(
     right: DataFrame,
     right_nullable: set[str],
     shared: list[str],
+    how: str = "inner",
     what: str = "this join",
+    filters: list[tuple] | tuple = (),
 ) -> DataFrame:
-    """SPARQL-compatible inner join (§18.5 Join) when shared variables
-    may be UNBOUND (NULL) on either — or, late r4, BOTH — sides: an
-    unbound variable is compatible with any binding and the merged
-    solution takes whichever side's value exists (neither, when both
-    are unbound) — an equi-join on the raw columns would silently drop
-    those solutions.
+    """SPARQL's compatible join of two solution relations on their
+    ``shared`` variables, when those may be UNBOUND (NULL) on either
+    side: an unbound variable is compatible with any binding and the
+    merged solution takes whichever side's value exists — a raw
+    equi-join would treat the NULL key as a non-match instead.
 
-    Decomposed exactly: EACH side is partitioned by which of its
-    nullable shared variables are bound (2^kl × 2^kr slice pairs,
-    kl + kr capped at ``_COMPAT_MAX_NULLABLE`` mask bits); a slice
-    pair equi-joins on the variables bound on BOTH sides; a variable
-    bound on exactly one side keeps that side's binding (the other
-    side's NULL columns are dropped before the join); a variable bound
-    on neither stays unbound in the merged solution (one NULL column
-    set is kept). Slice pairs tile the bag product — every (l, r) row
-    pair lands in exactly one piece — so bag multiplicity is
-    preserved; every piece projects the same column set, so the union
-    is by name. Callers keep a shared variable in their nullable set
-    iff it was nullable on both sides (only the neither-bound piece
-    leaves it NULL)."""
+    ``how`` picks the algebra operator:
+
+    * ``inner`` — Join(A, B) (§18.5);
+    * ``left`` — LeftJoin(A, B, F) (§18.5), ``filters`` being the
+      cross-group F;
+    * ``semi`` / ``anti`` — FILTER [NOT] EXISTS (§18.6: substitution
+      covers only the variables a row binds);
+    * ``minus`` — Minus(A, B) (§8.3: removal needs a compatible
+      solution over a NON-EMPTY shared domain).
+
+    With no nullable shared variable this is exactly the native Spark
+    join: an equi-join, a ``left`` join (conditional when ``filters``
+    are given), ``left_semi`` / ``left_anti``, or a ``crossJoin`` when
+    nothing is shared. Otherwise each side is sliced by which of its
+    nullable shared variables are bound (``_bound_slices``; kl + kr
+    mask bits, capped at ``_COMPAT_MAX_NULLABLE``) and each slice pair
+    joins on its EFFECTIVE keys — the shared variables bound on both
+    sides of the pair:
+
+    * Join: a variable bound on one side only keeps that side's binding
+      (the other side's NULL columns are dropped before the join); one
+      bound on neither stays unbound (one NULL column set is kept); no
+      effective key is a cross product. Slice pairs tile the bag
+      product, so multiplicity is preserved.
+    * LeftJoin, right side clean: each left slice drops its all-NULL
+      columns for the unbound keys and LEFT-joins B on its effective
+      keys, so a matched row takes B's binding (the compatible merge)
+      and an unmatched row keeps them unbound — LeftJoin's kept-μ case.
+      A slice binding no shared variable is compatible with every B
+      row: it cross-joins a non-empty B and passes through with
+      NULL-padded B columns when B is empty.
+    * LeftJoin, right side nullable too: LeftJoin(A, B, F) =
+      Filter(F, Join(A, B)) ⊎ Diff(A, B, F). The Join half is the
+      slice-pair decomposition above with F applied over the merged
+      solution (an unbound merge value errors F → row dropped). The
+      Diff half keeps a left row iff it anti-joins EVERY right slice on
+      the pair's effective keys (a fold of ``left_anti`` joins; a pair
+      with no effective key is always compatible, so a non-empty right
+      slice eliminates the whole left slice); survivors pad B's other
+      columns with NULL.
+    * EXISTS / NOT EXISTS: each left slice semi/anti-joins the probe on
+      its effective keys; a slice binding none of them keeps iff the
+      probe is non-empty (EXISTS) / empty (NOT EXISTS) — substituting
+      nothing leaves the pattern as-is. The probe side is always clean:
+      callers drop probe-nullable keys from the correlation.
+    * MINUS: the Diff fold, except that a pair with no effective key
+      has disjoint domains and removes nothing.
+
+    ``filters`` (LeftJoin only) compile INTO the join condition: B's
+    columns are renamed with ``_GSUF`` and the ON clause is
+    (effective keys ∧ F), error → false coming free (a NULL condition
+    is a non-match, keeping μ1 per Diff). F's references resolve per
+    left slice: to B's renamed column for a key of the pair and for a
+    variable the left slice leaves unbound (its merged value IS B's),
+    to the left column otherwise; a reference into a right slice that
+    also leaves it unbound compiles over NULL columns → error → μ1
+    kept. A pair with no effective key and F present anti-joins on F
+    alone. Slices are disjoint row subsets projecting one column-name
+    set, so every by-name union here is bag-exact."""
     l_null = sorted(v for v in shared if v in left_nullable)
     r_null = sorted(v for v in shared if v in right_nullable)
-    if not l_null and not r_null:  # both clean: plain equi-join
-        keys = [c for v in shared for c in _term_key(v)]
-        return left.join(right, on=keys, how="inner")
     if len(l_null) + len(r_null) > _COMPAT_MAX_NULLABLE:
         raise SparqlError(
             f"{what} joins on possibly-unbound variables needing "
@@ -4777,537 +4693,117 @@ def _compat_join(
             f"({sorted(set(l_null) | set(r_null))}); the compatible-join "
             f"decomposition is capped at {_COMPAT_MAX_NULLABLE}"
         )
-    if (1 << len(l_null)) * (1 << len(r_null)) > 2:
-        # 3+ slice pairs would recompute each side's full subplan per
-        # piece — persist both once, the slices are disjoint row
-        # subsets of these relations (CacheManager reuses the plan)
-        left = left.persist()
-        right = right.persist()
-    out: DataFrame | None = None
-    for mask_l in range(1 << len(l_null)):
-        lb = {v for i, v in enumerate(l_null) if mask_l >> i & 1}
-        sl_l = left
-        for v in l_null:
-            sl_l = sl_l.where(
-                F.col(v).isNotNull() if v in lb else F.col(v).isNull()
+    two_sided = how == "left" and bool(r_null)
+    if len(l_null) + len(r_null) > 1 or two_sided:
+        # more than two slice pairs (or both halves of the two-sided
+        # LeftJoin) would recompute each side's subplan per piece —
+        # persist both once; the slices are disjoint row subsets of
+        # these relations (CacheManager reuses the plan)
+        left, right = left.persist(), right.persist()
+    r_slices = list(_bound_slices(right, r_null))
+    r_nonempty: dict[int, bool] = {}
+
+    def nonempty(i: int) -> bool:  # one emptiness probe per right slice
+        if i not in r_nonempty:
+            r_nonempty[i] = not r_slices[i][1].isEmpty()
+        return r_nonempty[i]
+
+    def keys_of(vs) -> list[str]:
+        return [c for v in vs for c in _term_key(v)]
+
+    l_vars, r_vars = _term_vars(left), _term_vars(right)
+    ren = {v: v + _GSUF for v in r_vars}
+
+    def on_clause(r_sl: DataFrame, eff: list[str], l_has: set[str]):
+        """The renamed right slice and the (effective keys ∧ F) ON clause."""
+        g = r_sl.select(*[
+            F.col(c).alias(c_new)
+            for v in r_vars
+            for c, c_new in zip(_term_key(v), _term_key(ren[v]))
+        ])
+        cond = F.lit(True)
+        for v in eff:
+            for c_old, c_new in zip(_term_key(v), _term_key(ren[v])):
+                cond = cond & (F.col(c_old) == F.col(c_new))
+        f_ren = {v: ren[v] for v in r_vars if v in eff or v not in l_has}
+        ext = l_has | set(ren.values())
+        for f in filters:
+            cond = cond & _compile_bool(
+                _rename_expr_vars(f, f_ren), ext, f"{what} (join filter)"
             )
-        for mask_r in range(1 << len(r_null)):
-            rb = {v for i, v in enumerate(r_null) if mask_r >> i & 1}
-            sl_r = right
-            for v in r_null:
-                sl_r = sl_r.where(
-                    F.col(v).isNotNull() if v in rb else F.col(v).isNull()
-                )
-            keys_v: list[str] = []
-            drop_l: list[str] = []
-            drop_r: list[str] = []
-            for v in shared:
-                bl = v not in l_null or v in lb
-                br = v not in r_null or v in rb
-                if bl and br:
-                    keys_v.append(v)
-                elif bl:  # right unbound: left's binding wins
-                    drop_r.append(v)
-                elif br:  # left unbound: right's binding wins
-                    drop_l.append(v)
-                else:  # unbound on both: stays unbound — keep ONE
-                    drop_r.append(v)  # NULL column set (the left's)
-            pl = (
-                sl_l.drop(*[c for v in drop_l for c in _term_key(v)])
-                if drop_l
-                else sl_l
-            )
-            pr = (
-                sl_r.drop(*[c for v in drop_r for c in _term_key(v)])
-                if drop_r
-                else sl_r
-            )
-            keys = [c for v in keys_v for c in _term_key(v)]
-            piece = pl.join(pr, on=keys, how="inner") if keys else pl.crossJoin(pr)
-            out = piece if out is None else out.unionByName(piece)
-    return out
+        return g, cond
 
-
-def _left_compat_join(
-    left: DataFrame,
-    gdf: DataFrame,
-    shared: list[str],
-    null_shared: list[str],
-    what: str = "this OPTIONAL",
-    join_filters: list[tuple] | tuple = (),
-    bound: set[str] | frozenset = frozenset(),
-) -> DataFrame:
-    """SPARQL LeftJoin(A, G, F) (§18.5) when some shared variables may
-    be UNBOUND (NULL) on the LEFT — an earlier OPTIONAL, mixed-variable
-    UNION, VALUES UNDEF row, or BIND error left them so. The
-    single-sided LEFT-OUTER twin of ``_compat_join`` (full r4;
-    formerly rejected). The right side binds every shared variable in
-    every row (callers route right-nullable join keys to
-    ``_left_compat_join2``, the two-sided form).
-
-    Exact decomposition: the left relation is partitioned by which of
-    its nullable shared variables are bound — 2^k disjoint slices —
-    and each slice LEFT-joins G on its EFFECTIVE keys after dropping
-    its all-NULL term-column sets for the unbound ones, so a matched
-    row takes G's binding for them (the compatible merge) and an
-    unmatched row keeps them unbound, exactly LeftJoin's kept-μ case.
-    A slice binding NO shared variable is compatible with every G row:
-    it cross-joins a non-empty G (bag multiplicity preserved) and
-    passes through with NULL-padded G columns when G is empty. Slices
-    are disjoint and project identical column names, so the by-name
-    union preserves bag semantics.
-
-    ``join_filters`` (late r4, formerly rejected): deferred group
-    filters referencing the enclosing group's variables — SPARQL's
-    cross-group F. Each slice then takes the _left_join_group
-    treatment instead of the bare equi-join: G's columns are renamed
-    with ``_GSUF``, the ON condition is (effective-keys ∧ F) with
-    every G-variable reference in F renamed — for a slice's UNBOUND
-    shared variable the merged solution's value IS G's, so renaming is
-    not just safe but required — and error→false comes free (a NULL
-    condition is a non-match, keeping μ1 per Diff). With ``shared``
-    empty and one slice this degrades to LeftJoin(A, G, F) over
-    disjoint domains: a pure conditional left join."""
-    if len(null_shared) > _COMPAT_MAX_NULLABLE:
-        raise SparqlError(
-            f"{what} joins on {len(null_shared)} possibly-unbound "
-            f"variables ({null_shared}); the left compatible-join "
-            f"decomposition is capped at {_COMPAT_MAX_NULLABLE}"
-        )
-    if (1 << len(null_shared)) > 2:
-        # 3+ slices re-scan both subplans per piece — persist once
-        left = left.persist()
-        gdf = gdf.persist()
-    gvars_all = sorted(c for c in gdf.columns if not c.startswith("__"))
-    g_empty: bool | None = None
-    out: DataFrame | None = None
-    for mask in range(1 << len(null_shared)):
-        b = {v for i, v in enumerate(null_shared) if mask >> i & 1}
-        sl = left
-        for v in null_shared:
-            sl = sl.where(
-                F.col(v).isNotNull() if v in b else F.col(v).isNull()
-            )
-        eff = [v for v in shared if v not in null_shared or v in b]
-        unbound = [v for v in shared if v not in eff]
-        # the slice's columns for unbound shared vars are all NULL —
-        # drop them so the join brings in G's (or leaves them NULL on
-        # a non-match, which IS the unbound-μ-kept case)
-        sl = sl.drop(*[c for v in unbound for c in _term_key(v)])
-        if join_filters:
-            ren = {v: v + _GSUF for v in gvars_all}
-            sel = []
-            for v in gvars_all:
-                sel.append(F.col(v).alias(ren[v]))
-                for c_old, c_new in zip(_shadow_cols(v), _shadow_cols(ren[v])):
-                    sel.append(F.col(c_old).alias(c_new))
-            g = gdf.select(*sel)
-            cond = F.lit(True)
-            for v in eff:
-                for c_old, c_new in zip(_term_key(v), _term_key(ren[v])):
-                    cond = cond & (F.col(c_old) == F.col(c_new))
-            ext_bound = set(bound) | set(ren.values())
-            for f in join_filters:
-                cond = cond & _compile_bool(
-                    _rename_expr_vars(f, ren), ext_bound, f"{what} (join filter)"
-                )
-            joined = sl.join(g, cond, "left")
-            keep = [F.col(c) for c in sl.columns]
-            for v in gvars_all:
-                if v in eff:
-                    continue
-                keep.append(F.col(ren[v]).alias(v))
-                for c_new, c_old in zip(_shadow_cols(ren[v]), _shadow_cols(v)):
-                    keep.append(F.col(c_new).alias(c_old))
-            piece = joined.select(*keep)
-        elif eff:
-            keys = [c for v in eff for c in _term_key(v)]
-            piece = sl.join(gdf, on=keys, how="left")
-        else:
-            if g_empty is None:
-                g_empty = gdf.isEmpty()
-            if g_empty:
-                piece = sl
-                for c in gdf.columns:
-                    piece = piece.withColumn(c, F.lit(None).cast("string"))
-            else:
-                piece = sl.crossJoin(gdf)
-        out = piece if out is None else out.unionByName(piece)
-    assert out is not None
-    return out
-
-
-def _left_compat_join2(
-    left: DataFrame,
-    left_nullable: set[str],
-    gdf: DataFrame,
-    g_nullable: set[str],
-    shared: list[str],
-    what: str = "this OPTIONAL",
-    join_filters: list[tuple] | tuple = (),
-    bound: set[str] | frozenset = frozenset(),
-) -> DataFrame:
-    """SPARQL LeftJoin(A, G) (§18.5) when shared variables may be
-    UNBOUND (NULL) on BOTH sides (late r4, formerly rejected): keys the
-    left query's earlier OPTIONALs/UNIONs/BINDs left nullable AND keys
-    the group's own nested OPTIONALs may leave unbound.
-
-    LeftJoin(A, G) = Join(A, G) ⊎ {μ1 ∈ A with no compatible μ2 ∈ G}.
-    The Join half is the exact two-sided ``_compat_join`` slice
-    decomposition. The kept-μ1 half: slice A by which of its nullable
-    shared variables are bound (mask B); a row of that slice is
-    compatible with a G row in G's bound-mask-C slice iff they agree
-    on B ∩ C — so an A row survives iff it anti-joins EVERY G slice on
-    the pair's effective keys, computed as a fold of ``left_anti``
-    joins across the 2^kr G slices (each removes the rows with a
-    partner in that slice; multiplicity of the remainder is A's, per
-    LeftJoin). A pair with B ∩ C empty is always compatible, so a
-    non-empty such G slice eliminates the whole A slice. Survivors pad
-    G's other columns with NULL. Both halves project the same column
-    name set; the union is by name, bag-exact.
-
-    ``join_filters`` (late r4 session 2 — the LAST formerly-rejected
-    LeftJoin form): SPARQL's cross-group F composes with the
-    two-sided decomposition too. LeftJoin(A, G, F) = Filter(F,
-    Join(A, G)) ⊎ Diff(A, G, F). The Join half applies F OVER THE
-    MERGED solution after ``_compat_join`` (every variable resolves
-    by name there; an unbound merge value makes F an error → row
-    dropped, exactly Filter's semantics). The Diff half's per-pair
-    anti joins carry (effective-keys ∧ F) as the removal condition,
-    with F's references renamed PER LEFT-SLICE: a shared variable the
-    slice leaves unbound resolves to G's (renamed) column — the
-    merged binding — and one bound on the left resolves to the left
-    column; a reference into a G slice that also leaves it unbound
-    compiles over NULL columns → error → not-satisfied → μ1 kept, the
-    Diff's error→false case. A pair with no effective key and F
-    present anti-joins on F alone (a conditional cross anti join)
-    instead of the constant-emptiness shortcut."""
-    l_null = sorted(v for v in shared if v in left_nullable)
-    g_null = sorted(v for v in shared if v in g_nullable)
-    if not g_null:
-        return _left_compat_join(left, gdf, shared, l_null, what)
-    if len(l_null) + len(g_null) > _COMPAT_MAX_NULLABLE:
-        raise SparqlError(
-            f"{what} joins on possibly-unbound variables needing "
-            f"{len(l_null) + len(g_null)} mask bits "
-            f"({sorted(set(l_null) | set(g_null))}); the compatible-join "
-            f"decomposition is capped at {_COMPAT_MAX_NULLABLE}"
-        )
-    # every slice pair re-scans both subplans — persist each once
-    left = left.persist()
-    gdf = gdf.persist()
-    matches = _compat_join(left, set(l_null), gdf, set(g_null), shared, what)
-    gvars_all = sorted(c for c in gdf.columns if not c.startswith("__"))
-    left_vars = {c for c in left.columns if not c.startswith("__")}
-    if join_filters:
-        # Filter(F, Join): every variable resolves by name in the
-        # merged relation; an unbound merge value errors F → dropped
-        ext = set(bound) | set(gvars_all) | left_vars
-        for f in join_filters:
-            matches = matches.where(_compile_bool(f, ext, what))
-    g_slices: list[tuple[set[str], DataFrame]] = []
-    for mask in range(1 << len(g_null)):
-        cb = {v for i, v in enumerate(g_null) if mask >> i & 1}
-        sl = gdf
-        for v in g_null:
-            sl = sl.where(
-                F.col(v).isNotNull() if v in cb else F.col(v).isNull()
-            )
-        g_slices.append((cb, sl))
-    g_empty: dict[int, bool] = {}
-    pad_cols = [c for c in gdf.columns if c not in left.columns]
-    out = matches
-    for mask in range(1 << len(l_null)):
-        lb = {v for i, v in enumerate(l_null) if mask >> i & 1}
-        rem = left
-        for v in l_null:
-            rem = rem.where(
-                F.col(v).isNotNull() if v in lb else F.col(v).isNull()
-            )
-        bvars = [v for v in shared if v not in l_null or v in lb]
-        if join_filters:
-            # Diff(A, G, F): μ1 is removed iff SOME compatible μ2
-            # also satisfies F — the anti join carries
-            # (effective-keys ∧ F) with F's references renamed for
-            # THIS left slice: unbound-left shared vars and G-only
-            # vars resolve to G's renamed columns (the merged
-            # binding), left-bound vars to the left columns
-            ren = {
-                v: v + _GSUF
-                for v in gvars_all
-                if (v in set(l_null) - lb) or v not in left_vars
-            }
-            ren_all = {v: v + _GSUF for v in gvars_all}
-            for cb, g_sl in g_slices:
-                eff = [v for v in bvars if v not in g_null or v in cb]
-                sel = []
-                for v in gvars_all:
-                    sel.append(F.col(v).alias(ren_all[v]))
-                    for c_old, c_new in zip(
-                        _shadow_cols(v), _shadow_cols(ren_all[v])
-                    ):
-                        sel.append(F.col(c_old).alias(c_new))
-                g_r = g_sl.select(*sel)
-                cond = F.lit(True)
-                for v in eff:
-                    for c_old, c_new in zip(
-                        _term_key(v), _term_key(ren_all[v])
-                    ):
-                        cond = cond & (F.col(c_old) == F.col(c_new))
-                ext = set(bound) | left_vars | set(ren_all.values())
-                for f in join_filters:
-                    cond = cond & _compile_bool(
-                        _rename_expr_vars(f, ren), ext,
-                        f"{what} (join filter)",
-                    )
-                rem = rem.join(g_r, on=cond, how="left_anti")
-        else:
-            for ci, (cb, g_sl) in enumerate(g_slices):
-                eff = [v for v in bvars if v not in g_null or v in cb]
-                if eff:
-                    keys = [c for v in eff for c in _term_key(v)]
-                    rem = rem.join(
-                        g_sl.select(*keys), on=keys, how="left_anti"
-                    )
-                else:
-                    if ci not in g_empty:
-                        g_empty[ci] = g_sl.isEmpty()
-                    if not g_empty[ci]:
-                        rem = rem.limit(0)
-                        break
-        for c in pad_cols:
-            rem = rem.withColumn(c, F.lit(None).cast("string"))
-        out = out.unionByName(rem)
-    return out
-
-
-def _nullable_corr_filter(
-    df: DataFrame,
-    gdf: DataFrame,
-    shared: list[str],
-    null_shared: list[str],
-    mode: str,
-    what: str,
-) -> DataFrame:
-    """Correlated existence/difference test — EXISTS (``mode="semi"``),
-    NOT EXISTS (``"anti"``), MINUS (``"minus"``) — when some shared
-    variables may be UNBOUND (NULL) on the OUTER side. SPARQL's
-    substitution (§18.6) and compatibility (§8.3) semantics treat an
-    unbound variable as absent from the test; a raw key join would
-    treat the NULL key as a non-match instead.
-
-    Exact decomposition (the single-sided twin of ``_compat_join``):
-    the outer relation is partitioned by which of its nullable shared
-    variables are bound — 2^k disjoint slices, k capped at
-    ``_COMPAT_MAX_NULLABLE`` — and each slice [semi|anti]-joins the
-    probe on its EFFECTIVE keys, the shared variables actually bound
-    in that slice. A slice binding none of them degenerates per mode:
-    EXISTS keeps it iff the probe is non-empty (the substituted
-    pattern has only free variables), NOT EXISTS iff it is empty, and
-    MINUS always keeps it (§8.3 removes nothing on disjoint domains).
-    Slices are disjoint row subsets and project identical columns, so
-    the by-name union preserves bag multiplicity."""
-    if len(null_shared) > _COMPAT_MAX_NULLABLE:
-        raise SparqlError(
-            f"{what} joins on {len(null_shared)} possibly-unbound "
-            f"variables ({null_shared}); the slice decomposition is "
-            f"capped at {_COMPAT_MAX_NULLABLE}"
-        )
-    if (1 << len(null_shared)) > 2:
-        # 3+ slices re-scan the outer subplan per piece and probe gdf
-        # per piece — persist both once (slices are disjoint subsets)
-        df = df.persist()
-        gdf = gdf.persist()
-    probe_nonempty: bool | None = None
     pieces: list[DataFrame] = []
-    for mask in range(1 << len(null_shared)):
-        b = {v for i, v in enumerate(null_shared) if mask >> i & 1}
-        sl = df
-        for v in null_shared:
-            sl = sl.where(
-                F.col(v).isNotNull() if v in b else F.col(v).isNull()
-            )
-        eff = [v for v in shared if v not in null_shared or v in b]
-        if not eff:
-            if mode == "minus":
-                pieces.append(sl)  # disjoint domains: MINUS is a no-op
-                continue
-            if probe_nonempty is None:
-                probe_nonempty = not gdf.isEmpty()
-            if probe_nonempty == (mode == "semi"):
+    if how == "inner" or two_sided:
+        for lb, sl in _bound_slices(left, l_null):
+            for rb, r_sl in r_slices:
+                bl = {v for v in shared if v not in l_null or v in lb}
+                br = {v for v in shared if v not in r_null or v in rb}
+                # bound on one side: that side's binding wins; bound on
+                # neither: stays unbound — keep ONE (the left's) NULL set
+                drop_l = keys_of(v for v in shared if v in br - bl)
+                drop_r = keys_of(v for v in shared if v not in br)
+                pl = sl.drop(*drop_l) if drop_l else sl
+                pr = r_sl.drop(*drop_r) if drop_r else r_sl
+                keys = keys_of(v for v in shared if v in bl & br)
+                pieces.append(
+                    pl.join(pr, on=keys, how="inner") if keys else pl.crossJoin(pr)
+                )
+        matches = functools.reduce(DataFrame.unionByName, pieces)
+        if how == "inner":
+            return matches
+        ext = set(l_vars) | set(r_vars)
+        for f in filters:
+            matches = matches.where(_compile_bool(f, ext, what))
+        pieces = [matches]
+    for lb, sl in _bound_slices(left, l_null):
+        bl = [v for v in shared if v not in l_null or v in lb]
+        l_has = set(l_vars) - (set(l_null) - lb)
+        if how == "left" and not two_sided:
+            unbound = keys_of(v for v in shared if v not in bl)
+            if unbound:
+                sl = sl.drop(*unbound)
+            if filters:
+                g, cond = on_clause(right, bl, l_has)
+                keep = [F.col(c) for c in sl.columns] + [
+                    F.col(c_new).alias(c)
+                    for v in r_vars
+                    if v not in bl
+                    for c, c_new in zip(_term_key(v), _term_key(ren[v]))
+                ]
+                pieces.append(sl.join(g, cond, "left").select(*keep))
+            elif bl:
+                pieces.append(sl.join(right, on=keys_of(bl), how="left"))
+            elif nonempty(0):
+                pieces.append(sl.crossJoin(right))
+            else:
+                for c in right.columns:
+                    sl = sl.withColumn(c, F.lit(None).cast("string"))
                 pieces.append(sl)
             continue
-        keys = [c for v in eff for c in _term_key(v)]
-        how = "left_semi" if mode == "semi" else "left_anti"
-        pieces.append(sl.join(gdf.select(*keys), on=keys, how=how))
-    out = pieces[0] if pieces else df.limit(0)
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _minus_compat_anti(
-    df: DataFrame,
-    l_null_shared: list[str],
-    gdf: DataFrame,
-    g_null_shared: list[str],
-    shared: list[str],
-    what: str = "MINUS",
-) -> DataFrame:
-    """SPARQL §8.3 Minus when shared variables may be UNBOUND on the
-    OUTER side AND on the MINUS side — the group's own nested OPTIONAL
-    or BIND left them so (late r4, formerly rejected). μ1 is removed
-    iff some μ2 is compatible over a NON-EMPTY overlap domain: per
-    slice pair (outer bound-mask × group bound-mask) the overlap is
-    the pair's effective keys, so an outer slice anti-joins each group
-    slice on those keys in sequence — a pair with NO effective key has
-    disjoint domains and is SKIPPED (§8.3 removes nothing there; this
-    is where Minus differs from the compatible join's
-    always-compatible case). Survivors of every pair are kept; anti
-    joins preserve outer multiplicity and slices are disjoint, so the
-    by-name union is bag-exact."""
-    l_null = sorted(l_null_shared)
-    g_null = sorted(g_null_shared)
-    if len(l_null) + len(g_null) > _COMPAT_MAX_NULLABLE:
-        raise SparqlError(
-            f"{what} joins on possibly-unbound variables needing "
-            f"{len(l_null) + len(g_null)} mask bits "
-            f"({sorted(set(l_null) | set(g_null))}); the slice "
-            f"decomposition is capped at {_COMPAT_MAX_NULLABLE}"
-        )
-    if (1 << len(l_null)) * (1 << len(g_null)) > 2:
-        df = df.persist()
-        gdf = gdf.persist()
-    g_slices: list[tuple[set[str], DataFrame]] = []
-    for mask in range(1 << len(g_null)):
-        cb = {v for i, v in enumerate(g_null) if mask >> i & 1}
-        sl = gdf
-        for v in g_null:
-            sl = sl.where(
-                F.col(v).isNotNull() if v in cb else F.col(v).isNull()
-            )
-        g_slices.append((cb, sl))
-    pieces: list[DataFrame] = []
-    for mask in range(1 << len(l_null)):
-        lb = {v for i, v in enumerate(l_null) if mask >> i & 1}
-        sl = df
-        for v in l_null:
-            sl = sl.where(
-                F.col(v).isNotNull() if v in lb else F.col(v).isNull()
-            )
-        for cb, g_sl in g_slices:
-            eff = [
-                v
-                for v in shared
-                if (v not in l_null or v in lb)
-                and (v not in g_null or v in cb)
-            ]
-            if not eff:
+        # EXISTS / NOT EXISTS / MINUS, and the two-sided LeftJoin's Diff
+        for i, (rb, r_sl) in enumerate(r_slices):
+            eff = [v for v in bl if v not in r_null or v in rb]
+            if filters:
+                g, cond = on_clause(r_sl, eff, l_has)
+                sl = sl.join(g, cond, "left_anti")
+            elif eff:
+                keys = keys_of(eff)
+                sl = sl.join(
+                    r_sl.select(*keys), on=keys,
+                    how="left_semi" if how == "semi" else "left_anti",
+                )
+            elif how == "minus":
                 continue  # disjoint domains: this pair removes nothing
-            keys = [c for v in eff for c in _term_key(v)]
-            sl = sl.join(g_sl.select(*keys), on=keys, how="left_anti")
+            elif nonempty(i) != (how == "semi"):
+                sl = sl.limit(0)
+                break
+        if two_sided:
+            for c in right.columns:
+                if c not in left.columns:
+                    sl = sl.withColumn(c, F.lit(None).cast("string"))
         pieces.append(sl)
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _attach_nullable_flag(
-    df: DataFrame,
-    gdf: DataFrame,
-    shared: list[str],
-    null_shared: list[str],
-    flag: str,
-) -> DataFrame:
-    """Boolean-expression EXISTS flag when some shared variables may be
-    unbound on the outer side: the same bound-mask slicing as
-    ``_nullable_corr_filter``, but each slice LEFT-joins the probe's
-    distinct effective keys to materialize a per-row boolean column
-    (never multiplying rows); the all-unbound slice takes a constant
-    flag = probe non-emptiness (§18.6 substitution of nothing)."""
-    if len(null_shared) > _COMPAT_MAX_NULLABLE:
-        raise SparqlError(
-            f"an EXISTS expression joins on {len(null_shared)} "
-            f"possibly-unbound variables ({null_shared}); the slice "
-            f"decomposition is capped at {_COMPAT_MAX_NULLABLE}"
-        )
-    if (1 << len(null_shared)) > 2:
-        df = df.persist()
-        gdf = gdf.persist()
-    probe_nonempty: bool | None = None
-    pieces: list[DataFrame] = []
-    for mask in range(1 << len(null_shared)):
-        b = {v for i, v in enumerate(null_shared) if mask >> i & 1}
-        sl = df
-        for v in null_shared:
-            sl = sl.where(
-                F.col(v).isNotNull() if v in b else F.col(v).isNull()
-            )
-        eff = [v for v in shared if v not in null_shared or v in b]
-        if not eff:
-            if probe_nonempty is None:
-                probe_nonempty = not gdf.isEmpty()
-            pieces.append(sl.withColumn(flag, F.lit(probe_nonempty)))
-            continue
-        keys = [c for v in eff for c in _term_key(v)]
-        marker = (
-            gdf.select(*keys).dropDuplicates().withColumn(flag, F.lit(True))
-        )
-        pieces.append(
-            sl.join(marker, on=keys, how="left").withColumn(
-                flag, F.coalesce(F.col(flag), F.lit(False))
-            )
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _left_join_group(
-    df: DataFrame,
-    gdf: DataFrame,
-    gvars: set[str],
-    shared: list[str],
-    join_filters: list[tuple],
-    bound: set[str],
-    scope: str = "this OPTIONAL group",
-) -> DataFrame:
-    """LeftJoin(A, G, F) where F references variables of A: compile the
-    deferred group filters INTO the left-join condition. SPARQL 1.1
-    defines LeftJoin(Ω1, Ω2, F) = Filter(F, Join(Ω1, Ω2)) ∪
-    Diff(Ω1, Ω2, F) — a left outer join whose ON clause is
-    (equi-keys ∧ F) is exactly that, including error→false (a NULL
-    condition is a non-match, and Diff keeps μ1 when F is false OR
-    errors). Group columns are renamed with ``_GSUF`` so the condition
-    can reference both sides; group-only variables are renamed back
-    afterwards."""
-    ren = {v: v + _GSUF for v in sorted(gvars)}
-    sel = []
-    for v in sorted(gvars):
-        sel.append(F.col(v).alias(ren[v]))
-        for c_old, c_new in zip(_shadow_cols(v), _shadow_cols(ren[v])):
-            sel.append(F.col(c_old).alias(c_new))
-    g = gdf.select(*sel)
-    cond = F.lit(True)
-    for v in shared:
-        for c_old, c_new in zip(_term_key(v), _term_key(ren[v])):
-            cond = cond & (F.col(c_old) == F.col(c_new))
-    ext_bound = set(bound) | set(ren.values())
-    for f in join_filters:
-        cond = cond & _compile_bool(
-            _rename_expr_vars(f, ren), ext_bound, f"{scope} (join filter)"
-        )
-    joined = df.join(g, cond, "left")
-    keep = [F.col(c) for c in df.columns]
-    for v in sorted(gvars):
-        if v in shared:
-            continue
-        keep.append(F.col(ren[v]).alias(v))
-        for c_new, c_old in zip(_shadow_cols(ren[v]), _shadow_cols(v)):
-            keep.append(F.col(c_new).alias(c_old))
-    return joined.select(*keep)
+    return functools.reduce(DataFrame.unionByName, pieces)
 
 
 _EXISTS_FLAG_SEQ = itertools.count(1)
@@ -5323,58 +4819,32 @@ def _attach_expr_exists_flags(
     scope: str,
 ):
     """Replace ``("exists_e", …)`` nodes in an expression AST with
-    ``("flag", col)`` references attached to ``df`` (the module-level
-    twin of ``_compile_where``'s ``_flag_exists`` closure, used for
-    GROUP-local binds, late r4): the probe compiles bottom-up against
-    ``bound`` — the group-so-far at the bind's textual point, outer
-    variables being out of scope there — and correlates by a
-    key-distinct left-join flag that never multiplies rows. Returns
-    (df, node); attached flag column names accumulate in ``flags``."""
+    ``("flag", col)`` references attached to ``df`` — EXISTS inside
+    FILTER and BIND/projection expressions, top-level or GROUP-local
+    (late r4), each at its own evaluation point: the probe compiles
+    bottom-up against ``bound`` — the group-so-far at that point,
+    outer variables being out of scope there (§18.6 substitution only
+    covers dom(μ)) — and correlates through the compatible semi/anti
+    joins, flagging every row once. A probe sharing no variable with ``bound``
+    is a constant, evaluated once here. Returns (df, node); attached
+    flag column names accumulate in ``flags`` for the caller to
+    drop."""
     if isinstance(node, tuple):
         if node and node[0] == "exists_e":
-            gpats, gfilters, gnested, ge_inner, ge_binds = node[1]
-            gdf, gvars, e_nullable, edeferred = _compile_optional_group(
-                triples, gpats, gfilters, gnested, ge_inner, ge_binds, bound
-            )
-            if edeferred:
-                deep = sorted({
-                    v
-                    for f in edeferred
-                    for v in _expr_vars(f)
-                    if not _is_internal(v) and v not in gvars
-                })
-                raise SparqlError(
-                    f"an EXISTS filter references variable(s) {deep} "
-                    "not bound in the probe group"
-                )
-            shared = sorted(v for v in gvars if v in bound)
-            probe_null = sorted(v for v in shared if v in e_nullable)
-            if probe_null:
-                if gfilters or ge_inner:
-                    raise SparqlError(
-                        f"an EXISTS in {scope} correlates through "
-                        f"variable(s) {probe_null} its own OPTIONAL may "
-                        "leave unbound — §18.6 substitution over a "
-                        "nullable probe key is not expressible when the "
-                        "probe carries top-level filters or nested EXISTS"
-                    )
-                # inert key: existence independent (_apply_group_exists
-                # docstring) — drop it from the correlation
-                shared = [v for v in shared if v not in e_nullable]
+            gdf, _gvars, shared = _exists_probe(triples, node[1], bound, scope)
             if not shared:
                 return df, ("const", not gdf.isEmpty())
-            flag = f"__exists_flag_g{next(_EXISTS_FLAG_SEQ)}"
-            maybe_null = sorted(v for v in shared if v in nullable)
-            if maybe_null:
-                df = _attach_nullable_flag(df, gdf, shared, maybe_null, flag)
-            else:
-                keys = [x for v in shared for x in _term_key(v)]
-                marker = gdf.select(*keys).dropDuplicates().withColumn(
-                    flag, F.lit(True)
-                )
-                df = df.join(marker, on=keys, how="left").withColumn(
-                    flag, F.coalesce(F.col(flag), F.lit(False))
-                )
+            # the EXISTS slice tagged true ∪ the NOT EXISTS slice tagged
+            # false: a per-row flag that never multiplies rows
+            flag = f"__exists_flag{next(_EXISTS_FLAG_SEQ)}"
+            what = f"an EXISTS in {scope}"
+            df = _compat_join(
+                df, nullable, gdf, set(), shared, "semi", what
+            ).withColumn(flag, F.lit(True)).unionByName(
+                _compat_join(
+                    df, nullable, gdf, set(), shared, "anti", what
+                ).withColumn(flag, F.lit(False))
+            )
             flags.append(flag)
             return df, ("flag", flag)
         parts = []
@@ -5524,24 +4994,19 @@ def _compile_optional_group(
     (solutions, bound vars, nullable vars, deferred filters). Each
     nested group compiles recursively and left-joins its parent in
     textual order — LeftJoin(A, B) at every level, the
-    well-designed-pattern evaluation — taking the same general
-    forms as the top-level LeftJoin (late r4): disjoint domains →
-    cross product / pass-through-unbound; join keys an earlier
-    nested OPTIONAL left nullable on the PARENT side → the
-    single-sided compatible-join slice decomposition
-    (_left_compat_join), composing with deferred cross-group
-    filters; join keys nullable on the NESTED side (bound only
-    inside a deeper OPTIONAL of the nested group), possibly on the
-    parent side too → the two-sided compatible LEFT join
-    (_left_compat_join2), composing with deferred cross-group
-    filters in every form (late r4 session 2) — no LeftJoin form is
-    rejected any more.
+    well-designed-pattern evaluation — through the same compatible
+    LEFT join as the top-level LeftJoin (``_compat_join``): disjoint
+    domains, join keys an earlier nested OPTIONAL left nullable on
+    the PARENT side, and keys nullable on the NESTED side (bound only
+    inside a deeper OPTIONAL of the nested group) all compile, each
+    composing with deferred cross-group filters — no LeftJoin form is
+    rejected.
 
     A group filter referencing variables the group itself never
     binds — but its immediate LEFT side does (``outer_vars``) — is
     SPARQL's LeftJoin(A, G, F) with a cross-group F: it cannot be
     applied inside the group, so it is RETURNED and the caller
-    compiles it into the left-join condition (_left_join_group).
+    compiles it into the left-join condition (``_compat_join``).
     Filters reaching past the immediate left side (two levels up)
     are rejected: SPARQL scopes F at its own LeftJoin, where such
     variables are unbound."""
@@ -5592,61 +5057,10 @@ def _compile_optional_group(
                 ndf = ndf.drop(*unb_cols)
             ndeferred = still
         nshared = sorted(v for v in nvars if v in gvars)
-        nested_null = sorted(v for v in nshared if v in n_nullable)
-        if nested_null:
-            # join keys nullable on the NESTED side (bound only
-            # inside its own deeper OPTIONAL), possibly on the
-            # parent side too — the two-sided compatible LEFT join
-            # (late r4, formerly rejected); a deferred cross-group
-            # filter composes as the per-pair ON conjunct (session 2
-            # — the last formerly-rejected LeftJoin form)
-            gdf = _left_compat_join2(
-                gdf, g_nullable, ndf, n_nullable, nshared,
-                "this nested OPTIONAL group",
-                join_filters=ndeferred, bound=gvars | nvars,
-            )
-            g_nullable |= (nvars - gvars) | n_nullable
-            gvars |= nvars
-            continue
-        n_maybe_null = sorted(v for v in nshared if v in g_nullable)
-        if ndeferred and (n_maybe_null or not nshared):
-            # nested LeftJoin(G, N, F) over nullable/absent join keys
-            # (late r4, formerly rejected): the same slice
-            # decomposition the top-level _apply_optional takes
-            gdf = _left_compat_join(
-                gdf, ndf, nshared, n_maybe_null,
-                "this nested OPTIONAL group",
-                join_filters=ndeferred, bound=gvars,
-            )
-        elif not nshared:
-            # nested LeftJoin with disjoint domains (late r4,
-            # formerly rejected): every nested solution is
-            # compatible with every group one — a bag cross product
-            # when N is non-empty, pass-through with N's variables
-            # unbound when it is empty
-            if ndf.isEmpty():
-                for c in ndf.columns:
-                    gdf = gdf.withColumn(c, F.lit(None).cast("string"))
-                n_nullable = set(nvars)
-            else:
-                gdf = gdf.crossJoin(ndf)
-        elif n_maybe_null:
-            # join keys an earlier nested OPTIONAL in the SAME group
-            # left nullable (late r4, formerly rejected): the exact
-            # single-sided slice decomposition
-            gdf = _left_compat_join(
-                gdf, ndf, nshared, n_maybe_null,
-                "this nested OPTIONAL group",
-            )
-        elif ndeferred:
-            gdf = _left_join_group(
-                gdf, ndf, nvars, nshared, ndeferred, gvars,
-                "this nested OPTIONAL group",
-            )
-        else:
-            gdf = gdf.join(
-                ndf, on=[x for v in nshared for x in _term_key(v)], how="left"
-            )
+        gdf = _compat_join(
+            gdf, g_nullable, ndf, n_nullable, nshared, "left",
+            "this nested OPTIONAL group", ndeferred,
+        )
         g_nullable |= (nvars - gvars) | n_nullable
         gvars |= nvars
     # (r4) group-local BINDs: over the group's own solutions
@@ -5751,9 +5165,23 @@ def _compile_where(
     if patterns:
         df, bound = _join_patterns(triples, patterns)
 
-    # the three join-element compilers below are shared by the early
+    # the join-element compilers below are shared by the early
     # (hoisted, join-commutative) loops AND the textual timeline walk —
     # each takes and returns the evolving (df, bound, nullable) triple
+
+    def _join_in(df, bound, nullable, rdf, rvars, r_nullable, what):
+        """Join(df, rdf) on the shared variables, either side possibly
+        leaving them unbound (the compatible join)."""
+        if df is None:
+            return rdf, set(rvars), nullable | r_nullable
+        shared = sorted(v for v in rvars if v in bound and not _is_internal(v))
+        df = _compat_join(df, nullable, rdf, r_nullable, shared, "inner", what)
+        # a shared variable leaves the nullable set unless BOTH sides
+        # could leave it unbound (the neither-bound piece keeps it
+        # NULL); unshared right-side nullables stay nullable
+        both = {v for v in shared if v in nullable and v in r_nullable}
+        nullable = (nullable - (set(shared) - both)) | (set(r_nullable) - set(shared))
+        return df, bound | set(rvars), nullable
 
     def _join_union(df, bound, nullable, branches):
         compiled = []
@@ -5856,28 +5284,10 @@ def _compile_where(
         u = padded[0]
         for bdf in padded[1:]:
             u = u.unionByName(bdf)  # bag union (SPARQL UNION)
-        u_nullable = varset - definite
-        if df is None:
-            df, bound = u, set(varset)
-            nullable = nullable | u_nullable
-        else:
-            shared = [v for v in sorted(varset) if v in bound]
-            if shared:
-                df = _compat_join(
-                    df, nullable, u, u_nullable, shared, "this UNION block"
-                )
-            else:
-                df = df.crossJoin(u)
-            bound = bound | varset
-            # a shared var leaves the nullable set unless BOTH sides
-            # could leave it unbound (the neither-bound piece of the
-            # two-sided decomposition keeps it NULL); unshared
-            # branch-local vars stay nullable
-            both_null = {v for v in shared if v in nullable and v in u_nullable}
-            nullable = (nullable - (set(shared) - both_null)) | {
-                v for v in u_nullable if v not in shared
-            }
-        return df, bound, nullable
+        return _join_in(
+            df, bound, nullable, u, varset, varset - definite,
+            "this UNION block",
+        )
 
     def _join_sub(df, bound, nullable, sub):
         sdf, svars, alias_names, s_nullable = _compile_subselect(dataset, sub)
@@ -5888,26 +5298,13 @@ def _compile_where(
                 "variables — aliases cannot be outer join keys (their term "
                 "components are derived); rename the alias"
             )
-        shared = sorted(v for v in svars if v in bound)
-        if df is None:
-            df, bound = sdf, set(svars) | alias_names
-        elif shared:
-            # a projected variable the subquery may leave unbound (inner
-            # OPTIONAL / mixed-variable UNION) takes the compatible-join
-            # decomposition, not a raw equi-join that would drop the row
-            df = _compat_join(df, nullable, sdf, s_nullable, shared, "this subquery")
-            bound = bound | svars | alias_names
-        else:
-            df = df.crossJoin(sdf)
-            bound = bound | svars | alias_names
-        # a shared var leaves the nullable set unless BOTH sides could
-        # leave it unbound (two-sided decomposition); unshared nullable
-        # subquery vars stay nullable
-        both_null = {v for v in shared if v in nullable and v in s_nullable}
-        nullable = (nullable - (set(shared) - both_null)) | {
-            v for v in s_nullable if v not in shared
-        }
-        return df, bound, nullable
+        # a projected variable the subquery may leave unbound (inner
+        # OPTIONAL / mixed-variable UNION) takes the compatible join,
+        # not a raw equi-join that would drop the row
+        return _join_in(
+            df, bound, nullable, sdf, svars | alias_names, s_nullable,
+            "this subquery",
+        )
 
     def _join_values(df, bound, nullable, block):
         vars_, rows = block
@@ -5935,46 +5332,22 @@ def _compile_where(
                 data, ", ".join(f"`{c}` string" for c in cols)
             )
         )
-        shared = [v for v in vars_ if v in bound]
-        if shared:
-            # either side may be nullable on a shared variable — the
-            # VALUES side via UNDEF rows, df via a mixed-variable UNION
-            # — and, late r4, BOTH sides at once: the two-sided
-            # compatible-join decomposition handles every case
-            df = _compat_join(
-                df, nullable, vdf, v_nullable, shared, "this VALUES block"
-            )
-            # a shared variable leaves the nullable set unless BOTH
-            # sides could leave it unbound
-            both_null = {v for v in shared if v in nullable and v in v_nullable}
-            nullable = nullable - (set(shared) - both_null)
-        else:
-            df = df.crossJoin(vdf)
-        bound = bound | set(vars_)
+        # either side may be nullable on a shared variable — the VALUES
+        # side via UNDEF rows, df via a mixed-variable UNION — or both;
         # unshared variables with UNDEF rows reach the outer query as
-        # nullable (e.g. a later FILTER bound(?v) sees them unbound)
-        nullable = nullable | {v for v in v_nullable if v not in shared}
-        return df, bound, nullable
+        # nullable (a later FILTER bound(?v) sees them unbound)
+        return _join_in(
+            df, bound, nullable, vdf, set(vars_), v_nullable,
+            "this VALUES block",
+        )
 
     def _join_graph(df, bound, nullable, gterm, group):
         gdf, gvars, g_nullable = _compile_graph_block(
             triples, quads, gterm, group, bound
         )
-        shared = sorted(v for v in gvars if v in bound)
-        if df is None:
-            return gdf, set(gvars), nullable | g_nullable
-        if shared:
-            df = _compat_join(
-                df, nullable, gdf, g_nullable, shared, "this GRAPH block"
-            )
-            both_null = {v for v in shared if v in nullable and v in g_nullable}
-            nullable = (nullable - (set(shared) - both_null)) | {
-                v for v in g_nullable if v not in shared
-            }
-        else:
-            df = df.crossJoin(gdf)
-            nullable = nullable | g_nullable
-        return df, bound | gvars, nullable
+        return _join_in(
+            df, bound, nullable, gdf, gvars, g_nullable, "this GRAPH block"
+        )
 
     for branches in unions:
         df, bound, nullable = _join_union(df, bound, nullable, branches)
@@ -6001,74 +5374,21 @@ def _compile_where(
         gdf, gvars, g_nullable, deferred = _compile_optional_group(
             triples, gpats, gfilters, nested, gexists, gbinds, bound
         )
+        deep = sorted(
+            v
+            for f in deferred
+            for v in _expr_vars(f)
+            if not _is_internal(v) and v not in gvars and v not in bound
+        )
+        if deep:
+            raise SparqlError(
+                f"an OPTIONAL filter references unbound variable(s) {deep}"
+            )
         shared = sorted(v for v in gvars if v in bound)
-        maybe_null = sorted(v for v in shared if v in nullable)
-        group_null = sorted(v for v in shared if v in g_nullable)
-        if group_null:
-            # join keys the GROUP's own nested OPTIONALs may leave
-            # unbound — possibly nullable on the outer side too — take
-            # the two-sided compatible LEFT join (late r4, formerly
-            # rejected); a deferred cross-group filter composes as the
-            # per-slice-pair ON conjunct (session 2 — the last
-            # formerly-rejected LeftJoin form)
-            df = _left_compat_join2(
-                df, set(maybe_null), gdf, g_nullable, shared,
-                join_filters=deferred, bound=bound | gvars,
-            )
-            return df, bound | gvars, nullable | (gvars - bound)
-        if deferred and (maybe_null or not shared):
-            # LeftJoin(A, G, F) with a cross-group F over nullable (or
-            # absent) join keys (late r4, formerly rejected): F joins
-            # the slice decomposition as an extra ON conjunct, renamed
-            # so an unbound-left key's reference resolves to G's
-            # (merged) binding
-            deep = sorted(
-                v
-                for f in deferred
-                for v in _expr_vars(f)
-                if not _is_internal(v) and v not in gvars and v not in bound
-            )
-            if deep:
-                raise SparqlError(
-                    f"an OPTIONAL filter references unbound variable(s) {deep}"
-                )
-            df = _left_compat_join(
-                df, gdf, shared, maybe_null,
-                join_filters=deferred, bound=bound,
-            )
-            return df, bound | gvars, nullable | (gvars - bound)
-        if not shared:
-            # LeftJoin with disjoint domains (full r4, formerly
-            # rejected): every group solution is compatible with every
-            # outer one — a bag cross product when G is non-empty, the
-            # outer relation unchanged (group vars unbound) when empty
-            if gdf.isEmpty():
-                for c in gdf.columns:
-                    df = df.withColumn(c, F.lit(None).cast("string"))
-                return df, bound | gvars, nullable | gvars
-            return df.crossJoin(gdf), bound | gvars, nullable | g_nullable
-        if maybe_null:
-            # LeftJoin on keys an earlier OPTIONAL/UNION/VALUES/BIND may
-            # have left unbound (full r4, formerly rejected): the exact
-            # slice decomposition — unbound-left rows take the group's
-            # binding when matched and stay unbound when not
-            df = _left_compat_join(df, gdf, shared, maybe_null)
-            return df, bound | gvars, nullable | (gvars - bound)
-        if deferred:
-            deep = sorted(
-                v
-                for f in deferred
-                for v in _expr_vars(f)
-                if not _is_internal(v) and v not in gvars and v not in bound
-            )
-            if deep:
-                raise SparqlError(
-                    f"an OPTIONAL filter references unbound variable(s) {deep}"
-                )
-            df = _left_join_group(df, gdf, gvars, shared, deferred, bound)
-        else:
-            join_keys = [x for v in shared for x in _term_key(v)]
-            df = df.join(gdf, on=join_keys, how="left")
+        df = _compat_join(
+            df, nullable, gdf, g_nullable, shared, "left", "this OPTIONAL",
+            deferred,
+        )
         return df, bound | gvars, nullable | (gvars - bound)
 
     def _apply_minus(df, bound, nullable, group):
@@ -6120,124 +5440,14 @@ def _compile_where(
             gdf = _apply_group_exists(
                 triples, gdf, gvars, gexists, bound, "a MINUS group"
             )
-        shared = sorted(v for v in gvars if v in bound and v in snap)
-        if not shared:
-            return df  # disjoint domains: MINUS is a no-op by spec
-        # §8.3 compatibility with possibly-unbound OUTER variables (r4):
-        # a shared variable an earlier OPTIONAL/BIND left NULL is absent
+        # §8.3 compatibility with possibly-unbound variables (r4): a
+        # shared variable an earlier OPTIONAL/BIND left NULL is absent
         # from dom(μ) — it drops out of the compatibility test instead
         # of key-matching NULL, and a row binding NONE of the shared
-        # variables has a disjoint domain, which MINUS keeps. A shared
-        # variable nullable on the MINUS side too — its nested OPTIONAL
-        # left it so (late r4) — takes the two-sided slice
-        # decomposition, where a slice pair with NO effective key has
-        # disjoint domains and removes nothing.
-        maybe_null = sorted(v for v in shared if v in nullable)
-        group_null = sorted(v for v in shared if v in m_nullable)
-        if group_null:
-            return _minus_compat_anti(
-                df, maybe_null, gdf, group_null, shared, "MINUS"
-            )
-        if maybe_null:
-            return _nullable_corr_filter(
-                df, gdf, shared, maybe_null, "minus", "MINUS"
-            )
-        join_keys = [x for v in shared for x in _term_key(v)]
-        return df.join(gdf.select(*join_keys), on=join_keys, how="left_anti")
-
-    exists_flag_n = [0]
-
-    def _flag_exists(df, bound, nullable, node, flags):
-        """Replace every ``("exists_e", (pats, filters, nested,
-        inner-exists, binds))`` node in an expression AST with a
-        ``("flag", col)`` reference to a precomputed boolean column:
-        the probe group compiles to its distinct shared term keys and
-        LEFT-joins the solutions (never multiplying rows), so EXISTS
-        composes inside any boolean expression — FILTERs and (late r4)
-        BIND/projection expressions, at each one's own evaluation
-        point on the timeline. An EXISTS group sharing no variable
-        with the bound-so-far set is a constant — evaluated once here;
-        variables the group-so-far does NOT bind are probe-local per
-        §18.6 (substitution only covers dom(μ)). Returns (df, node);
-        attached flag column names accumulate in ``flags`` for the
-        caller to drop."""
-        if isinstance(node, tuple):
-            if node and node[0] == "exists_e":
-                gpats, gfilters, gnested, ge_inner, ge_binds = node[1]
-                # (late r4) nested OPTIONALs / statement-level
-                # EXISTS inside the boolean-expression probe:
-                # compile through the shared group compiler —
-                # LeftJoin preserves every base solution, so the
-                # flag is unchanged unless a correlation key is
-                # probe-OPTIONAL-nullable (rejected below)
-                gdf, gvars, e_nullable, edeferred = (
-                    _compile_optional_group(
-                        triples, gpats, gfilters, gnested, ge_inner,
-                        ge_binds, bound,
-                    )
-                )
-                if edeferred:
-                    deep = sorted({
-                        v
-                        for f in edeferred
-                        for v in _expr_vars(f)
-                        if not _is_internal(v) and v not in gvars
-                    })
-                    raise SparqlError(
-                        f"an EXISTS filter references variable(s) "
-                        f"{deep} not bound in the probe group"
-                    )
-                shared = sorted(v for v in gvars if v in bound)
-                probe_null = sorted(v for v in shared if v in e_nullable)
-                if probe_null:
-                    if gfilters or ge_inner:
-                        raise SparqlError(
-                            f"an expression EXISTS correlates through "
-                            f"variable(s) {probe_null} its own OPTIONAL may "
-                            "leave unbound — §18.6 substitution over a "
-                            "nullable probe key is not expressible when "
-                            "the probe carries top-level filters or "
-                            "nested EXISTS"
-                        )
-                    # (late r4) no top-level probe filter / nested
-                    # EXISTS → nothing removes a probe base solution,
-                    # so existence is independent of the OPTIONAL-only
-                    # key: drop it from the correlation
-                    # (_apply_group_exists docstring for the argument)
-                    shared = [v for v in shared if v not in e_nullable]
-                if not shared:
-                    return df, ("const", not gdf.isEmpty())
-                exists_flag_n[0] += 1
-                flag = f"__exists_flag{exists_flag_n[0]}"
-                maybe_null = sorted(v for v in shared if v in nullable)
-                if maybe_null:
-                    # §18.6 substitution with possibly-unbound outer
-                    # variables (r4): per-slice flag attachment
-                    df = _attach_nullable_flag(
-                        df, gdf, shared, maybe_null, flag
-                    )
-                else:
-                    keys = [x for v in shared for x in _term_key(v)]
-                    marker = gdf.select(*keys).dropDuplicates().withColumn(
-                        flag, F.lit(True)
-                    )
-                    df = df.join(marker, on=keys, how="left").withColumn(
-                        flag, F.coalesce(F.col(flag), F.lit(False))
-                    )
-                flags.append(flag)
-                return df, ("flag", flag)
-            parts = []
-            for x in node:
-                df, nx = _flag_exists(df, bound, nullable, x, flags)
-                parts.append(nx)
-            return df, tuple(parts)
-        if isinstance(node, list):
-            parts = []
-            for x in node:
-                df, nx = _flag_exists(df, bound, nullable, x, flags)
-                parts.append(nx)
-            return df, parts
-        return df, node
+        # variables has a disjoint domain, which MINUS keeps; a MINUS
+        # sharing no variable removes nothing and compiles away
+        shared = sorted(v for v in gvars if v in bound and v in snap)
+        return _compat_join(df, nullable, gdf, m_nullable, shared, "minus", "MINUS")
 
     def _apply_bind(df, bound, nullable, expr, name):
         # BIND(expr AS ?v): computed per row at its textual position,
@@ -6254,7 +5464,9 @@ def _compile_where(
         # THIS timeline point, so the probe sees exactly the
         # group-so-far bindings §18.6 substitutes from
         bind_flags: list[str] = []
-        df, expr = _flag_exists(df, bound, nullable, expr, bind_flags)
+        df, expr = _attach_expr_exists_flags(
+            triples, df, bound, nullable, expr, bind_flags, "the query"
+        )
         val, kind, lg, dt = _eval_bind_expr(expr, bound)
         k, l, d = _shadow_cols(name)
         df = (
@@ -6276,18 +5488,12 @@ def _compile_where(
             return df, bound, nullable
         bdf, bvars = _join_patterns(triples, list(pat_run))
         pat_run.clear()
-        shared = sorted(v for v in bvars if v in bound and not _is_internal(v))
-        if shared:
-            df = _compat_join(
-                df, nullable, bdf, set(), shared,
-                "a pattern following an OPTIONAL, MINUS, or BIND",
-            )
-        else:
-            df = df.crossJoin(bdf)
-        # the pattern side always binds its variables, so every shared
-        # variable leaves the nullable set (the unbound-left slices
-        # take the pattern's binding) and new variables are non-null
-        return df, bound | bvars, nullable - set(shared)
+        # the pattern side always binds its variables: the unbound-left
+        # slices take the pattern's binding
+        return _join_in(
+            df, bound, nullable, bdf, bvars, set(),
+            "a pattern following an OPTIONAL, MINUS, or BIND",
+        )
 
     for t_kind, payload in getattr(parsed, "timeline", []):
         if t_kind == "patterns":
@@ -6323,77 +5529,31 @@ def _compile_where(
 
     # [NOT] EXISTS inside boolean FILTER expressions: flag-substituted
     # against the final WHERE relation (all filters evaluate over the
-    # whole group per §18.2), through the same _flag_exists helper the
+    # whole group per §18.2), through the same flag attachment the
     # timeline BINDs use
     filter_flags: list[str] = []
     flagged_filters = []
     for f in filters:
-        df, nf = _flag_exists(df, bound, nullable, f, filter_flags)
+        df, nf = _attach_expr_exists_flags(
+            triples, df, bound, nullable, f, filter_flags, "the query"
+        )
         flagged_filters.append(nf)
     df = _apply_filters(df, flagged_filters, bound)
     if filter_flags:
         df = df.drop(*filter_flags)
-    for positive, (gpats, gfilters, gnested, gexists_inner, gbinds_e) in exists_blocks:
+    for positive, payload in exists_blocks:
         # FILTER [NOT] EXISTS → semi/anti join on the shared term keys:
         # per-row existence test, never multiplies outer rows, and the
-        # probe side stays a pruned pattern join Catalyst can broadcast
-        # (late r4) OPTIONAL/BIND inside the probe — see
-        # _apply_group_exists: LeftJoin/Extend preserve every base
-        # solution, so keys/emptiness are unchanged; a correlation
-        # key bound only inside the probe's OPTIONAL is rejected
-        gdf, gvars, ex_nullable, ex_deferred = _compile_optional_group(
-            triples, gpats, gfilters, gnested, gexists_inner,
-            gbinds_e, bound,
+        # probe side stays a pruned pattern join Catalyst can broadcast;
+        # an uncorrelated probe is a per-query CONSTANT (§18.6:
+        # substituting nothing leaves the pattern as-is) — keep
+        # everything or nothing on one emptiness probe
+        gdf, _gvars, shared = _exists_probe(
+            triples, payload, bound, "the query"
         )
-        if ex_deferred:
-            deep = sorted({
-                v
-                for f in ex_deferred
-                for v in _expr_vars(f)
-                if not _is_internal(v) and v not in gvars
-            })
-            raise SparqlError(
-                f"a FILTER EXISTS filter references variable(s) "
-                f"{deep} not bound in the probe group"
-            )
-        shared = sorted(v for v in gvars if v in bound)
-        probe_null = sorted(v for v in shared if v in ex_nullable)
-        if probe_null:
-            if gfilters or gexists_inner:
-                raise SparqlError(
-                    f"FILTER EXISTS correlates through variable(s) "
-                    f"{probe_null} its own OPTIONAL may leave unbound — "
-                    "§18.6 substitution over a nullable probe key is not "
-                    "expressible as a semi-join when the probe carries "
-                    "top-level filters or nested EXISTS"
-                )
-            # (late r4) no top-level probe filter / nested EXISTS →
-            # existence is independent of the OPTIONAL-only key
-            # (_apply_group_exists docstring): drop it from the
-            # correlation instead of rejecting
-            shared = [v for v in shared if v not in ex_nullable]
-        if not shared:
-            # uncorrelated existence test = a per-query CONSTANT
-            # (§18.6: substituting nothing leaves the pattern as-is):
-            # keep everything or nothing based on one emptiness probe
-            if gdf.isEmpty() == positive:
-                df = df.limit(0)
-            continue
-        maybe_null = sorted(v for v in shared if v in nullable)
-        if maybe_null:
-            # §18.6 substitution with possibly-unbound outer variables:
-            # slice the outer relation by bound-mask and test each
-            # slice on its effective keys (r4, _nullable_corr_filter)
-            df = _nullable_corr_filter(
-                df, gdf, shared, maybe_null,
-                "semi" if positive else "anti", "FILTER EXISTS",
-            )
-            continue
-        join_keys = [x for v in shared for x in _term_key(v)]
-        df = df.join(
-            gdf.select(*join_keys),
-            on=join_keys,
-            how="left_semi" if positive else "left_anti",
+        df = _compat_join(
+            df, nullable, gdf, set(), shared,
+            "semi" if positive else "anti", "FILTER EXISTS",
         )
     return df, bound, nullable
 

@@ -269,15 +269,16 @@ _NQ_LINE = re.compile(
     r"^\s*(?P<s><[^>]*>|_:\S+)\s+"
     r"(?P<p><[^>]*>)\s+"
     r'(?P<o><[^>]*>|_:\S+|"(?:[^"\\]|\\.)*"(?:@[\w-]+|\^\^<[^>]*>)?)'
-    r"\s*(?:(?P<g><[^>]*>)\s*)?\.\s*$"
+    r"\s*(?:(?P<g><[^>]*>|_:\S+)\s*)?\.\s*$"
 )
 
 
 def parse_nquads(text: str) -> list[tuple]:
-    """Parse W3C N-Quads → list of (s, p, o, graph-IRI-or-None) —
-    the graph label CAPTURED this time (``parse_ntriples`` drops it);
-    a plain triple line is a default-graph quad (r5, the read half of
-    ``sinks/nquads.py``'s round trip)."""
+    """Parse W3C N-Quads → list of (s, p, o, graph-or-None) — the graph
+    label CAPTURED this time (``parse_ntriples`` drops it), an IRI or a
+    blank node as the N-Quads grammar allows; a plain triple line is a
+    default-graph quad (r5, the read half of ``sinks/nquads.py``'s round
+    trip)."""
     out: list[tuple] = []
     for line in text.splitlines():
         if not line.strip() or line.lstrip().startswith("#"):
@@ -289,6 +290,6 @@ def parse_nquads(text: str) -> list[tuple]:
         out.append((
             _nt_term(m.group("s")), _nt_term(m.group("p")),
             _nt_term(m.group("o")),
-            IRI(unescape_literal(g[1:-1])) if g else None,
+            _nt_term(g) if g else None,
         ))
     return out

@@ -1514,7 +1514,7 @@ WHERE c.c_mktsegment <> 'BUILDING'
 # Left compatible join (full r4, formerly rejected): the second
 # OPTIONAL joins on ?n, which the FIRST OPTIONAL may have left unbound
 # — SPARQL's unbound-is-compatible LeftJoin, evaluated by the sliced
-# decomposition (_left_compat_join). All three §18.5 kept-μ cases fire:
+# decomposition (_compat_join). All three §18.5 kept-μ cases fire:
 # a BUILDING customer whose nation sits in region 1/2 matches (?r
 # bound), one whose nation does not is KEPT with ?r unbound, and a
 # non-BUILDING customer's unbound ?n is compatible with EVERY group
@@ -1752,7 +1752,7 @@ FROM lhs LEFT JOIN grp
 # shared variable ?nat is nullable on BOTH sides — bound on the outer
 # side just for NATION_6 customers, and on the MINUS side just for
 # AUTOMOBILE customers whose nation sits in region 1 — so the engine
-# takes the two-sided §8.3 slice decomposition (_minus_compat_anti):
+# takes the two-sided §8.3 slice decomposition (_compat_join):
 # a slice pair with no effective key has DISJOINT domains and removes
 # nothing (outer ?nat-unbound rows are always kept; M rows with ?nat
 # unbound never remove), while the bound-bound pair anti-joins on ?nat.

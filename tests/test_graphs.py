@@ -159,6 +159,15 @@ def test_graph_seven_col_dataset_is_empty(quads):
     assert sparql_ask(quads, ask) is True
 
 
+def test_graph_seven_col_nested_optional_is_empty(quads):
+    """The empty GRAPH result over a 7-column dataset carries the
+    variables of the block's nested OPTIONALs too, so projecting one
+    answers the empty bag instead of raising."""
+    seven = quads.where("graph is null").drop("graph")
+    q = f"SELECT ?x WHERE {{ GRAPH <{EX}g1> {{ ?s ?p ?o OPTIONAL {{ ?s ?q ?x }} }} }}"
+    assert sparql_select(seven, q).collect() == []
+
+
 def test_graph_rejections(quads):
     # nested GRAPH
     with pytest.raises(SparqlError, match="top level"):
@@ -324,6 +333,33 @@ def test_lineage_quads(graph_engine):
         lineage_quads(graph_engine.triples(lineage=False))
 
 
+def test_dataset_default_graph_is_a_set(spark, tmp_path):
+    """A triple two maps emit lands once in the store-as-dataset's
+    default graph: ``query_dataset`` counts what ``query`` counts,
+    while each map's named graph still holds its copy."""
+    from r2rml_parser_spark.sinks.checkpoint import GraphStore, IncrementalRunner
+
+    twice = f"""
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix ex: <{EX}> .
+<#A> a rr:TriplesMap; rr:logicalTable [ rr:tableName "t" ];
+  rr:subjectMap [ rr:template "{EX}s/{{id}}" ];
+  rr:predicateObjectMap [ rr:predicate ex:name; rr:objectMap [ rr:column "name" ] ] .
+<#B> a rr:TriplesMap; rr:logicalTable [ rr:tableName "t" ];
+  rr:subjectMap [ rr:template "{EX}s/{{id}}" ];
+  rr:predicateObjectMap [ rr:predicate ex:name; rr:objectMap [ rr:column "name" ] ] .
+"""
+    t = spark.createDataFrame([(1, "alpha"), (2, "beta")], "id int, name string")
+    engine = MappingEngine(spark, parse_mapping_document(twice), sources={"t": t})
+    store = GraphStore(spark, str(tmp_path / "store"))
+    IncrementalRunner(engine, store).run()
+    q = "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
+    assert [r.n for r in store.query(q).collect()] == [2]
+    assert [r.n for r in store.query_dataset(q).collect()] == [2]
+    per_graph = "SELECT ?g (COUNT(*) AS ?n) WHERE { GRAPH ?g { ?s ?p ?o } } GROUP BY ?g"
+    assert sorted(r.n for r in store.query_dataset(per_graph).collect()) == [2, 2]
+
+
 # ---------------------------------------------------------------------------
 # N-Quads sink
 
@@ -447,7 +483,10 @@ def test_nquads_round_trip(graph_engine):
     from r2rml_parser_spark.sinks import nquads
 
     q = graph_engine.quads()
-    parsed = parse_nquads(nquads.dump_string(q))
+    # plus one hand-written quad in a blank-node graph, which the
+    # N-Quads grammar allows as a graph label
+    bnode_quad = f'<{EX}s/9> <{EX}p> "nine" _:g9 .'
+    parsed = parse_nquads(nquads.dump_string(q) + "\n" + bnode_quad + "\n")
 
     def term_key(t):
         if isinstance(t, IRI):
@@ -457,10 +496,16 @@ def test_nquads_round_trip(graph_engine):
         return ("bnode", t.label, None, None)
 
     got = {
-        (term_key(s), term_key(p), term_key(o), g.value if g else None)
+        (
+            term_key(s), term_key(p), term_key(o),
+            (g.value if isinstance(g, IRI) else term_key(g)) if g else None,
+        )
         for s, p, o, g in parsed
     }
-    want = set()
+    want = {(
+        ("iri", EX + "s/9", None, None), ("iri", EX + "p", None, None),
+        ("literal", "nine", None, None), ("bnode", "g9", None, None),
+    )}
     for r in q.collect():
         s = ("iri" if r.subj_kind == "iri" else "bnode", r.subj, None, None)
         if r.subj_kind == "bnode":

@@ -500,19 +500,67 @@ if HAVE_HYP:
     )
 
 
+def alp_zero_length(ast):
+    """How many zero-length solutions a path evaluated FROM a term that
+    is not a graph node yields (§18.4 ALP: a constant endpoint of
+    ``*``/``?`` pairs with itself; sequences chain through it,
+    alternatives add up; a step or ``+`` needs an edge at the term)."""
+    k = ast[0]
+    if k in ("pred", "negset"):
+        return 0
+    if k == "inv":
+        return alp_zero_length(ast[1])
+    if k == "seq":
+        return alp_zero_length(ast[1]) * alp_zero_length(ast[2])
+    if k == "alt":
+        return alp_zero_length(ast[1]) + alp_zero_length(ast[2])
+    return 0 if ast[2] == "+" else 1
+
+
+ABSENT_IRI = (EX + "nowhere", "iri", "", "")
+
+if HAVE_HYP:
+    # path endpoints: both variables, or one of them a constant term —
+    # a graph node or a term the graph does not contain
+    _s_const_st = st.sampled_from([t for t in SUBJECTS if t[1] == "iri"] + [ABSENT_IRI])
+    _o_const_st = st.sampled_from(
+        [t for t in OBJECTS if t[1] != "bnode"]
+        + [ABSENT_IRI, ("omega", "literal", "", "")]
+    )
+    path_ends_st = st.one_of(
+        st.just((None, None)),
+        st.tuples(_s_const_st, st.none()),
+        st.tuples(st.none(), _o_const_st),
+    )
+
+
 @pytest.mark.skipif(not HAVE_HYP, reason="hypothesis not installed")
 @settings(max_examples=10, deadline=None)
-@given(graph=graph_st, ast=path_ast_st if HAVE_HYP else st.none())
-def test_full_path_grammar_differential(spark, graph, ast):
+@given(
+    graph=graph_st,
+    ast=path_ast_st if HAVE_HYP else st.none(),
+    ends=path_ends_st if HAVE_HYP else st.none(),
+)
+def test_full_path_grammar_differential(spark, graph, ast, ends):
     rows = [
         (s[0], s[1], p, o[0], o[1], o[2] or None, o[3] or None)
         for s, p, o in graph
     ]
     g = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in COLS))
-    q = f"SELECT ?a ?b WHERE {{ ?a {render_path(ast)} ?b }}"
-    got = Counter((r.a, r.b) for r in sparql_select(g, q).collect())
+    s_end, o_end = ends
+    subj = "?a" if s_end is None else term_sparql(s_end)
+    obj = "?b" if o_end is None else term_sparql(o_end)
+    proj = " ".join(v for v in (subj, obj) if v.startswith("?"))
+    q = f"SELECT {proj} WHERE {{ {subj} {render_path(ast)} {obj} }}"
+    got = Counter(tuple(r) for r in sparql_select(g, q).collect())
+    pairs = naive_path_pairs(graph, ast)
+    const = s_end or o_end
+    if const is not None and const not in _graph_nodes(graph):
+        pairs = pairs + [(const, const)] * alp_zero_length(ast)
     want = Counter(
-        (s[0], o[0]) for s, o in naive_path_pairs(graph, ast)
+        tuple(t[0] for t, end in ((s, s_end), (o, o_end)) if end is None)
+        for s, o in pairs
+        if s_end in (None, s) and o_end in (None, o)
     )
     assert got == want, f"query {q!r} diverged"
 
