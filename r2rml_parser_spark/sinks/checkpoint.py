@@ -16,7 +16,17 @@ JSON manifest records, per triples map:
     (decimal sum of xxhash64 over rows — replaces the order-sensitive
     rolling MD5 of UtilImpl.java:364-393, which cannot parallelize),
   * per-partition triple counts (lineage metrics),
-  * a monotonically increasing snapshot id.
+  * a monotonically increasing snapshot id,
+  * an overlap signature (``overlap_signature``): the map's effective
+    subject IRI template and its constant predicate set, or nothing
+    when the partition was not written from a known triples map.
+
+Each partition is a SET by construction: ``GraphStore.write_mapping``
+deduplicates what it writes. The graph is the set union of the
+partitions, and ``GraphStore.read`` deduplicates only the partitions
+whose signatures do not prove them disjoint from every other one (the
+manifest plays the role of Delta Lake's transaction log: invariants
+and statistics that readers trust without a rescan).
 
 A mapping is SKIPPED when the definition hash matches AND the source
 is provably unchanged — same skip decision as the reference, but
@@ -39,8 +49,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from r2rml_parser_spark.mapping.model import Template, TermType, TriplesMap
 from r2rml_parser_spark.plans.compile import TRIPLE_COLUMNS
-from r2rml_parser_spark.plans.engine import LINEAGE_COLUMN, MappingEngine
+from r2rml_parser_spark.plans.engine import LINEAGE_COLUMN, RDF_TYPE, MappingEngine
+from r2rml_parser_spark.plans.rewrite import effective_iri_template, templates_may_collide
 
 MANIFEST = "manifest.json"
 
@@ -107,6 +119,48 @@ def source_files_fingerprint(df: DataFrame) -> str | None:
     return hashlib.md5("\n".join(entries).encode()).hexdigest()
 
 
+def overlap_signature(tm: TriplesMap, engine: MappingEngine) -> dict:
+    """What ``GraphStore.read`` needs to prove a map's partition disjoint
+    from another's, as stored in the manifest: every triple of the map
+    has a subject rendered from the map's subject template and one of
+    its constant predicates (``rdf:type`` for the class triples).
+
+    ``subject_template`` holds the constant parts of the subject
+    template as the engine renders it (base namespace folded in). It is
+    None, meaning unknown, unless the subject is an IRI template whose
+    fields are IRI-safe percent-encoded: only then is every field value
+    drawn from the character set ``templates_may_collide`` assumes."""
+    sm = tm.subject_map
+    template = None
+    if (
+        sm.template is not None
+        and sm.term_type == TermType.IRI
+        and engine.encode_iris
+        and not engine.form_encoding  # form encoding also emits '+' and '*'
+    ):
+        template = list(effective_iri_template(sm.template, engine.base_ns).parts)
+    preds = {p for pom in tm.predicate_object_maps for p in pom.predicates}
+    if tm.classes:
+        preds.add(RDF_TYPE)
+    return {"subject_template": template, "predicates": sorted(preds)}
+
+
+def _may_overlap(a: dict | None, b: dict | None) -> bool:
+    """False only when two partitions provably share no triple: their
+    predicate sets are disjoint, or no field values render their subject
+    templates equal. A missing signature proves nothing."""
+    if a is None or b is None:
+        return True
+    if not set(a["predicates"]) & set(b["predicates"]):
+        return False
+    ta, tb = a["subject_template"], b["subject_template"]
+    if ta is None or tb is None:
+        return True
+    return templates_may_collide(
+        *(Template(text="", parts=tuple(t), fields=("",) * (len(t) - 1)) for t in (ta, tb))
+    )
+
+
 class GraphStore:
     """Partitioned (by source_map) parquet graph table + JSON manifest.
 
@@ -116,6 +170,13 @@ class GraphStore:
     carries tight min/max column stats, so point/range reads over the
     store (the SPARQL BGP surface binds subjects and predicates to
     constants) prune whole files instead of scanning the graph.
+
+    Invariant: every partition is a set, because ``write_mapping``
+    deduplicates what it writes, so callers hand it raw emissions. The
+    graph is the set union of the partitions. ``read`` streams each
+    partition whose manifest signature proves it disjoint from all the
+    others and deduplicates only the union of the rest (see
+    ``overlap_signature``).
 
     ``cluster_partitions`` sizes the range shuffle; None means
     ``sparkContext.defaultParallelism`` (= total cluster cores), which
@@ -161,16 +222,29 @@ class GraphStore:
         return os.path.join(self.base, "graph", f"src={_safe_dirname(source_map)}")
 
     def write_mapping(self, source_map: str, triples: DataFrame) -> list[int]:
-        """(Over)write one mapping's partition, range-clustered on
-        (subj, pred, obj); returns per-range-bucket triple counts (the
-        lineage metric rows — bucket i covers a contiguous triple
-        range, so the counts double as a coarse histogram)."""
+        """(Over)write one mapping's partition as a SET of triples,
+        range-clustered on (subj, pred, obj); returns per-range-bucket
+        triple counts (the lineage metric rows — bucket i covers a
+        contiguous triple range, so the counts double as a coarse
+        histogram).
+
+        ``triples`` may hold duplicates: the dedup runs after the range
+        exchange, which already puts equal triples in one bucket, so it
+        plans no exchange of its own and the write shuffles once. The
+        range key is one struct column so that a constant ``pred`` (a
+        single-branch map) cannot be folded into the exchange's ordering,
+        where the aggregate would no longer recognize it as one of its
+        grouping keys and would plan a hash exchange of its own."""
         path = self._mapping_dir(source_map)
         n = self.cluster_partitions or self.spark.sparkContext.defaultParallelism
+        key = ["subj", "pred", "obj"]
+        rest = [c for c in TRIPLE_COLUMNS if c not in key]
         out = (
-            triples.select(*TRIPLE_COLUMNS)
-            .repartitionByRange(n, "subj", "pred", "obj")
-            .sortWithinPartitions("subj", "pred", "obj")
+            triples.select(F.struct(*key).alias("_key"), *rest)
+            .repartitionByRange(n, "_key")
+            .dropDuplicates(["_key", *rest])
+            .select(*(F.col(f"_key.{c}").alias(c) if c in key else c for c in TRIPLE_COLUMNS))
+            .sortWithinPartitions(*key)
             .withColumn("_pid", F.spark_partition_id())
         )
         out.write.mode("overwrite").parquet(path)
@@ -247,7 +321,7 @@ class GraphStore:
         for uri in sorted(sources):
             part = triples.where(F.col(LINEAGE_COLUMN) == uri).select(*TRIPLE_COLUMNS)
             self.delete_mapping(uri)
-            counts = self.write_mapping(uri, part.dropDuplicates())
+            counts = self.write_mapping(uri, part)
             manifest["mappings"][uri] = {
                 "definition_hash": "imported",
                 "source_hash": "imported",
@@ -331,11 +405,7 @@ class GraphStore:
                 if added == 0 and removed == 0:
                     stats["unchanged"].append(uri)
                     continue
-                new_part = (
-                    new.where(F.col(LINEAGE_COLUMN) == uri)
-                    .select(*TRIPLE_COLUMNS)
-                    .dropDuplicates()
-                )
+                new_part = new.where(F.col(LINEAGE_COLUMN) == uri)
                 self.delete_mapping(uri)
                 counts = self.write_mapping(uri, new_part)
                 prev = manifest["mappings"].get(uri, {})
@@ -363,19 +433,45 @@ class GraphStore:
         return stats
 
     def read(self) -> DataFrame:
-        """The whole graph (set semantics across mappings)."""
-        root = os.path.join(self.base, "graph")
-        dirs = [
-            os.path.join(root, d) for d in sorted(os.listdir(root))
-        ] if os.path.isdir(root) else []
-        if not dirs:
-            from pyspark.sql.types import StringType, StructField, StructType
+        """The whole graph: the set union of every partition directory.
 
-            return self.spark.createDataFrame(
-                [], StructType([StructField(c, StringType(), True) for c in TRIPLE_COLUMNS])
-            )
-        df = self.spark.read.parquet(*dirs).select(*TRIPLE_COLUMNS)
-        return df.dropDuplicates(TRIPLE_COLUMNS)
+        Partitions are sets (``write_mapping``), so the union has a
+        duplicate only where two partitions share a triple. A partition
+        whose manifest signature proves it disjoint from every other one
+        is streamed as stored; the rest are deduplicated together. A
+        partition with no signature (no manifest entry, or written by
+        ``sync``, ``import_reified`` or a direct ``write_mapping``) is
+        disjoint from nothing, unless it is the only one."""
+        signatures = {
+            self._mapping_dir(uri): entry.get("signature")
+            for uri, entry in self.read_manifest()["mappings"].items()
+        }
+        root = os.path.join(self.base, "graph")
+        dirs = sorted(os.listdir(root)) if os.path.isdir(root) else []
+        return self._set_union(
+            [(p, signatures.get(p)) for p in (os.path.join(root, d) for d in dirs)]
+        )
+
+    def _set_union(self, parts: list[tuple[str, dict | None]]) -> DataFrame:
+        """Distinct union of partition directories given with their
+        signatures: one scan of the proven-disjoint ones, one deduped
+        scan of the rest. The explicit schema spares a footer-reading
+        job per call."""
+        if not parts:
+            return self.spark.createDataFrame([], _triple_schema())
+        shared = [
+            path for path, sig in parts
+            if any(_may_overlap(sig, other) for p, other in parts if p != path)
+        ]
+        disjoint = [path for path, _sig in parts if path not in shared]
+        reader = self.spark.read.schema(_triple_schema())
+        scans = [reader.parquet(*disjoint)] if disjoint else []
+        if shared:
+            scans.append(reader.parquet(*shared).dropDuplicates(TRIPLE_COLUMNS))
+        out = scans[0]
+        for scan in scans[1:]:
+            out = out.unionByName(scan)
+        return out
 
     def query(self, sparql: str, prefixes: dict[str, str] | None = None) -> DataFrame:
         """SPARQL SELECT straight over the persisted store.
@@ -398,12 +494,21 @@ class GraphStore:
         column (no extra shuffle). With ``include_default`` every
         triple also populates the default graph (union-default-graph
         store semantics — plain patterns keep matching); pass False
-        for a named-graphs-only dataset."""
-        from r2rml_parser_spark.plans.engine import lineage_quads
+        for a named-graphs-only dataset. The default graph is the set
+        union of the named graphs, deduplicated only where two may
+        overlap (as in ``read``)."""
+        from r2rml_parser_spark.plans.engine import GRAPH_COLUMN, lineage_quads
 
-        return lineage_quads(
-            self.read_with_lineage(), include_default=include_default
-        )
+        mappings = self.read_manifest()["mappings"]
+        named = lineage_quads(self.read_with_lineage(), include_default=False)
+        if not include_default:
+            return named
+        default = self._set_union([
+            (self._mapping_dir(uri), mappings[uri].get("signature"))
+            for uri in sorted(mappings)
+            if os.path.isdir(self._mapping_dir(uri))
+        ]).withColumn(GRAPH_COLUMN, F.lit(None).cast("string"))
+        return default.unionByName(named)
 
     def query_dataset(
         self,
@@ -490,13 +595,13 @@ class IncrementalRunner:
 
             if src_hash is None:
                 src_hash = source_content_hash(src)
-            triples = self.engine.triples_for(tm).drop(LINEAGE_COLUMN).dropDuplicates()
             self.store.delete_mapping(tm.uri)
-            partition_counts = self.store.write_mapping(tm.uri, triples)
+            partition_counts = self.store.write_mapping(tm.uri, self.engine.triples_for(tm))
             manifest["mappings"][tm.uri] = {
                 "definition_hash": def_hash,
                 "source_files": files_fp,
                 "source_hash": src_hash,
+                "signature": overlap_signature(tm, self.engine),
                 "snapshot": stats["snapshot"],
                 "partition_counts": partition_counts,
                 "triples": sum(partition_counts),

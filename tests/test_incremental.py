@@ -357,3 +357,174 @@ def test_store_dataset_query_per_mapping_graphs(spark, engine, tmp_path):
         "PREFIX ex: <http://ex.org/> SELECT ?s WHERE { ?s ex:v ?o }",
         include_default=False,
     ).count() == 0
+
+
+def _executed_plans(spark, fn) -> list[str]:
+    """Run fn(); return the final physical plans (the adaptive plan's
+    final section) of the SQL executions it started, as plan trees."""
+    sc = spark.sparkContext
+    status = spark._jsparkSession.sharedState().statusStore()
+    before = {e.executionId() for e in _scala_list(status.executionsList())}
+    fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    plans = []
+    for e in _scala_list(status.executionsList()):
+        if e.executionId() in before:
+            continue
+        text = e.physicalPlanDescription().split("\n\n")[0]
+        if "== Final Plan ==" in text:
+            text = text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+        plans.append(text)
+    return plans
+
+
+def _scala_list(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def test_write_mapping_dedups_with_one_exchange(spark, tmp_path):
+    """The writer owns the set invariant: duplicates handed to
+    write_mapping are stored once, and the dedup rides on the range
+    exchange instead of planning one of its own, also when the
+    predicate is a constant the optimizer folds."""
+    from pyspark.sql import functions as F
+
+    store = GraphStore(spark, str(tmp_path / "g"), cluster_partitions=2)
+    # 60 rows, 20 distinct triples (id % 20 fixes id % 4)
+    df = spark.range(60).select(
+        F.concat(F.lit("http://x/e"), (F.col("id") % 20).cast("string")).alias("subj"),
+        F.lit("iri").alias("subj_kind"),
+        F.lit("http://x/p").alias("pred"),
+        F.concat(F.lit("v"), (F.col("id") % 4).cast("string")).alias("obj"),
+        F.lit("literal").alias("obj_kind"),
+        F.lit(None).cast("string").alias("lang"),
+        F.lit(None).cast("string").alias("dtype"),
+    )
+    counts = []
+    plans = _executed_plans(
+        spark, lambda: counts.extend(store.write_mapping("http://x/m", df))
+    )
+    assert sum(counts) == 20
+    (write,) = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert "HashAggregate" in write
+    assert write.count("Exchange (") == 1, write
+
+
+MAPPING_SHARED = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+@prefix ex: <http://ex.org/> .
+<#A> rr:logicalTable [ rr:tableName "ta" ];
+  rr:subjectMap [ rr:template "http://x/a/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v; rr:objectMap [ rr:column "v" ] ] .
+<#C> rr:logicalTable [ rr:tableName "tb" ];
+  rr:subjectMap [ rr:template "http://x/a/{id}" ];
+  rr:predicateObjectMap [ rr:predicate ex:v; rr:objectMap [ rr:column "v" ] ] .
+"""
+
+
+def test_disjoint_maps_read_without_dedup(spark, engine, tmp_path):
+    """Maps whose subject templates cannot render the same IRI are
+    disjoint by proof, so read() is a plain scan: no aggregate, no
+    exchange, and building it launches no job."""
+    store = GraphStore(spark, str(tmp_path / "g"))
+    IncrementalRunner(engine, store).run()
+    jobs = _jobs_during(spark, "read-no-jobs", store.read)
+    assert jobs == [], f"read() launched jobs: {jobs}"
+    df = store.read()
+    assert "Aggregate" not in df._jdf.queryExecution().optimizedPlan().toString()
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.count() == 3
+
+
+def test_overlapping_maps_count_shared_triple_once(spark, tmp_path):
+    """Two maps with the same subject template and predicate may share
+    triples; the one they both emit is in the graph once, through read()
+    and through the store-as-dataset's default graph."""
+    ta = spark.createDataFrame([(1, "x"), (2, "y")], ["id", "v"])
+    tb = spark.createDataFrame([(2, "y"), (3, "z")], ["id", "v"])
+    engine = MappingEngine(
+        spark, parse_mapping_document(MAPPING_SHARED), sources={"ta": ta, "tb": tb}
+    )
+    store = GraphStore(spark, str(tmp_path / "g"))
+    IncrementalRunner(engine, store).run()
+    assert store.read().count() == 3
+    count = "SELECT (COUNT(*) AS ?n) WHERE { ?s ?p ?o }"
+    assert store.query(count).collect()[0]["n"] == 3
+    assert store.query_dataset(count).collect()[0]["n"] == 3
+
+
+try:
+    from hypothesis import given, settings, strategies as st
+
+    HAVE_HYP = True
+except ImportError:  # pragma: no cover
+    HAVE_HYP = False
+
+#: subject maps: overlapping and disjoint IRI templates, and a blank
+#: node subject (no signature template, so it overlaps on predicates)
+SUBJECT_MAPS = [
+    '[ rr:template "http://x/a/{id}" ]',
+    '[ rr:template "http://x/b/{id}" ]',
+    '[ rr:template "http://x/a/{v}" ]',
+    '[ rr:template "http://x/a/{id}/{v}" ]',
+    '[ rr:template "b{id}"; rr:termType rr:BlankNode ]',
+]
+map_st = (
+    st.tuples(
+        st.sampled_from(SUBJECT_MAPS),
+        st.booleans(),  # rr:class ex:C
+        st.lists(
+            st.tuples(st.sampled_from(["p", "q"]), st.sampled_from(["id", "v"])),
+            min_size=1, max_size=2,
+        ),
+    )
+    if HAVE_HYP else None
+)
+rows_st = (
+    st.lists(
+        st.tuples(st.integers(0, 3), st.sampled_from(["x", "y"])), min_size=1, max_size=6
+    )
+    if HAVE_HYP else None
+)
+
+
+@pytest.mark.skipif(not HAVE_HYP, reason="hypothesis not installed")
+@settings(max_examples=8, deadline=None)
+@given(maps=st.lists(map_st, min_size=2, max_size=4), rows=rows_st)
+def test_store_read_is_distinct_union_differential(spark, maps, rows):
+    """Random map sets over one table with duplicate rows: read() equals
+    the distinct union of every map's emissions, and default-graph
+    counts through query_dataset equal those through query."""
+    import tempfile
+
+    ttl = ["@prefix rr: <http://www.w3.org/ns/r2rml#> .",
+           "@prefix ex: <http://ex.org/> ."]
+    for i, (subject, cls, poms) in enumerate(maps):
+        if cls:
+            subject = subject[:-1] + "; rr:class ex:C ]"
+        ttl.append(
+            f'<#M{i}> rr:logicalTable [ rr:tableName "t" ]; rr:subjectMap {subject}'
+            + "".join(
+                f'; rr:predicateObjectMap [ rr:predicate ex:{p}; '
+                f'rr:objectMap [ rr:column "{c}" ] ]'
+                for p, c in poms
+            )
+            + " ."
+        )
+    table = spark.createDataFrame(rows, "id int, v string")
+    engine = MappingEngine(
+        spark, parse_mapping_document("\n".join(ttl)), sources={"t": table}
+    )
+    expected = {
+        tuple(r)[:7]
+        for tm in engine.doc.topo_sorted()
+        for r in engine.triples_for(tm).collect()
+    }
+    with tempfile.TemporaryDirectory() as d:
+        store = GraphStore(spark, d, cluster_partitions=1)
+        IncrementalRunner(engine, store).run()
+        got = store.read().collect()
+        assert len(got) == len(expected) and {tuple(r) for r in got} == expected
+        q = "SELECT ?p (COUNT(*) AS ?n) WHERE { ?s ?p ?o } GROUP BY ?p"
+        plain = {(r.p, r.n) for r in store.query(q).collect()}
+        assert {(r.p, r.n) for r in store.query_dataset(q).collect()} == plain
