@@ -5,16 +5,21 @@ mention detection, mapping-driven triple emission, MinHash+CC
 canonicalization) at sf0.001.
 
 ``queries()`` / ``oracle_sql()`` — one entry per operator family from
-SURVEY.md §3 + the data-ops additions; DuckDB oracles reproduce each
-result bit-for-bit (md5-based hashing, identical folds, rounded
-doubles). Iterative CC is oracled via a DuckDB recursive-CTE closure;
-even the mapInPandas feature extraction is oracled — its fake decode
-is a hex-string md5 chain DuckDB can replay exactly.
+SURVEY.md §3 + the data-ops additions. The TPC-H cases (the KG build,
+SPARQL over it, and the operators over the KG) come from the case table
+``r2rml_parser_spark.tpch_kg.CASES``, each run by ``tpch_kg.run_case``;
+the docs and data-ops queries are the ``q_*`` functions here. DuckDB
+oracles reproduce each result bit-for-bit (md5-based hashing, identical
+folds, rounded doubles). Iterative CC is oracled via a DuckDB
+recursive-CTE closure; even the mapInPandas feature extraction is
+oracled — its fake decode is a hex-string md5 chain DuckDB can replay
+exactly.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,460 +50,6 @@ def q_kg_docs_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     from r2rml_parser_spark.pipeline import build_kg
 
     return build_kg(spark, sf_dir, canonicalize=False)
-
-
-def q_kg_tpch_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from r2rml_parser_spark.tpch_kg import build_tpch_kg
-
-    return build_tpch_kg(spark, sf_dir)
-
-
-def q_sparql_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL BGP+FILTER answered over the KG the engine just built
-    (the reference's own test pattern, ComplianceTests.java:147-168)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql
-
-    return run_tpch_sparql(spark, sf_dir)
-
-
-def q_sparql_agg_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL aggregates (GROUP BY + COUNT/COUNT DISTINCT) over the
-    generated KG — customers-per-nation rollup."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_agg
-
-    return run_tpch_sparql_agg(spark, sf_dir)
-
-
-def q_sparql_typed_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL datatype() accessor + numeric FILTER over xsd:integer
-    literals (SPARQL 1.1 operator dispatch)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_typed
-
-    return run_tpch_sparql_typed(spark, sf_dir)
-
-
-def q_sparql_str_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL string builtins (STRENDS, CONTAINS over STR()) + VALUES
-    inline bindings over the generated KG."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_str
-
-    return run_tpch_sparql_str(spark, sf_dir)
-
-
-def q_sparql_exists_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL FILTER NOT EXISTS (anti join) over the generated KG —
-    nations with no BUILDING-segment customer."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_exists
-
-    return run_tpch_sparql_exists(spark, sf_dir)
-
-
-def q_sparql_construct_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL CONSTRUCT over the generated KG — derives a new
-    customer→region graph (7-column triples result)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_construct
-
-    return run_tpch_sparql_construct(spark, sf_dir)
-
-
-def q_sparql_path_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL property path (two-hop sequence) + BIND IRI-minting over
-    the generated KG."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_path
-
-    return run_tpch_sparql_path(spark, sf_dir)
-
-
-def q_sparql_closure_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL closure path (partOf+) over a CONSTRUCT-derived
-    hierarchy — path-doubling reachability, recursive-CTE oracle."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_closure
-
-    return run_tpch_sparql_closure(spark, sf_dir)
-
-
-def q_sparql_store_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL answered from the persisted range-clustered GraphStore
-    (sync -> parquet partitions sorted on (subj, pred, obj) -> BGP over
-    the store read path with scan-level pruning)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_store
-
-    return run_tpch_sparql_store(spark, sf_dir)
-
-
-def q_sparql_store_graph_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Store-as-dataset (r5): GRAPH ?g over the persisted GraphStore —
-    each mapping's partition is a named graph (IRI = triples-map URI),
-    so per-mapping provenance counts come off the store layout."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_store_graph
-
-    return run_tpch_sparql_store_graph(spark, sf_dir)
-
-
-def q_sparql_closure_seeded_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL closure with VARIABLE endpoints seeded by sibling
-    patterns (multi-source frontier walk, not full reachability);
-    recursive-CTE oracle replays the seeded expansion."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_closure_seeded
-
-    return run_tpch_sparql_closure_seeded(spark, sf_dir)
-
-
-def q_sparql_pathx_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL path grammar: alternation over a sequence
-    ((p1/p2)|p3 → UNION branches) + closure over a parenthesized
-    group ((p1/p2)+ → fixpoint over a derived edge relation)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_pathx
-
-    return run_tpch_sparql_pathx(spark, sf_dir)
-
-
-def q_sparql_union_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-variable UNION (branches bind DIFFERENT vars) joined to a
-    required pattern via the exact compatible-join decomposition
-    (unbound ?cname takes the pattern's binding — SPARQL §18.5)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_union
-
-    return run_tpch_sparql_union(spark, sf_dir)
-
-
-def q_sparql_optfilter_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-group OPTIONAL filter — LeftJoin(A, G, F) with F comparing
-    a group var against a required-side var, compiled into the
-    left-join condition (non-matching rows keep ?nname unbound)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_optfilter
-
-    return run_tpch_sparql_optfilter(spark, sf_dir)
-
-
-def q_sparql_exists_expr_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS composing inside a boolean FILTER expression (|| with a
-    string test), compiled to a per-row flag via a key-distinct left
-    join rather than the standalone semi-join."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_exists_expr
-
-    return run_tpch_sparql_exists_expr(spark, sf_dir)
-
-
-def q_sparql_alt_opt_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simple forward alternation inside an OPTIONAL group (r4 predset
-    collapse: one pred-IN scan, legal in braced groups) — customers
-    extend twice, nations take the left join's NULL row."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_alt_opt
-
-    return run_tpch_sparql_alt_opt(spark, sf_dir)
-
-
-def q_sparql_groupbind_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-local BIND inside an OPTIONAL feeding the group's FILTER
-    (r4), plus numeric-function BIND (FLOOR over arithmetic) at the
-    top level — both oracle-pinned."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_groupbind
-
-    return run_tpch_sparql_groupbind(spark, sf_dir)
-
-
-def q_sparql_ebv_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§17.2.2 effective boolean values (late r4): numeric EBV of a
-    bare arithmetic FILTER operand, a boolean-comparison BIND, and
-    EBV of the minted xsd:boolean composing with ||."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_ebv
-
-    return run_tpch_sparql_ebv(spark, sf_dir)
-
-
-def q_sparql_existsnull_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probe-OPTIONAL-nullable EXISTS correlation key (late r4): the
-    inert key leaves the correlation — NOT EXISTS reduces to the
-    required part's existence, keeping exactly the nation subjects."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_existsnull
-
-    return run_tpch_sparql_existsnull(spark, sf_dir)
-
-
-def q_sparql_twoside_filter_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-group filter x two-sided compatible LEFT join (late r4
-    session 2, the last formerly-rejected LeftJoin form): deferred F
-    over the outer ?cname, shared ?nat nullable on both sides."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_twoside_filter
-
-    return run_tpch_sparql_twoside_filter(spark, sf_dir)
-
-
-def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity PageRank over the generated KG (iterative DataFrame
-    joins, exact-integer arithmetic so the DuckDB unrolled-CTE twin
-    is bit-for-bit — operators/pagerank.py)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_pagerank
-
-    return run_tpch_pagerank(spark, sf_dir)
-
-
-def q_kg_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filtered negative sampling over KG edges (KGE training pairs):
-    corrupt entity = entities[md5(s|p|o|slot) mod N], collisions and
-    already-true edges filtered - fully deterministic, DuckDB-exact."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_negatives
-
-    return run_tpch_negatives(spark, sf_dir)
-
-
-def q_sparql_boolbind_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean-valued BIND expressions (§17.2, late r4): a bare EXISTS
-    probe (flagged at the BIND's own timeline point) and a comparison
-    ladder, each minting "true"/"false"^^xsd:boolean terms."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_boolbind
-
-    return run_tpch_sparql_boolbind(spark, sf_dir)
-
-
-def q_sparql_npspath_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Path-grammar residue in one query (r4): a closure whose closed
-    group itself contains a closure ((inNation+/inRegion)* — evaluated
-    by the recursive derived-relation path, seeded from the
-    sibling-bound ?c side), a negated property set with mixed
-    forward+inverse members (§9.1 split), and alternation branches
-    carrying a sequence INSIDE an OPTIONAL group (one "pathrel"
-    derived-relation pattern)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_npspath
-
-    return run_tpch_sparql_npspath(spark, sf_dir)
-
-
-def q_sparql_arith_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§19.8 expression ladder (r4): parenthesized arithmetic groups as
-    primaries — nested value groups in a FILTER comparison, a
-    value-expression IN member, a negated comparison group, and a BIND
-    multiplying two parenthesized sums."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_arith
-
-    return run_tpch_sparql_arith(spark, sf_dir)
-
-
-def q_sparql_values_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VALUES with UNDEF (r4): the unbound row is §18.5-compatible with
-    every solution — compiled through the same compatible-join
-    decomposition mixed-variable UNIONs use."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_values
-
-    return run_tpch_sparql_values(spark, sf_dir)
-
-
-def q_sparql_aggsem_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict aggregate semantics (late r4): grouping the whole KG by
-    predicate — SUM is unbound for any group holding a bound
-    non-numeric value (§18.5.1.5 error propagation, the W3C agg-err
-    behavior) and MIN/MAX are value-aware extrema under the ORDER BY
-    total order (numeric terms by VALUE before non-numeric terms by
-    codepoint)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_aggsem
-
-    return run_tpch_sparql_aggsem(spark, sf_dir)
-
-
-def q_sparql_latejoin_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Textual-order Join(LeftJoin(A,G),B) (late r4): a pattern after
-    an OPTIONAL sharing ?r compiles as a late segment compatible-joined
-    after the left join — unbound ?r rows take the pattern's binding."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_latejoin
-
-    return run_tpch_sparql_latejoin(spark, sf_dir)
-
-
-def q_sparql_optcompat_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left compatible join (full r4, formerly rejected): the second
-    OPTIONAL joins on ?n, which the first OPTIONAL may have left
-    unbound — the sliced LeftJoin decomposition. All three §18.5
-    kept-μ cases fire: bound-matched, bound-unmatched (kept, ?r
-    unbound), and unbound-?n taking the group's (?n, ?r) binding."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_optcompat
-
-    return run_tpch_sparql_optcompat(spark, sf_dir)
-
-
-def q_sparql_optdisjoint_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Disjoint-domain OPTIONAL (full r4, formerly rejected): the group
-    shares no variable, so every group solution is compatible with
-    every outer one — a bag cross product whose multiplicity counts
-    the unprojected ?x bindings."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_optdisjoint
-
-    return run_tpch_sparql_optdisjoint(spark, sf_dir)
-
-
-def q_sparql_nestedopt_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nested-OPTIONAL compatible join (late r4, formerly rejected):
-    inside the OPTIONAL group the second nested OPTIONAL joins on
-    ?nation, which the first nested OPTIONAL leaves unbound for most
-    rows — the kept-mu merge via the nested slice decomposition."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_nestedopt
-
-    return run_tpch_sparql_nestedopt(spark, sf_dir)
-
-
-def q_sparql_unionopt_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OPTIONAL inside a UNION branch (late r4, formerly rejected):
-    the branch compiles as a group via the recursive LeftJoin
-    machinery; its OPTIONAL-nullable var is union-nullable."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_unionopt
-
-    return run_tpch_sparql_unionopt(spark, sf_dir)
-
-
-def q_sparql_twoside_left_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided compatible LEFT join (late r4, formerly the last
-    LeftJoin rejection): the shared key is nullable on the outer side
-    (earlier OPTIONAL) and the group side (its nested OPTIONAL)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_twoside_left
-
-    return run_tpch_sparql_twoside_left(spark, sf_dir)
-
-
-def q_sparql_minusopt_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MINUS with a nested OPTIONAL (late r4, formerly rejected): the
-    shared key is nullable on both sides — the two-sided SPARQL 8.3
-    slice decomposition where disjoint-domain pairs remove nothing."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_minusopt
-
-    return run_tpch_sparql_minusopt(spark, sf_dir)
-
-
-def q_sparql_minus_scope_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MINUS snapshot domain (late r4): Minus evaluates at its textual
-    point, so a variable first bound by a LATER OPTIONAL never keys the
-    anti join — LeftJoin(Minus(A,M),G), not Minus(LeftJoin(A,G),M)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_minus_scope
-
-    return run_tpch_sparql_minus_scope(spark, sf_dir)
-
-
-def q_sparql_timeline_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Textual timeline (full r4, formerly rejected): a pattern run
-    after an OPTIONAL sharing its nullable variable joins at ITS
-    textual position — Join(LeftJoin(A,G),B) with the §18.5 compatible
-    join (unbound ?n takes every nation's binding)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_timeline
-
-    return run_tpch_sparql_timeline(spark, sf_dir)
-
-
-def q_sparql_minus_timeline_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join(Minus(A,M),B) in textual order (full r4), discriminating:
-    the MINUS removes only the rows whose ?n is bound AT ITS POINT
-    (BUILDING customers); the pattern then rebinds ?n — a MINUS hoisted
-    to the end would see the rebound ?n and empty the result."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_minus_timeline
-
-    return run_tpch_sparql_minus_timeline(spark, sf_dir)
-
-
-def q_sparql_aggdistinct_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUM/AVG(DISTINCT) (r4): §18.5.1 Distinct over RDF TERMS — the
-    doubled bag (each ?k reaches the group via two predicates) dedups
-    by full term before the numeric fold."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_aggdistinct
-
-    return run_tpch_sparql_aggdistinct(spark, sf_dir)
-
-
-def q_sparql_orderexpr_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORDER BY expression (r4): DESC(?k * 2 - 1) over a NON-projected
-    variable, sorted over the solution relation before projection
-    (§18.2.5), LIMIT making the ordering observable in the result set."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_orderexpr
-
-    return run_tpch_sparql_orderexpr(spark, sf_dir)
-
-
-def q_sparql_selectexpr_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-aggregation SELECT expressions (r4): (?s - ?n) over
-    aggregate aliases and UCASE(STR(?key)) over a group key, evaluated
-    after the groupBy per SPARQL 1.1 section 18.2.4.4."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_selectexpr
-
-    return run_tpch_sparql_selectexpr(spark, sf_dir)
-
-
-def q_sparql_having_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw aggregate calls in HAVING and ORDER BY (r4): hoisted into
-    internal aliased items computed by the same groupBy."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_having
-
-    return run_tpch_sparql_having(spark, sf_dir)
-
-
-def q_sparql_aggexpr_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate over an expression (r4): SUM(?k * 2 + 1) per nation —
-    the TPC-H Q1 shape; the argument evaluates as a hidden
-    pre-aggregation BIND."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_aggexpr
-
-    return run_tpch_sparql_aggexpr(spark, sf_dir)
-
-
-def q_sparql_pathn_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded path quantifier p{n,m} (r5): (inNation|inRegion){1,2}
-    desugared to the alternation of 1- and 2-fold sequences (§9.3 bag
-    union) — nation at one step, region at two."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_pathn
-
-    return run_tpch_sparql_pathn(spark, sf_dir)
-
-
-def q_sparql_graph_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Named graphs (r5): rr:graphMap-materialized quads + GRAPH ?g
-    aggregation — per-provenance-graph triple counts over the
-    per-nation customer graphs (§13.3; the reference's rr:graphMap is
-    a log-only stub, Parser.java:241-270)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_graph
-
-    return run_tpch_sparql_graph(spark, sf_dir)
-
-
-def q_sparql_graphiri_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GRAPH <iri> dataset slice joined with a GRAPH ?g block (r5):
-    nation names live only in the constant reference graph, inNation
-    edges in per-nation graphs — the join crosses graph boundaries
-    through the shared variable."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_graphiri
-
-    return run_tpch_sparql_graphiri(spark, sf_dir)
-
-
-def q_sparql_nested_exists_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXISTS nested inside EXISTS (late r4): recursive
-    Filter(EXISTS(P), G) — the inner probe filters the outer probe's
-    solutions before the outer semi-join."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_nested_exists
-
-    return run_tpch_sparql_nested_exists(spark, sf_dir)
-
-
-def q_sparql_subq_postagg_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-aggregation SELECT expression INSIDE a { SELECT } subquery
-    (late r4, §18.2.4.4): (SUM(?k) * 2 - COUNT(?k) AS ?adj) with
-    subquery HAVING, group key joined to the outer pattern, derived
-    alias carried through and sorted numerically."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_subq_postagg
-
-    return run_tpch_sparql_subq_postagg(spark, sf_dir)
-
-
-def q_sparql_twosided_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sided unbound-compatible join (late r4): two mixed-variable
-    UNIONs sharing ?seg, which either side may leave unbound — the
-    slice-pair decomposition (full §18.5 Join compatibility)."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_twosided
-
-    return run_tpch_sparql_twosided(spark, sf_dir)
-
-
-def q_sparql_cast_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """XPath constructor casts (late r4, §17.5): SUBSTR + xsd:integer
-    over the customer name drives a numeric FILTER."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_cast
-
-    return run_tpch_sparql_cast(spark, sf_dir)
 
 
 def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -536,66 +87,6 @@ def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scrub_pii(seeded).select(
         "doc_id", "text", "n_email", "n_phone", "n_ipv4"
     )
-
-
-def q_triple_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed triple-level P/R (r4): the north rule's own
-    acceptance metric ("matching the reference's emitted (subj, pred,
-    obj) triples, P/R >= 0.95") as a Spark job — got = the TPC-H KG
-    minus its ex:segment triples plus one synthetic wrong triple,
-    expected = the full KG, so precision < 1 and recall < 1 are both
-    exercised with closed-form values at any SF."""
-    from r2rml_parser_spark.operators.evaluate import triple_prf
-    from r2rml_parser_spark.tpch_kg import KG, ONT, build_tpch_kg
-
-    kg = build_tpch_kg(spark, sf_dir).localCheckpoint(eager=False)
-    bogus = spark.createDataFrame(
-        [
-            (
-                f"{KG}/synthetic/x",
-                "iri",
-                f"{ONT}bogus",
-                f"{KG}/synthetic/y",
-                "iri",
-                None,
-                None,
-            )
-        ],
-        "subj string, subj_kind string, pred string, obj string, "
-        "obj_kind string, lang string, dtype string",
-    )
-    got = kg.where(F.col("pred") != f"{ONT}segment").unionByName(bogus)
-    return triple_prf(got, kg)
-
-
-def q_sparql_describe_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL DESCRIBE (concise bounded description) of every Nation
-    in the generated KG."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_describe
-
-    return run_tpch_sparql_describe(spark, sf_dir)
-
-
-def q_sparql_subquery_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL subquery (aggregate-then-join) over the generated KG."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_subquery
-
-    return run_tpch_sparql_subquery(spark, sf_dir)
-
-
-def q_sparql_groupconcat_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL GROUP_CONCAT(DISTINCT)/SAMPLE aggregates over the KG."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_groupconcat
-
-    return run_tpch_sparql_groupconcat(spark, sf_dir)
-
-
-def q_sparql_datetime_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPARQL datetime accessors (YEAR/HOURS) over an events KG with
-    canonical xsd:dateTime literals."""
-    from r2rml_parser_spark.tpch_kg import run_tpch_sparql_datetime
-
-    return run_tpch_sparql_datetime(spark, sf_dir)
 
 
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -856,65 +347,13 @@ def q_docs_reassembled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from r2rml_parser_spark.tpch_kg import CASES, run_case
+
     return {
         "kg_docs_triples": q_kg_docs_triples,
-        "kg_tpch_triples": q_kg_tpch_triples,
-        "sparql_kg": q_sparql_kg,
-        "sparql_store_kg": q_sparql_store_kg,
-        "sparql_store_graph_kg": q_sparql_store_graph_kg,
-        "sparql_agg_kg": q_sparql_agg_kg,
-        "sparql_typed_kg": q_sparql_typed_kg,
-        "sparql_str_kg": q_sparql_str_kg,
-        "sparql_exists_kg": q_sparql_exists_kg,
-        "sparql_construct_kg": q_sparql_construct_kg,
-        "sparql_path_kg": q_sparql_path_kg,
-        "sparql_closure_kg": q_sparql_closure_kg,
-        "sparql_closure_seeded_kg": q_sparql_closure_seeded_kg,
-        "sparql_pathx_kg": q_sparql_pathx_kg,
-        "sparql_union_kg": q_sparql_union_kg,
-        "sparql_optfilter_kg": q_sparql_optfilter_kg,
-        "sparql_exists_expr_kg": q_sparql_exists_expr_kg,
-        "sparql_alt_opt_kg": q_sparql_alt_opt_kg,
-        "sparql_npspath_kg": q_sparql_npspath_kg,
-        "sparql_groupbind_kg": q_sparql_groupbind_kg,
-        "sparql_boolbind_kg": q_sparql_boolbind_kg,
-        "kg_pagerank": q_kg_pagerank,
-        "kg_negatives": q_kg_negatives,
-        "sparql_twoside_filter_kg": q_sparql_twoside_filter_kg,
-        "sparql_ebv_kg": q_sparql_ebv_kg,
-        "sparql_existsnull_kg": q_sparql_existsnull_kg,
-        "sparql_arith_kg": q_sparql_arith_kg,
-        "sparql_values_kg": q_sparql_values_kg,
-        "sparql_aggdistinct_kg": q_sparql_aggdistinct_kg,
-        "sparql_aggsem_kg": q_sparql_aggsem_kg,
-        "sparql_latejoin_kg": q_sparql_latejoin_kg,
-        "sparql_minus_scope_kg": q_sparql_minus_scope_kg,
-        "sparql_timeline_kg": q_sparql_timeline_kg,
-        "sparql_minus_timeline_kg": q_sparql_minus_timeline_kg,
-        "sparql_optcompat_kg": q_sparql_optcompat_kg,
-        "sparql_optdisjoint_kg": q_sparql_optdisjoint_kg,
-        "sparql_nestedopt_kg": q_sparql_nestedopt_kg,
-        "sparql_unionopt_kg": q_sparql_unionopt_kg,
-        "sparql_twoside_left_kg": q_sparql_twoside_left_kg,
-        "sparql_minusopt_kg": q_sparql_minusopt_kg,
-        "sparql_orderexpr_kg": q_sparql_orderexpr_kg,
-        "sparql_selectexpr_kg": q_sparql_selectexpr_kg,
-        "sparql_having_kg": q_sparql_having_kg,
-        "sparql_aggexpr_kg": q_sparql_aggexpr_kg,
-        "sparql_nested_exists_kg": q_sparql_nested_exists_kg,
-        "sparql_subq_postagg_kg": q_sparql_subq_postagg_kg,
-        "sparql_twosided_kg": q_sparql_twosided_kg,
-        "sparql_cast_kg": q_sparql_cast_kg,
-        "sparql_pathn_kg": q_sparql_pathn_kg,
-        "sparql_graph_kg": q_sparql_graph_kg,
-        "sparql_graphiri_kg": q_sparql_graphiri_kg,
+        **{name: partial(run_case, case=case) for name, case in CASES.items()},
         "domain_mix": q_domain_mix,
         "scrub_pii": q_scrub_pii,
-        "triple_prf": q_triple_prf,
-        "sparql_describe_kg": q_sparql_describe_kg,
-        "sparql_subquery_kg": q_sparql_subquery_kg,
-        "sparql_groupconcat_kg": q_sparql_groupconcat_kg,
-        "sparql_datetime_kg": q_sparql_datetime_kg,
         "span_view": q_span_view,
         "mentions": q_mentions,
         "pack_sequences": q_pack_sequences,
@@ -953,63 +392,7 @@ def oracle_sql() -> dict[str, str]:
     from r2rml_parser_spark.operators.multimodal import media_features_sql
     from r2rml_parser_spark.pipeline import kg_oracle_sql
     from r2rml_parser_spark.sources.docs import SPAN_VIEW_ORACLE_SQL
-    from r2rml_parser_spark.tpch_kg import (
-        KG as TPCH_KG_NS,
-        ONT as TPCH_ONT,
-        TPCH_KG_ORACLE_SQL,
-        TPCH_SPARQL_AGG_ORACLE_SQL,
-        TPCH_SPARQL_ORACLE_SQL,
-        TPCH_SPARQL_CLOSURE_ORACLE_SQL,
-        TPCH_SPARQL_CLOSURE_SEEDED_ORACLE_SQL,
-        TPCH_SPARQL_PATHX_ORACLE_SQL,
-        TPCH_SPARQL_CONSTRUCT_ORACLE_SQL,
-        TPCH_SPARQL_DATETIME_ORACLE_SQL,
-        TPCH_SPARQL_DESCRIBE_ORACLE_SQL,
-        TPCH_SPARQL_EXISTS_ORACLE_SQL,
-        TPCH_SPARQL_EXISTS_EXPR_ORACLE_SQL,
-        TPCH_SPARQL_ALT_OPT_ORACLE_SQL,
-        TPCH_SPARQL_NPSPATH_ORACLE_SQL,
-        TPCH_SPARQL_GROUPBIND_ORACLE_SQL,
-        TPCH_SPARQL_BOOLBIND_ORACLE_SQL,
-        TPCH_PAGERANK_ORACLE_SQL,
-        TPCH_NEGATIVES_ORACLE_SQL,
-        TPCH_SPARQL_TWOSIDE_FILTER_ORACLE_SQL,
-        TPCH_SPARQL_EBV_ORACLE_SQL,
-        TPCH_SPARQL_EXISTSNULL_ORACLE_SQL,
-        TPCH_SPARQL_ARITH_ORACLE_SQL,
-        TPCH_SPARQL_VALUES_ORACLE_SQL,
-        TPCH_SPARQL_AGGDISTINCT_ORACLE_SQL,
-        TPCH_SPARQL_AGGSEM_ORACLE_SQL,
-        TPCH_SPARQL_LATEJOIN_ORACLE_SQL,
-        TPCH_SPARQL_MINUS_SCOPE_ORACLE_SQL,
-        TPCH_SPARQL_TIMELINE_ORACLE_SQL,
-        TPCH_SPARQL_MINUS_TIMELINE_ORACLE_SQL,
-        TPCH_SPARQL_OPTCOMPAT_ORACLE_SQL,
-        TPCH_SPARQL_OPTDISJOINT_ORACLE_SQL,
-        TPCH_SPARQL_NESTEDOPT_ORACLE_SQL,
-        TPCH_SPARQL_UNIONOPT_ORACLE_SQL,
-        TPCH_SPARQL_TWOSIDE_LEFT_ORACLE_SQL,
-        TPCH_SPARQL_MINUSOPT_ORACLE_SQL,
-        TPCH_SPARQL_ORDEREXPR_ORACLE_SQL,
-        TPCH_SPARQL_SELECTEXPR_ORACLE_SQL,
-        TPCH_SPARQL_HAVING_ORACLE_SQL,
-        TPCH_SPARQL_AGGEXPR_ORACLE_SQL,
-        TPCH_SPARQL_NESTED_EXISTS_ORACLE_SQL,
-        TPCH_SPARQL_SUBQ_POSTAGG_ORACLE_SQL,
-        TPCH_SPARQL_TWOSIDED_ORACLE_SQL,
-        TPCH_SPARQL_CAST_ORACLE_SQL,
-        TPCH_SPARQL_GRAPH_ORACLE_SQL,
-        TPCH_SPARQL_GRAPHIRI_ORACLE_SQL,
-        TPCH_SPARQL_PATHN_ORACLE_SQL,
-        TPCH_SPARQL_STORE_GRAPH_ORACLE_SQL,
-        TPCH_SPARQL_UNION_ORACLE_SQL,
-        TPCH_SPARQL_OPTFILTER_ORACLE_SQL,
-        TPCH_SPARQL_GROUPCONCAT_ORACLE_SQL,
-        TPCH_SPARQL_SUBQUERY_ORACLE_SQL,
-        TPCH_SPARQL_PATH_ORACLE_SQL,
-        TPCH_SPARQL_STR_ORACLE_SQL,
-        TPCH_SPARQL_TYPED_ORACLE_SQL,
-    )
+    from r2rml_parser_spark.tpch_kg import CASES
 
     span_sql = f"SELECT doc_id, lang, source, kind, text, media_ref, \"offset\" AS span_offset FROM ({SPAN_VIEW_ORACLE_SQL}) v"
     reassembled_sql = f"""
@@ -1030,57 +413,7 @@ SELECT doc_id, CAST(n_spans AS INT) AS n_spans, md5(joined) AS sequence_md5 FROM
 """
     return {
         "kg_docs_triples": kg_oracle_sql(),
-        "kg_tpch_triples": TPCH_KG_ORACLE_SQL,
-        "sparql_kg": TPCH_SPARQL_ORACLE_SQL,
-        # same result set as sparql_kg, read back from the store
-        "sparql_store_kg": TPCH_SPARQL_ORACLE_SQL,
-        "sparql_store_graph_kg": TPCH_SPARQL_STORE_GRAPH_ORACLE_SQL,
-        "sparql_agg_kg": TPCH_SPARQL_AGG_ORACLE_SQL,
-        "sparql_typed_kg": TPCH_SPARQL_TYPED_ORACLE_SQL,
-        "sparql_str_kg": TPCH_SPARQL_STR_ORACLE_SQL,
-        "sparql_exists_kg": TPCH_SPARQL_EXISTS_ORACLE_SQL,
-        "sparql_construct_kg": TPCH_SPARQL_CONSTRUCT_ORACLE_SQL,
-        "sparql_path_kg": TPCH_SPARQL_PATH_ORACLE_SQL,
-        "sparql_closure_kg": TPCH_SPARQL_CLOSURE_ORACLE_SQL,
-        "sparql_closure_seeded_kg": TPCH_SPARQL_CLOSURE_SEEDED_ORACLE_SQL,
-        "sparql_pathx_kg": TPCH_SPARQL_PATHX_ORACLE_SQL,
-        "sparql_union_kg": TPCH_SPARQL_UNION_ORACLE_SQL,
-        "sparql_optfilter_kg": TPCH_SPARQL_OPTFILTER_ORACLE_SQL,
-        "sparql_exists_expr_kg": TPCH_SPARQL_EXISTS_EXPR_ORACLE_SQL,
-        "sparql_alt_opt_kg": TPCH_SPARQL_ALT_OPT_ORACLE_SQL,
-        "sparql_npspath_kg": TPCH_SPARQL_NPSPATH_ORACLE_SQL,
-        "sparql_groupbind_kg": TPCH_SPARQL_GROUPBIND_ORACLE_SQL,
-        "sparql_boolbind_kg": TPCH_SPARQL_BOOLBIND_ORACLE_SQL,
-        "kg_pagerank": TPCH_PAGERANK_ORACLE_SQL,
-        "kg_negatives": TPCH_NEGATIVES_ORACLE_SQL,
-        "sparql_twoside_filter_kg": TPCH_SPARQL_TWOSIDE_FILTER_ORACLE_SQL,
-        "sparql_ebv_kg": TPCH_SPARQL_EBV_ORACLE_SQL,
-        "sparql_existsnull_kg": TPCH_SPARQL_EXISTSNULL_ORACLE_SQL,
-        "sparql_arith_kg": TPCH_SPARQL_ARITH_ORACLE_SQL,
-        "sparql_values_kg": TPCH_SPARQL_VALUES_ORACLE_SQL,
-        "sparql_aggdistinct_kg": TPCH_SPARQL_AGGDISTINCT_ORACLE_SQL,
-        "sparql_aggsem_kg": TPCH_SPARQL_AGGSEM_ORACLE_SQL,
-        "sparql_latejoin_kg": TPCH_SPARQL_LATEJOIN_ORACLE_SQL,
-        "sparql_minus_scope_kg": TPCH_SPARQL_MINUS_SCOPE_ORACLE_SQL,
-        "sparql_timeline_kg": TPCH_SPARQL_TIMELINE_ORACLE_SQL,
-        "sparql_minus_timeline_kg": TPCH_SPARQL_MINUS_TIMELINE_ORACLE_SQL,
-        "sparql_optcompat_kg": TPCH_SPARQL_OPTCOMPAT_ORACLE_SQL,
-        "sparql_optdisjoint_kg": TPCH_SPARQL_OPTDISJOINT_ORACLE_SQL,
-        "sparql_nestedopt_kg": TPCH_SPARQL_NESTEDOPT_ORACLE_SQL,
-        "sparql_unionopt_kg": TPCH_SPARQL_UNIONOPT_ORACLE_SQL,
-        "sparql_twoside_left_kg": TPCH_SPARQL_TWOSIDE_LEFT_ORACLE_SQL,
-        "sparql_minusopt_kg": TPCH_SPARQL_MINUSOPT_ORACLE_SQL,
-        "sparql_orderexpr_kg": TPCH_SPARQL_ORDEREXPR_ORACLE_SQL,
-        "sparql_selectexpr_kg": TPCH_SPARQL_SELECTEXPR_ORACLE_SQL,
-        "sparql_having_kg": TPCH_SPARQL_HAVING_ORACLE_SQL,
-        "sparql_aggexpr_kg": TPCH_SPARQL_AGGEXPR_ORACLE_SQL,
-        "sparql_nested_exists_kg": TPCH_SPARQL_NESTED_EXISTS_ORACLE_SQL,
-        "sparql_subq_postagg_kg": TPCH_SPARQL_SUBQ_POSTAGG_ORACLE_SQL,
-        "sparql_twosided_kg": TPCH_SPARQL_TWOSIDED_ORACLE_SQL,
-        "sparql_cast_kg": TPCH_SPARQL_CAST_ORACLE_SQL,
-        "sparql_pathn_kg": TPCH_SPARQL_PATHN_ORACLE_SQL,
-        "sparql_graph_kg": TPCH_SPARQL_GRAPH_ORACLE_SQL,
-        "sparql_graphiri_kg": TPCH_SPARQL_GRAPHIRI_ORACLE_SQL,
+        **{name: case.oracle for name, case in CASES.items()},
         "domain_mix": """
 SELECT doc_id, lang FROM documents
 WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 15) <
@@ -1113,37 +446,6 @@ SELECT doc_id,
        CAST(len(regexp_extract_all(t2, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS BIGINT) AS n_ipv4
 FROM s2
 """,
-        # the intersect computes |got ∩ expected| independently of how
-        # the driver query perturbed the got side (set semantics,
-        # NULL-equal — same as Spark INTERSECT)
-        "triple_prf": f"""
-WITH triples AS ({TPCH_KG_ORACLE_SQL}),
-got AS (
-  SELECT * FROM triples WHERE pred <> '{TPCH_ONT}segment'
-  UNION ALL
-  SELECT '{TPCH_KG_NS}/synthetic/x', 'iri', '{TPCH_ONT}bogus',
-         '{TPCH_KG_NS}/synthetic/y', 'iri', NULL, NULL
-),
-n AS (
-  SELECT
-    (SELECT COUNT(*) FROM got) AS got_n,
-    (SELECT COUNT(*) FROM triples) AS expected_n,
-    (SELECT COUNT(*) FROM
-       (SELECT * FROM got INTERSECT SELECT * FROM triples)) AS matched
-)
-SELECT CAST(got_n AS BIGINT) AS got_n,
-       CAST(expected_n AS BIGINT) AS expected_n,
-       CAST(matched AS BIGINT) AS matched,
-       matched * 1.0 / got_n AS "precision",
-       matched * 1.0 / expected_n AS recall,
-       2.0 * (matched * 1.0 / got_n) * (matched * 1.0 / expected_n)
-         / ((matched * 1.0 / got_n) + (matched * 1.0 / expected_n)) AS f1
-FROM n
-""",
-        "sparql_describe_kg": TPCH_SPARQL_DESCRIBE_ORACLE_SQL,
-        "sparql_subquery_kg": TPCH_SPARQL_SUBQUERY_ORACLE_SQL,
-        "sparql_groupconcat_kg": TPCH_SPARQL_GROUPCONCAT_ORACLE_SQL,
-        "sparql_datetime_kg": TPCH_SPARQL_DATETIME_ORACLE_SQL,
         "span_view": span_sql,
         "mentions": mentions_oracle_sql(SPAN_VIEW_ORACLE_SQL),
         "pack_sequences": oracles.pack_sequences_sql(5000),

@@ -149,9 +149,6 @@ def main() -> None:
                     help="interleaved (N,4N) pairs for --scaling (median kept)")
     ap.add_argument("--query-repeats", type=int, default=3,
                     help="driver-mode repeats per query/build (median kept)")
-    ap.add_argument("--no-isolate", action="store_true",
-                    help="scaling: reuse one JVM across cold runs (the r1-r3 "
-                         "methodology) instead of a fresh process per run")
     ap.add_argument("--one-build", type=int, metavar="CORES",
                     help="(worker) one isolated cold build at CORES on --sf-dir")
     ap.add_argument("--one-envelope", type=int, metavar="CORES",
@@ -191,13 +188,6 @@ def main() -> None:
     if args.scaling:
         import tempfile
 
-        from pyspark.sql import functions as F
-        from pyspark.sql import SparkSession
-
-        def _fresh(cores: int):
-            SparkSession.builder._options = {}
-            return _session(cores)
-
         # N vs 4N cores, both ≤ a quarter of the host's 32 physical
         # cores: a config that saturates the host measures
         # shared-resource contention (one JVM heap, memory bandwidth,
@@ -222,8 +212,6 @@ def main() -> None:
         #     in the same JVM — vs 5s in a fresh process). Per-process
         #     isolation is also the honest model of the north rule's
         #     actual setting: cluster executors launch as fresh JVMs.
-        #     (--no-isolate keeps the old shared-JVM mode for
-        #     comparability with r1-r3 numbers.)
         #   * efficiency is computed per pair; the MEDIAN pair is the
         #     headline (ADVICE r2: max-of-N of noisy ratios is biased
         #     upward — an unusually slow small-core run inflates a pair
@@ -234,13 +222,11 @@ def main() -> None:
         #     host conditions move it by several points day to day.
         small = args.scale_small or max(args.cpus // 16, 1)
         big = args.scale_big or (4 * small if args.scale_small else max(args.cpus // 4, 2))
-        spark = _fresh(big)
+        spark = _session(big)
         scaled_dir = _materialize_scaled_corpus(
             spark, args.sf_dir, args.replicas,
             tempfile.mkdtemp(prefix="r2rml_bench_scale_"),
         )
-        if args.no_isolate:
-            kg_throughput(spark, "/root/testdata/sf0.001")  # warmup/JIT
         spark.stop()
 
         import subprocess
@@ -257,17 +243,7 @@ def main() -> None:
         # same-day machine envelope: memory-bandwidth-bound codegen job
         envelope = {}
         for cores in (small, big):
-            if args.no_isolate:
-                s2 = _fresh(cores)
-                rng = s2.range(0, 60_000_000, 1, cores * 4)
-                expr = F.sum(F.xxhash64(F.md5(F.concat(F.col("id").cast("string"), F.lit("x")))))
-                rng.select(expr).collect()  # warm
-                t0 = time.monotonic()
-                rng.select(expr).collect()
-                envelope[cores] = time.monotonic() - t0
-                s2.stop()
-            else:
-                envelope[cores] = _worker("--one-envelope", cores, args.sf_dir)["sec"]
+            envelope[cores] = _worker("--one-envelope", cores, args.sf_dir)["sec"]
         env_eff = (envelope[small] / envelope[big]) / (big / small)
 
         pairs = []
@@ -275,13 +251,8 @@ def main() -> None:
         for _ in range(args.repeats):
             pair = {}
             for cores in (small, big):
-                if args.no_isolate:
-                    s2 = _fresh(cores)
-                    tps, n, dt = kg_throughput(s2, scaled_dir)
-                    s2.stop()
-                else:
-                    r = _worker("--one-build", cores, scaled_dir)
-                    tps, n, dt = r["tps"], r["n"], r["dt"]
+                r = _worker("--one-build", cores, scaled_dir)
+                tps, n, dt = r["tps"], r["n"], r["dt"]
                 pair[cores] = (tps, n, dt)
                 runs[cores].append((tps, n, dt))
             pairs.append(round((pair[big][0] / pair[small][0]) / (big / small), 3))
@@ -304,7 +275,7 @@ def main() -> None:
             "best_pair_efficiency": max(pairs),
             "pair_efficiencies": pairs,
             "machine_envelope_efficiency": round(env_eff, 3),
-            "isolation": "process-per-run" if not args.no_isolate else "shared-jvm",
+            "isolation": "process-per-run",
         }))
         return
 

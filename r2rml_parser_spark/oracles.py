@@ -4,9 +4,14 @@ Each SQL string reproduces the matching Spark operator bit-for-bit on
 the same parquet tables (md5-based hashing, identical fold formulas,
 rounded doubles) so the driver's row-count + schema + value-hash
 comparison passes. Kept next to each other so drift is reviewable.
+``duckdb_views`` and ``canonical_rows`` are the exact-compare helpers
+that run an oracle and compare its rows with Spark's.
 """
 
 from __future__ import annotations
+
+import math
+import os
 
 from r2rml_parser_spark.operators.dedup import N_BANDS, N_HASHES, SHINGLE_K
 from r2rml_parser_spark.operators.mentions import ENTITY_DICT  # noqa: F401 (reused by callers)
@@ -450,3 +455,60 @@ SELECT doc_id,
        round(CAST(top AS DOUBLE) / n_grams, 6) AS top_gram_frac
 FROM s
 """
+
+
+# -- exact compare ------------------------------------------------------
+
+TABLES = (
+    "region nation customer supplier part orders lineitem events "
+    "documents embeddings"
+).split()
+
+
+def duckdb_views(sf_dir: str):
+    """A DuckDB connection with one view per parquet table in ``sf_dir``."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.exists(path):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+    return con
+
+
+def _canon(v):
+    """EXACT canonicalization — no rounding.
+
+    r4 post-mortem (VERDICT "What's wrong" #4): the old ``round(v, 9)``
+    here was looser than the driver's value hash, so five dtype/rounding
+    divergences sailed through an "82/82 green" local sweep and surfaced
+    only in CORRECTNESS_r04.json. The driver hashes pandas-materialized
+    values, where representation matters: int64 != float64, Decimal !=
+    float, scale-12 Decimal != scale-0 Decimal. Mirror that by keying on
+    (type, exact repr) so pytest fails exactly where the driver fails."""
+    if v is None:
+        return "\x00<NULL>"
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        return ("float", repr(v))
+    if isinstance(v, bool):
+        return ("bool", v)
+    if isinstance(v, int):
+        return ("int", v)
+    if isinstance(v, (str, bytes)):
+        return v
+    return (type(v).__name__, str(v))
+
+
+def canonical_rows(cols, data):
+    """Rows of ``data`` (columns named ``cols``) as tuples of canonical
+    values, columns in name order and rows sorted, so a Spark result and
+    its DuckDB oracle compare with ``==``."""
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    # key=repr: canon values are heterogeneous (str / tuple / int), which
+    # Python won't order directly in a NULL-and-number column.
+    return sorted(
+        (tuple(_canon(r[i]) for i in order) for r in data), key=repr
+    )
