@@ -47,14 +47,8 @@ distributes into a same-endpoints UNION of branches (bag semantics
 keep per-alternative multiplicity), and a simple forward alternation
 ``(p1|p2|...)`` over pairwise-distinct IRIs collapses to ONE
 ``pred IN``-filtered scan (exact: each triple matches exactly one
-branch); INSIDE braced graph-pattern groups —
-OPTIONAL/UNION/EXISTS/MINUS — a simple alternation takes that same
-one-scan form, and (r4) alternation branches carrying sequences,
-inverses, or closures compile to ONE derived-relation pattern
-(``_path_relation``: recursive union/join evaluation of the path's
-binary relation, bag semantics for sequences/alternation, set for
-closures) since alternation cannot distribute into a top-level UNION
-there; closures follow §18.4 reachability SET
+branch) — in every braced group alike; closures follow §18.4
+reachability SET
 semantics, evaluated eagerly by path-doubling joins with
 localCheckpoint lineage truncation (log₂(diameter) rounds), where
 ``*`` / ``?`` include the zero-length identity over every graph node
@@ -72,76 +66,9 @@ inverse members to its endpoint flip (``!(F|^I)`` ≡ ``!F | ^!I``,
 the spec's stated equivalence), and the set composes with
 sequences, alternation, inverses, and closures like any element
 (``!p/q``, ``!(a|b)+``),
-OPTIONAL { t1 . t2 ... } groups (compiled to left joins; a group
-sharing NO variable with the solutions-so-far is (full r4, formerly
-rejected) the disjoint-domain LeftJoin — a bag cross product when the
-group matches, pass-through with the group's variables unbound when
-it is empty — and a join variable an earlier OPTIONAL / mixed-variable
-UNION / VALUES UNDEF / BIND may have left unbound takes (full r4,
-formerly rejected) the single-sided LEFT compatible-join
-decomposition: the outer relation is sliced by which nullable keys
-are bound, each slice LEFT-joins the group on its effective keys, an
-unbound-key row takes the group's binding when matched and stays
-unbound when not — §18.5's kept-μ case exactly; nested OPTIONALs
-inside an OPTIONAL group compile recursively to ARBITRARY depth as
-LeftJoin(A, B) within the group, and (late r4, formerly rejected) the
-nested LeftJoin takes the SAME general forms as the top-level one: a
-nested group sharing no variable with its parent is the
-disjoint-domain LeftJoin (cross product when it matches,
-pass-through-unbound when empty), a join key an EARLIER nested
-OPTIONAL in the same group left nullable takes the single-sided LEFT
-compatible-join slice decomposition, a deferred cross-group
-filter composes with both, and a join key nullable on the NESTED
-side itself — bound only inside a deeper OPTIONAL of the nested
-group, possibly nullable on the parent side too — takes the
-TWO-SIDED compatible LEFT join (late r4, formerly the last LeftJoin
-rejection): Join(A,G) by the two-sided slice decomposition ⊎ the
-kept-μ1 rows computed by folded anti-joins across G's bound-mask
-slices (the same forms apply at the TOP level when the OPTIONAL
-group's own nested OPTIONALs leave a shared key nullable); the
-cross-group-filter × two-sided combination composes too (late r4
-session 2 — the LAST formerly-rejected LeftJoin form): F filters the
-merged Join half and rides every Diff anti join as a per-pair ON
-conjunct with slice-wise renames, so NO LeftJoin form is rejected
-any more, and a
-pattern
-following a nested OPTIONAL inside the group must not share its
-variables (textual-order rule); a group FILTER
-may reference variables of the immediately enclosing group/query —
-SPARQL's LeftJoin(A, G, F) with a cross-group F — compiled INTO the
-left-join condition (equi-keys ∧ F), which reproduces both the
-Filter(F, Join) and the Diff(A, G, F) halves including error→false;
-late r4: a cross-group F also composes with the LEFT compatible-join
-decomposition (nullable or absent join keys) as an extra ON conjunct
-per slice, G-variable references renamed so an unbound key's
-reference resolves to G's merged binding; r5: filters reaching TWO
-levels out — or referencing variables bound NOWHERE — evaluate with
-those references UNBOUND at the filter's own LeftJoin per §18.2
-scoping (fresh always-NULL term columns: value tests error→false,
-bound() false, !bound() true), pinned by a hypothesis differential;
-only the combined cross-group + unbound form and EXISTS-carrying
-unscoped filters keep a clean rejection), { A } UNION
-{ B } blocks (branches may bind DIFFERENT variables per SPARQL 1.1 —
-a variable missing from a branch is unbound there, padded as NULL and
-tracked; a branch may carry its own OPTIONAL groups (late r4,
-formerly rejected): the branch compiles as a group through the same
-recursive LeftJoin machinery as an OPTIONAL group — nested OPTIONALs,
-group BINDs, group EXISTS, branch-local filters — and the variables
-its OPTIONALs/BINDs may leave unbound join the union's nullable set
-so downstream joins decompose exactly, while a branch filter
-referencing a variable bound only outside the branch evaluates with
-it UNBOUND (r5, formerly rejected — SPARQL evaluates each branch
-independently, so the reference NULL-substitutes); the union is a bag union, and any later join on a
-possibly-unbound variable takes an EXACT compatible-join
-decomposition: EACH side is partitioned by which of its nullable
-keys are bound — 2^kl × 2^kr slice pairs, kl + kr ≤ 4 — each pair
-equi-joins on the keys bound on both sides, a variable bound on one
-side takes that binding, and one bound on neither stays unbound
-(late r4: this covers variables nullable on BOTH sides — full §18.5
-Join compatibility, no rejection left); the same decomposition
-applies when a { SELECT } subquery projects a variable its inner
-OPTIONAL/UNION may leave unbound, and to VALUES blocks joining a
-mixed-variable union), FILTER (x op y) for op ∈ {=, !=, <, <=, >, >=} where
+OPTIONAL / UNION / MINUS / VALUES / { SELECT } / GRAPH / BIND
+elements and FILTERs in braced groups (the group grammar below),
+FILTER (x op y) for op ∈ {=, !=, <, <=, >, >=} where
 x/y are variables, terms, bare numbers, or the accessors ``lang(?v)``
 / ``datatype(?v)`` / ``STR(?v)`` (STR yields the lexical form / IRI
 string as a simple literal and never errors on bound terms), the
@@ -197,74 +124,10 @@ All of these compose inside one FILTER
 with ``!``, ``&&``, ``||`` and parentheses (SPARQL Expression
 grammar, standard precedence); Spark's Kleene three-valued booleans
 reproduce SPARQL's error propagation exactly (TRUE || error = TRUE,
-FALSE && error = FALSE, !error = error → row dropped) — at the top
-level or inside an OPTIONAL/UNION group when every filter variable is
-bound inside that group (the pre-join filter is then equivalent to
-SPARQL's LeftJoin(A, G, F) / branch-local filter; a filter needing
-variables from OUTSIDE its group is rejected) — FILTER [NOT]
-EXISTS { t1 . t2 ... [FILTER ...] } at the top level of WHERE,
-compiled to a semi/anti join on the shared term keys; a shared
-variable an earlier OPTIONAL may have left unbound takes §18.6
-substitution semantics exactly (late r4): the outer relation is
-sliced by which nullable keys are bound (the single-sided twin of
-the §18.5 compatible-join decomposition) and each slice tests on its
-effective keys — an all-unbound slice reduces to the probe's
-non-emptiness — and an EXISTS sharing NO variable is a per-query
-constant (substituting nothing leaves the pattern as-is: one
-emptiness probe keeps or empties the relation); [NOT] EXISTS also
-composes INSIDE boolean FILTER expressions
-(``FILTER (EXISTS {…} || ?x > 5)``)
-at the top level of WHERE — compiled to a per-row boolean flag via a
-left join against the group's distinct shared term keys (never
-multiplies rows; an EXISTS sharing no variable is evaluated once as a
-constant, and possibly-unbound shared variables take the same
-slice decomposition, each slice attaching its flag on its effective
-keys; late r4: every EXISTS probe group — standalone and
-boolean-expression — also accepts nested OPTIONALs, group BINDs, and
-statement-level FILTER [NOT] EXISTS of its own, all compiled through
-the shared group compiler (LeftJoin/Extend never remove a probe
-solution, so the existence test is unchanged);
-r4: FILTER [NOT] EXISTS also compiles INSIDE OPTIONAL
-groups at any nesting depth — Filter(EXISTS(P), G) as a semi/anti
-join on the group's solutions, correlated through variables the
-group itself binds; an EXISTS inside a group correlating only with
-outer-bound variables is rejected (its §18.6 substitution would need
-the outer relation at bottom-up group compile time), as is EXISTS
-nested inside a BIND expression; a group EXISTS sharing nothing is a
-constant over the
-group, and one joining on nested-OPTIONAL-nullable variables takes
-the slice decomposition (late r4);
-a statement-level FILTER [NOT] EXISTS nested inside
-another EXISTS group compiles recursively (r4) — each level is a
-semi/anti join over its own group's solutions, correlated through
-variables that group binds; r4: FILTER [NOT] EXISTS also
-compiles INSIDE UNION branches and INSIDE MINUS groups —
-Filter(EXISTS(P), G) as a semi/anti join over the branch's/group's own
-solutions before the union/anti-join, correlated through variables
-that group itself binds) — MINUS { t1 ... }
-(SPARQL 1.1 §8.3: an anti join on the shared term keys; a MINUS
-sharing no variable with
-the rest of the query removes nothing and compiles away, a
-shared variable an earlier OPTIONAL may have left unbound slices
-like EXISTS's — with the all-unbound slice KEPT, §8.3's
-disjoint-domain rule (late r4) — and the MINUS group may carry its
-own nested OPTIONALs (late r4): a shared key they leave nullable
-takes the TWO-sided §8.3 slice decomposition, where a slice pair
-with no effective key has disjoint domains and removes nothing;
-EXISTS probe groups accept nested OPTIONALs too — LeftJoin never
-removes a probe solution, so the existence test is unchanged, and a
-correlation key bound only inside the probe's OPTIONAL leaves the
-correlation when the probe carries no top-level filter/nested EXISTS
-(existence is then provably independent of it — nothing can remove a
-probe base solution; late r4, formerly rejected), the rejection
-remaining only for probes whose filters/EXISTS could consume the
-substituted key) —
-BIND(expr AS ?v) at the top
-level of WHERE and (r4) INSIDE OPTIONAL/UNION/MINUS groups (evaluated
-over the group's own solutions in textual order, visible to the
-group's filters/EXISTS, nullable to the outer query; expressions
-referencing outer-only or textually-later variables and targets
-colliding with outer variables are rejected, not mis-evaluated) (expr: any FILTER operand — terms, variables,
+FALSE && error = FALSE, !error = error → row dropped); [NOT] EXISTS
+{ … } composes inside any of them as a per-row flag (a left join
+against the probe's distinct shared term keys — never multiplies
+rows), BIND(expr AS ?v) (expr: any FILTER operand — terms, variables,
 lang()/datatype()/STR(), string functions, arithmetic, and the
 §17.4 generator builtins (late r4): NOW() (one xsd:dateTime instant
 per QUERY, captured at parse — every NOW() in the query returns the
@@ -282,30 +145,15 @@ argument is a type error → unbound), COALESCE(e1, e2, ...) (first
 non-error value, term components follow the winning argument), and
 IF(boolexpr, then, else) (any FILTER boolean as the condition; a
 condition ERROR makes the IF an error → unbound) over them, nested,
-and (late r4, formerly rejected) BOOLEAN-valued expressions as
+and BOOLEAN-valued expressions as
 values per §17.2 — BIND(?x > 5 AS ?b), SELECT ((?a = ?b) AS ?same),
 any comparison/builtin-test/&&/||/! ladder, and [NOT] EXISTS { … }
 bare or anywhere in the ladder (BIND(EXISTS { ?p :knows ?o } AS
 ?k), IF(NOT EXISTS {…}, "leaf", "hub")) — minting
 "true"/"false"^^xsd:boolean terms, an evaluation error → unbound;
-the EXISTS probe flags against the relation AT THE BIND'S OWN
-timeline point, so §18.6 substitutes exactly dom(μ) of the
-group-so-far: a probe variable a textually LATER pattern binds
-stays probe-local (the guard exempts exists_e subtrees), a
-nullable correlation key takes the same slice decomposition as
-FILTER-expression EXISTS; EXISTS in GROUP binds (OPTIONAL/UNION/
-MINUS) compiles too (late r4) — the probe flags against the GROUP'S
-own solutions at the bind's textual point, bottom-up scoping exactly
-like group FILTER EXISTS (variables the group-so-far does not bind
-are probe-local; nullable keys slice; the inert-probe-key
-refinement applies); evaluated after patterns/OPTIONALs and visible to
-FILTERs/projection/ORDER BY/CONSTRUCT templates; per SPARQL 1.1
-§10.1 an evaluation error leaves ?v unbound with the row KEPT; using
-?v in a later triple pattern or group is rejected via the
-already-bound/nullable checks, not re-ordered, and a BIND whose
-expression references a variable first bound by a textually LATER
-pattern/OPTIONAL/BIND is rejected too — SPARQL evaluates BIND over
-the group-so-far, where that variable is still unbound) — { SELECT ... } subqueries
+an EXISTS in a BIND substitutes exactly the group-so-far's dom(μ);
+per SPARQL 1.1 §10.1 an evaluation error leaves ?v unbound with the
+row KEPT) — { SELECT ... } subqueries
 in the main WHERE (evaluated bottom-up and joined on their plain
 projected variables with FULL term keys; COUNT/SUM/AVG aliases reach
 the outer query as typed xsd:integer/xsd:decimal derived literals in
@@ -408,26 +256,40 @@ the numeric minimum and MAX the codepoint maximum of the non-numeric
 terms (strict SPARQL errors a mixed group; the total order is the
 documented deterministic choice, aligned with ORDER BY).
 
-Pattern order (full r4 — the TEXTUAL TIMELINE): the parser records
-every order-sensitive element — OPTIONAL, MINUS, BIND — plus every
-join element (triple-pattern run, UNION, VALUES, subquery) that
-shares a variable an earlier such element may have left unbound,
-keyed on, or consumed, in textual order, and the compiler folds over
-that timeline applying each at its own position: Join(LeftJoin(A,G),B),
-Join(Minus(A,M),B), Join(Extend(A,?v,e),B), exactly as §18.2
-translates the group (the shared variable may be unbound on the
-left of any of these joins, where the §18.5 compatible join binds it
-from the right side). Join elements sharing none of those variables
-hoist BEFORE the timeline — exact, because SPARQL Join is
-commutative and associative and the guard set covers every variable
-the non-commuting operators observe. This subsumes and replaces the
-former ADVICE-r2 rejections (UNION/VALUES/subquery after an OPTIONAL
-sharing its variables, any element after a MINUS sharing its
-compatibility domain) with exact evaluation, and fixes a silent
-mis-evaluation where a BIND textually before a late pattern read the
-pattern's REBOUND value instead of the group-so-far's unbound one;
-a hypothesis differential test folds random element sequences
-against an independent naive §18.2 evaluator to pin the walk.
+The group grammar: every braced group — the WHERE clause, OPTIONAL,
+MINUS, UNION branches, GRAPH blocks, EXISTS probes — parses with one
+``_Parser._group`` into its elements in textual order plus its
+filters, and compiles with one ``_compile_group`` by §18.2's
+translation. The one rule: every braced group takes the full group
+grammar; elements that share no order-sensitive variable hoist, the
+rest fold in textual order. OPTIONAL (LeftJoin), MINUS (Minus, §8.3
+domain = the variables bound at its textual point) and BIND (Extend)
+apply at their own textual positions, and so does every join element
+(triple pattern, UNION, VALUES, subquery, GRAPH) sharing a variable
+one of them leaves unbound, keys on, or consumes: Join(LeftJoin(A,G),B)
+exactly. Join elements sharing none hoist before them as one BGP —
+exact, since Join is commutative and associative. Joins on possibly-
+unbound variables take the §18.5 compatible join (``_compat_join``:
+bound-mask slices of either side, each slice pair joining on its
+effective keys), so OPTIONAL/UNION/VALUES UNDEF/BIND nullables compose
+everywhere. Filters apply over the whole group: a filter referencing
+the left side of an OPTIONAL joins the LeftJoin condition
+(LeftJoin(A, G, F)); a reference a group evaluated on its own (UNION
+branch, MINUS, GRAPH) or an OPTIONAL filter cannot see is UNBOUND there
+(always-NULL substitution: value tests error → false, ``bound()``
+false). ``GRAPH <iri>`` scans that named graph, ``GRAPH ?g`` binds ?g
+from the quad relation's ``graph`` column in every pattern, and
+patterns outside GRAPH match the default graph only (§13.3).
+Rejected, never mis-evaluated: property paths under ``GRAPH ?g``
+(their edge relations are graph-blind), EXISTS-carrying filters that
+reference variables outside their scope, an EXISTS probe correlating
+with variables bound only outside its OPTIONAL, OPTIONAL/MINUS/BIND
+with no required part before them, BIND targets that are already
+bound and BIND inputs bound only textually later, a subquery inside
+GRAPH, and compatible joins needing more than
+``_COMPAT_MAX_NULLABLE`` bound-mask bits. Hypothesis differentials
+fold random (nested) element sequences against an independent naive
+§18.2 evaluator.
 
 Anything beyond this subset: plain Spark SQL over
 ``register_triples_view`` (the triples DF is an ordinary 7-column
@@ -545,14 +407,55 @@ def _fold_regex_flags(pat: str, flags: str) -> str:
     return f"(?{emb})" + pat if emb else pat
 
 
-def _group_all_vars(pats, nested, gbinds) -> set[str]:
-    """Every variable a group may bind: its patterns' variables, its
-    BIND targets and its nested OPTIONALs' (recursively)."""
-    out = {t.name for pat in pats for t in pat if isinstance(t, Var)}
-    out |= {b[1] for b in gbinds}
-    for npats, _nf, nnested, _ne, nb in nested:
-        out |= _group_all_vars(npats, nnested, nb)
-    return out
+def _pattern_vars(pats) -> set[str]:
+    """The non-internal variables of a list of triple patterns."""
+    return {
+        t.name for pat in pats for t in pat
+        if isinstance(t, Var) and not _is_internal(t.name)
+    }
+
+
+def _elem_vars(kind: str, payload) -> tuple[set[str], set[str]]:
+    """(variables a group element may bind, variables it binds in every
+    solution) — path-internal variables excluded. MINUS binds nothing;
+    OPTIONAL, BIND and subquery projections may leave theirs unbound."""
+    if kind == "patterns":
+        vs = _pattern_vars(payload)
+        return vs, set(vs)
+    if kind == "optional":
+        return _group_vars(payload)[0], set()
+    if kind == "minus":
+        return set(), set()
+    if kind == "bind":
+        return {payload[1]}, set()
+    if kind == "union":
+        per = [_group_vars(br) for br in payload]
+        return set().union(*(m for m, _ in per)), set.intersection(*(d for _, d in per))
+    if kind == "values":
+        vars_, rows = payload
+        return set(vars_), {
+            v for i, v in enumerate(vars_) if all(r[i] is not None for r in rows)
+        }
+    if kind == "graph":
+        gterm, group = payload
+        may, must = _group_vars(group)
+        gv = {gterm.name} if isinstance(gterm, Var) else set()
+        return may | gv, must | gv
+    assert kind == "sub", kind
+    if payload.items is None:
+        return _group_vars(payload.where)[0], set()
+    return {it[1] if it[0] == "var" else it[4] for it in payload.items}, set()
+
+
+def _group_vars(group) -> tuple[set[str], set[str]]:
+    """``_elem_vars`` over a whole group's elements."""
+    may: set[str] = set()
+    must: set[str] = set()
+    for kind, payload in group.elements:
+        m, d = _elem_vars(kind, payload)
+        may |= m
+        must |= d
+    return may, must
 
 
 def _is_internal(v: str) -> bool:
@@ -564,7 +467,8 @@ def _is_internal(v: str) -> bool:
 def _expr_vars(node) -> set[str]:
     """All variable names an expression AST references (BIND/FILTER
     operand trees: Var/LangOf/DtypeOf/StrOf leaves plus the one tuple
-    shape that carries a raw name string, ("bool", fn, var))."""
+    shape that carries a raw name string, ("bool", fn, var)), including
+    every variable an ``exists_e`` probe group mentions."""
     out: set[str] = set()
 
     def walk(n):
@@ -578,6 +482,10 @@ def _expr_vars(node) -> set[str]:
                     walk(x)
         elif isinstance(n, list):
             for x in n:
+                walk(x)
+        elif isinstance(n, SimpleNamespace):  # a probe group
+            out.update(_group_vars(n)[0])
+            for x in vars(n).values():
                 walk(x)
 
     walk(node)
@@ -1196,24 +1104,15 @@ class _Parser:
                     break
             if not describe:
                 raise SparqlError("DESCRIBE needs ?vars or IRIs")
-            has_where = False
             if self._kw_is("WHERE"):
                 self._next()
-                if self._next() != ("punct", "{"):
-                    raise SparqlError("expected '{' after WHERE")
-                has_where = True
-            elif self._peek() == ("punct", "{"):
-                self._next()
-                has_where = True
-            if not has_where:
+            elif self._peek() != ("punct", "{"):
                 if any(isinstance(t, Var) for t in describe):
                     raise SparqlError("DESCRIBE ?var needs a WHERE clause")
                 # constants only, no pattern: synthesize the trivial
                 # all-binding so the shared tail below can run
                 return SimpleNamespace(
-                    form=form, items=None, distinct=False, patterns=[],
-                    unions=[], timeline=[], filters=[], exists_blocks=[],
-                    values_blocks=[], subselects=[], graph_blocks=[],
+                    form=form, items=None, distinct=False, where=None,
                     binds=[], group_by=[], having=None, order=[],
                     limit=None, offset=None, template=[],
                     describe=describe, no_where=True,
@@ -1222,8 +1121,6 @@ class _Parser:
             items = None  # ASK compiles like SELECT *; the caller tests emptiness
             if self._kw_is("WHERE"):
                 self._next()  # WHERE is optional in ASK
-            if self._next() != ("punct", "{"):
-                raise SparqlError("expected '{'")
         elif form == "CONSTRUCT":
             items = None
             if self._kw_is("WHERE"):
@@ -1233,15 +1130,11 @@ class _Parser:
                 # validated and copied at the end of the parse
                 template = None
                 self._next()
-                if self._next() != ("punct", "{"):
-                    raise SparqlError("expected '{'")
             else:
                 template = self._template()
                 k, kw = self._next()
                 if k != "kw" or str(kw).upper() != "WHERE":
                     raise SparqlError("CONSTRUCT needs a WHERE clause")
-                if self._next() != ("punct", "{"):
-                    raise SparqlError("expected '{'")
         else:
             if self._kw_is("DISTINCT"):
                 distinct = True
@@ -1305,333 +1198,7 @@ class _Parser:
             k, kw = self._next()
             if k != "kw" or str(kw).upper() != "WHERE":
                 raise SparqlError("expected WHERE")
-            if self._next() != ("punct", "{"):
-                raise SparqlError("expected '{'")
-        patterns = []
-        # the TEXTUAL TIMELINE (full r4, replacing the former
-        # late_patterns segments and the ADVICE-r2 rejections): every
-        # order-sensitive group element — OPTIONAL, MINUS, BIND — plus
-        # every join element (triple-pattern run, UNION, VALUES,
-        # subquery) that shares a variable some earlier order-sensitive
-        # element may have left unbound/rebindable is recorded here IN
-        # TEXTUAL ORDER, and _compile_where folds over it with the
-        # §18.5 compatible join. Join elements sharing NO such variable
-        # hoist into the early lists below — exact, because SPARQL Join
-        # is commutative/associative and the only non-commuting
-        # operators (LeftJoin, Minus, Extend) key solely on guard_vars.
-        timeline: list[tuple[str, object]] = []
-        unions: list[list[tuple[list[tuple], list[tuple]]]] = []
-        filters: list[tuple] = []
-        # (positive, (patterns, group-filters)) — FILTER [NOT] EXISTS
-        exists_blocks: list[tuple[bool, tuple[list[tuple], list[tuple]]]] = []
-        values_blocks: list[tuple[list[str], list[list]]] = []
-        subselects: list[SimpleNamespace] = []
-        # (graph term Iri|Var, group tuple) — GRAPH blocks (r5, §13.3)
-        graph_blocks: list[tuple] = []
-        binds: list[tuple[object, str]] = []  # (expr AST, target var)
-        # variables through which a later join element could OBSERVE or
-        # CHANGE what a textually-earlier OPTIONAL/MINUS/BIND computed:
-        # OPTIONAL group vars, MINUS compatibility-domain vars, and the
-        # possibly-unbound inputs of each BIND expression. A later
-        # element sharing one routes to the timeline (evaluated at its
-        # textual position); all others hoist early.
-        guard_vars: set[str] = set()
-        # conservative superset of the variables that may be UNBOUND
-        # (NULL) at the current textual position: OPTIONAL-only vars,
-        # UNION vars not common to all branches, VALUES UNDEF vars,
-        # BIND targets, subquery projections. A superset is safe — it
-        # only routes more elements to the timeline, never fewer.
-        null_vars: set[str] = set()
-        # every variable bound by anything textually BEFORE the current
-        # position — BIND expressions are checked against this snapshot
-        # (ADVICE r3: a BIND referencing a variable first bound by a
-        # LATER pattern would silently see that later binding after the
-        # engine hoists BINDs, where SPARQL leaves it unbound)
-        seen_vars: set[str] = set()
-        bind_snaps: list[set[str]] = []
-
-        def _pattern_vars(pats: list[tuple]) -> set[str]:
-            return {t.name for pat in pats for t in pat if isinstance(t, Var)}
-
-        while self._peek() != ("punct", "}"):
-            if self._kw_is("FILTER"):
-                self._next()
-                node = self._filter()
-                if node[0] == "exists":
-                    exists_blocks.append((node[1], node[2]))
-                else:
-                    filters.append(node)
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("OPTIONAL"):
-                self._next()
-                group = self._group(
-                    allow_nested_optional=True, allow_exists=True,
-                    allow_bind=True,
-                )
-                timeline.append(("optional", group))
-                gvars = _group_all_vars(group[0], group[2], group[4])
-                guard_vars |= gvars
-                null_vars |= gvars - seen_vars
-                seen_vars |= gvars
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("BIND"):
-                self._next()
-                if self._next() != ("punct", "("):
-                    raise SparqlError("BIND needs '('")
-                expr = self._bind_expr()
-                if not self._kw_is("AS"):
-                    raise SparqlError("BIND needs AS: BIND(expr AS ?var)")
-                self._next()
-                kv, vv = self._next()
-                if kv != "var":
-                    raise SparqlError("BIND target must be a ?variable")
-                if self._next() != ("punct", ")"):
-                    raise SparqlError("BIND needs ')'")
-                timeline.append(("bind", (expr, str(vv), set(seen_vars))))
-                bind_snaps.append(set(seen_vars))
-                # a later join element rebinding a possibly-unbound
-                # input of this expression would change what the BIND
-                # computed at its textual point — guard those inputs so
-                # such elements evaluate AFTER the bind on the timeline
-                guard_vars |= {
-                    v for v in _expr_vars(expr) if v in null_vars
-                }
-                null_vars.add(str(vv))  # §10.1: NULL on evaluation error
-                seen_vars.add(str(vv))
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("MINUS"):
-                self._next()
-                # (late r4) the MINUS group may carry nested OPTIONALs;
-                # a shared key they leave nullable takes the two-sided
-                # §8.3 slice decomposition (_compat_join)
-                mp, mf, mn, me, mb = self._group(
-                    allow_nested_optional=True, allow_exists=True,
-                    allow_bind=True,
-                )
-                # snapshot of the variables bound textually BEFORE the
-                # MINUS: §8.3 evaluates Minus at its textual point, so
-                # its compatibility domain is the group-so-far — a
-                # variable first bound by a LATER OPTIONAL/pattern must
-                # NOT key the anti join. The Minus applies at its own
-                # timeline position, so a later element REBINDING a
-                # snapshot variable (full r4; formerly rejected) joins
-                # AFTER the removal, exactly as §18.2 translates it.
-                group = (mp, mf, mn, me, mb, set(seen_vars))
-                timeline.append(("minus", group))
-                # only the variables in its compatibility domain —
-                # group vars ∩ the snapshot — matter to later elements:
-                # one REBINDING such a var (possible when an earlier
-                # OPTIONAL left it nullable) must evaluate after the
-                # Minus on the timeline; a group var NOT seen before
-                # the MINUS never keys the anti join (snapshot domain)
-                # and later bindings of it are harmless
-                mvars = _group_all_vars(mp, mn, mb)
-                keyed = mvars & seen_vars
-                guard_vars |= keyed
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("GRAPH"):
-                # (r5) GRAPH <iri> { ... } / GRAPH ?g { ... } at the
-                # top level of WHERE (§13.3): the block is a full group
-                # for a constant graph (pure dataset slice) and a
-                # BGP+FILTER/BIND group for a variable graph (every
-                # pattern additionally binds ?g). Compiled as a
-                # join-commutative element like a subquery.
-                self._next()
-                gterm = self._graph_term()
-                gblock = self._group(
-                    allow_nested_optional=True, allow_exists=True,
-                    allow_bind=True,
-                )
-                gall = _group_all_vars(gblock[0], gblock[2], gblock[4])
-                gall = {v for v in gall if not _is_internal(v)}
-                if isinstance(gterm, Var):
-                    gall |= {gterm.name}
-                if gall & guard_vars:
-                    raise SparqlError(
-                        "a GRAPH block textually after an OPTIONAL/"
-                        "MINUS/BIND that shares its variables is not "
-                        "supported — move the GRAPH block before the "
-                        "order-sensitive element"
-                    )
-                graph_blocks.append((gterm, gblock))
-                # vars the block's nested OPTIONALs/BINDs may leave
-                # unbound are nullable to the outer query (superset)
-                null_vars |= gall - {
-                    v
-                    for v in _pattern_vars(gblock[0])
-                    if not _is_internal(v)
-                } - ({gterm.name} if isinstance(gterm, Var) else set())
-                seen_vars |= gall
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("VALUES"):
-                self._next()
-                block = self._values()
-                if set(block[0]) & guard_vars:
-                    timeline.append(("values", block))
-                else:
-                    values_blocks.append(block)
-                null_vars |= {
-                    v
-                    for row in block[1]
-                    for v, t in zip(block[0], row)
-                    if t is None  # UNDEF cell: unbound in that row
-                }
-                seen_vars |= set(block[0])
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if (
-                self._peek() == ("punct", "{")
-                and self._peek2()[0] == "kw"
-                and str(self._peek2()[1]).upper() == "SELECT"
-            ):
-                sub = self._subselect()
-                sub_vars = {
-                    v
-                    for v in (
-                        [it[1] for it in sub.items if it[0] == "var"]
-                        if sub.items is not None
-                        else [
-                            t.name
-                            for pat in sub.patterns
-                            for t in pat
-                            if isinstance(t, Var) and not _is_internal(t.name)
-                        ]
-                    )
-                }
-                if sub_vars & guard_vars:
-                    timeline.append(("sub", sub))
-                else:
-                    subselects.append(sub)
-                # projected vars may reach the outer query unbound
-                # (inner OPTIONAL/mixed UNION) — conservative superset
-                null_vars |= sub_vars
-                seen_vars |= sub_vars
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._peek() == ("punct", "{"):
-                # (r4) allow_exists: FILTER [NOT] EXISTS compiles inside
-                # UNION branches too — Filter(EXISTS(P), Branch) as a
-                # per-branch semi/anti join before the union; (late r4)
-                # allow_nested_optional: a branch may carry its own
-                # OPTIONAL groups, compiled with the recursive LeftJoin
-                # machinery (the branch IS a group). (r5) a branch may
-                # instead be exactly ONE GRAPH block — the common
-                # per-graph alternation { GRAPH ?g {..} } UNION { .. } —
-                # parsed by _union_branch into a ("graphbranch", ...)
-                # marker the union compiler routes to the GRAPH
-                # compiler.
-                raw = [self._union_branch()]
-                while self._kw_is("UNION"):
-                    self._next()
-                    raw.append(self._union_branch())
-                if len(raw) < 2:
-                    raise SparqlError("a braced group must be a UNION branch")
-                branches = raw  # 5-tuples | ("graphbranch", gterm, block)
-
-                def _branch_all_vars(br) -> set[str]:
-                    if br and br[0] == "graphbranch":
-                        _, gt, blk = br
-                        vs = _group_all_vars(blk[0], blk[2], blk[4])
-                        if isinstance(gt, Var):
-                            vs |= {gt.name}
-                        return vs
-                    pats_, _gf, n_, _ge, gb_ = br
-                    return _group_all_vars(pats_, n_, gb_)
-
-                def _branch_definite_vars(br) -> set[str]:
-                    if br and br[0] == "graphbranch":
-                        _, gt, blk = br
-                        vs = {
-                            v
-                            for v in _pattern_vars(blk[0])
-                            if not _is_internal(v)
-                        }
-                        if isinstance(gt, Var):
-                            vs |= {gt.name}
-                        return vs
-                    pats_, _gf, _n, _ge, _gb = br
-                    return {
-                        v for v in _pattern_vars(pats_) if not _is_internal(v)
-                    }
-
-                union_vars = {v for br in branches for v in _branch_all_vars(br)}
-                union_vars = {v for v in union_vars if not _is_internal(v)}
-                if union_vars & guard_vars:
-                    timeline.append(("union", branches))
-                else:
-                    unions.append(branches)
-                # vars not DEFINITELY bound by every branch are unbound
-                # somewhere: missing-branch vars, branch-BIND targets
-                # (error-NULL), and branch-OPTIONAL vars are all nullable
-                per_branch = [_branch_definite_vars(br) for br in branches]
-                null_vars |= union_vars - set.intersection(*per_branch)
-                seen_vars |= union_vars
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            s = self._term("subj")
-            p = self._path_pred()
-            o = self._term("obj")
-            if isinstance(p, tuple) and p[0] == "pathx":
-                branches = self._expand_pathx(s, p[1], o)
-                predset = (
-                    self._maybe_predset(s, branches, o)
-                    if len(branches) > 1 else None
-                )
-                if predset is not None:
-                    # simple forward alternation → ONE pred-IN scan
-                    # (r4: plan-size win over the UNION distribution,
-                    # identical bag of solutions — _maybe_predset)
-                    expanded = [predset]
-                elif len(branches) > 1:
-                    # alternation distributes into a UNION whose
-                    # branches bind identical non-internal variables
-                    # (the endpoints), so the existing same-vars union
-                    # machinery applies unchanged (bag union preserves
-                    # the spec's per-alternative multiplicity)
-                    endpoint_vars = {t.name for t in (s, o) if isinstance(t, Var)}
-                    alt_branches = [(br, [], [], [], []) for br in branches]
-                    if endpoint_vars & guard_vars:
-                        timeline.append(("union", alt_branches))
-                    else:
-                        unions.append(alt_branches)
-                    seen_vars |= endpoint_vars
-                    if self._peek() == ("punct", "."):
-                        self._next()
-                    continue
-                else:
-                    expanded = branches[0]
-            else:
-                expanded = [(s, p, o)]  # incl. negset — plain pattern
-            pat_vars = {v for v in _pattern_vars(expanded) if not _is_internal(v)}
-            if pat_vars & guard_vars:
-                # textual-order Join(LeftJoin(A,G),B) / Join(Minus(A,M),B)
-                # / Join(Extend(A,?v,e),B): the pattern evaluates at its
-                # textual position as a compatible join (the shared
-                # variable may be unbound on the left) — exact §18.5
-                # semantics instead of the former rejection
-                timeline.append(("patterns", expanded))
-            else:
-                patterns.extend(expanded)
-            # the pattern binds its variables in every solution, so from
-            # this textual point on they cannot be unbound
-            null_vars -= pat_vars
-            seen_vars |= pat_vars
-            if self._peek() == ("punct", "."):
-                self._next()
-        self._next()  # }
+        where = self._group()
         group_by: list[str] = []
         if self._kw_is("GROUP"):
             self._next()
@@ -1777,42 +1344,6 @@ class _Parser:
             raise SparqlError("DESCRIBE takes no solution modifiers here")
         if form == "CONSTRUCT" and group_by:
             raise SparqlError("CONSTRUCT does not take GROUP BY")
-        if (
-            not patterns
-            and not unions
-            and not subselects
-            and not graph_blocks
-            and not any(
-                k in ("patterns", "union", "sub") for k, _ in timeline
-            )
-        ):
-            raise SparqlError("empty graph pattern (OPTIONAL needs a required part)")
-        # BIND textual-order guard (ADVICE r3): an expression variable
-        # first bound by a textually LATER pattern is unbound where
-        # SPARQL 1.1 §18.2.2.6 evaluates the BIND (over the
-        # group-so-far) — reject, don't mis-evaluate. SELECT projection
-        # expressions are exempt: they textually follow the whole WHERE
-        # clause.
-        for kind_, payload_ in timeline:
-            if kind_ != "bind":
-                continue
-            expr, _name, snap = payload_
-            # exists_e probe variables are exempt: a probe variable not
-            # in dom(μ) at the BIND's own point is probe-local per
-            # §18.6 substitution, even if a later pattern binds the
-            # same name (_expr_input_vars docstring)
-            later = sorted(
-                v for v in _expr_input_vars(expr)
-                if v not in snap and v in seen_vars
-            )
-            if later:
-                raise SparqlError(
-                    f"BIND expression references variable(s) {later} first "
-                    "bound by a textually later pattern, OPTIONAL, or BIND: "
-                    "SPARQL evaluates BIND over the group-so-far (the "
-                    "variable would be unbound there) — move the BIND after "
-                    "the pattern that binds it"
-                )
         # SELECT exprs evaluate after WHERE BINDs. In an AGGREGATE query
         # they evaluate after the aggregation itself (§18.2.4.4 lets a
         # SELECT expression use earlier SELECT aliases — i.e. aggregate
@@ -1820,9 +1351,9 @@ class _Parser:
         # an expression that IS a group key, which must bind pre-agg.
         # hidden pre-aggregation BINDs (aggregate-over-expression args,
         # GROUP BY expression keys) evaluate on the WHERE relation like
-        # any BIND; they are exempt from the textual-order check above,
-        # like SELECT expressions (they follow the whole WHERE clause)
-        binds.extend(self._agg_prebinds)
+        # any BIND; like SELECT expressions they follow the whole WHERE
+        # clause, so the group's textual-order check does not see them
+        binds: list[tuple[object, str]] = list(self._agg_prebinds)
         post_binds: list[tuple[object, str]] = []
         has_agg_items = bool(items) and any(it[0] == "agg" for it in items)
         hidden_names = {it[4] for it in hidden_aggs}
@@ -1841,9 +1372,8 @@ class _Parser:
             # plain BGP (no FILTER/OPTIONAL/UNION/VALUES/BIND/subquery,
             # no property paths, no literal subjects)
             if (
-                filters or unions or exists_blocks or values_blocks
-                or subselects or binds or timeline or group_by or having
-                or graph_blocks
+                where.filters or binds or group_by or having
+                or any(k != "patterns" for k, _ in where.elements)
             ):
                 raise SparqlError(
                     "CONSTRUCT WHERE { ... } is the template-free "
@@ -1852,9 +1382,11 @@ class _Parser:
                     "subquery) — use CONSTRUCT { tpl } WHERE { ... } "
                     "for anything richer"
                 )
-            for s, p, o in patterns:
+            template = [pat for _, run in where.elements for pat in run]
+            for s, p, o in template:
                 if not isinstance(p, (Iri, Var)) or any(
-                    _is_internal(v) for v in _pattern_vars([(s, p, o)])
+                    isinstance(t, Var) and _is_internal(t.name)
+                    for t in (s, o)
                 ):
                     raise SparqlError(
                         "CONSTRUCT WHERE requires plain triple patterns "
@@ -1865,14 +1397,9 @@ class _Parser:
                     raise SparqlError(
                         "a CONSTRUCT subject cannot be a literal"
                     )
-            template = list(patterns)
         return SimpleNamespace(
-            form=form, items=items, distinct=distinct, patterns=patterns,
-            timeline=timeline,
-            unions=unions, filters=filters,
-            exists_blocks=exists_blocks, values_blocks=values_blocks,
-            subselects=subselects, binds=binds, graph_blocks=graph_blocks,
-            group_by=group_by, having=having, order=order, limit=limit,
+            form=form, items=items, distinct=distinct, where=where,
+            binds=binds, group_by=group_by, having=having, order=order, limit=limit,
             offset=offset, template=template, describe=describe,
             no_where=False, post_binds=post_binds, hidden_aggs=hidden_aggs,
         )
@@ -1887,35 +1414,6 @@ class _Parser:
         if not isinstance(gterm, Iri):
             raise SparqlError("GRAPH names an IRI or a ?variable")
         return gterm
-
-    def _union_branch(self):
-        """One UNION branch: a full group, or (r5) exactly one GRAPH
-        block — ``{ GRAPH ?g { ... } }`` — returned as a
-        ("graphbranch", gterm, block) marker for the union compiler."""
-        if (
-            self._peek() == ("punct", "{")
-            and self._peek2()[0] == "kw"
-            and str(self._peek2()[1]).upper() == "GRAPH"
-        ):
-            self._next()  # {
-            self._next()  # GRAPH
-            gterm = self._graph_term()
-            block = self._group(
-                allow_nested_optional=True, allow_exists=True,
-                allow_bind=True,
-            )
-            if self._peek() == ("punct", "."):
-                self._next()
-            if self._next() != ("punct", "}"):
-                raise SparqlError(
-                    "a GRAPH union branch holds exactly the GRAPH block "
-                    "— put additional patterns inside the GRAPH braces "
-                    "or outside the UNION"
-                )
-            return ("graphbranch", gterm, block)
-        return self._group(
-            allow_nested_optional=True, allow_exists=True, allow_bind=True
-        )
 
     def _subselect(self) -> SimpleNamespace:
         """``{ SELECT ... }`` — slice the brace-balanced token span and
@@ -2021,169 +1519,102 @@ class _Parser:
             raise SparqlError("VALUES block has no rows")
         return vars_, rows
 
-    def _group(
-        self,
-        allow_nested_optional: bool = False,
-        allow_exists: bool = False,
-        allow_bind: bool = False,
-    ) -> tuple[list[tuple], list[tuple], list[tuple], list[tuple], list[tuple]]:
-        """Parse ``{ t1 . t2 ... [FILTER ...] [OPTIONAL {...}] }`` (an
-        OPTIONAL/UNION/EXISTS/MINUS block) → (patterns, filters,
-        nested-optionals). A FILTER here is applied to the group BEFORE
-        it joins the outer query — equivalent to SPARQL's
-        LeftJoin(A, G, F) / branch-local filter — when every filter
-        variable is bound inside the group; an OPTIONAL filter that
-        also needs variables of the immediately enclosing group
-        compiles into the left-join CONDITION (LeftJoin(A, G, F) with
-        cross-group F; see _compat_join). Nested OPTIONAL
-        groups are accepted to ARBITRARY depth inside OPTIONAL groups,
-        UNION branches, EXISTS probes, and MINUS groups
-        (``allow_nested_optional``; each nested entry is recursively
-        (patterns, filters, its-own-nested, its-own-exists)). Returns a FOURTH
-        element: ``[NOT] EXISTS`` group filters, accepted only when
-        ``allow_exists`` (OPTIONAL groups, r4 — compiled as semi/anti
-        joins on the group solutions, Filter(EXISTS(P), G)); other
-        group kinds keep the rejection (the [:2]-slicing callers never
-        see the tail elements). Late r4: EXISTS probe groups and MINUS
-        groups parse with ``allow_nested_optional`` too — the compile
-        layer routes their nullable keys (or rejects, for EXISTS
-        correlation keys). The well-designed-pattern conditions
-        are enforced at compile (nullable join keys rejected) and here
-        (textual-order rule for patterns following a nested OPTIONAL).
-        Returns a FIFTH element: group-local BINDs as (expr, name,
-        vars-seen-before) triples, accepted only when ``allow_bind``
-        (OPTIONAL/UNION/MINUS groups, r4) — evaluated over the group's
-        own solutions after its patterns, visible to its filters; the
-        EXISTS-group callers' [:2] slices never see them."""
+    def _group(self) -> SimpleNamespace:
+        """``{ ... }`` — one GroupGraphPattern, the same grammar at every
+        level (the WHERE clause, OPTIONAL, MINUS, UNION branches, GRAPH
+        blocks, EXISTS probes) → a group node:
+
+        * ``elements`` in textual order, each ``(kind, payload)``:
+          ``("patterns", [(s, p, o), ...])`` one triple pattern (its
+          property-path expansion), ``("optional", group)``,
+          ``("minus", group)``, ``("bind", (expr, ?var))``,
+          ``("union", [group, ...])`` (a lone braced group is a
+          one-branch union), ``("values", (vars, rows))``, ``("sub",
+          parsed subquery)``, ``("graph", (Iri | Var, group))``;
+        * ``filters``: every FILTER of the group, a statement-level
+          ``[NOT] EXISTS`` as ``("exists", positive, group)`` — SPARQL
+          applies them to the whole group, wherever they appear.
+
+        ``_compile_group`` decides evaluation order; the parser only
+        records text order."""
         if self._next() != ("punct", "{"):
             raise SparqlError("a group needs '{'")
-        group: list[tuple] = []
-        gfilters: list[tuple] = []
-        nested: list[tuple] = []
-        nested_vars: set[str] = set()
-        gexists: list[tuple] = []
-        gbinds: list[tuple] = []
-        gseen: set[str] = set()
-
-        def _deep_vars(npats, nnested) -> set[str]:
-            out = {t.name for pat in npats for t in pat if isinstance(t, Var)}
-            for mpats, _mf, mnested, _me, mb in nnested:
-                out |= _deep_vars(mpats, mnested) | {b[1] for b in mb}
-            return out
-
+        elements: list[tuple[str, object]] = []
+        filters: list[tuple] = []
         while self._peek() != ("punct", "}"):
-            if self._kw_is("OPTIONAL") and allow_nested_optional:
-                self._next()
-                sub = self._group(
-                    allow_nested_optional=True,
-                    allow_exists=allow_exists,
-                    allow_bind=allow_bind,
-                )
-                nested.append(sub)
-                nested_vars |= _deep_vars(sub[0], sub[2])
-                gseen |= _deep_vars(sub[0], sub[2])
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("BIND") and allow_bind:
-                # (r4) group-local BIND: evaluated over the group-so-far
-                # (the recorded ``gseen`` snapshot enforces the
-                # textual-order rule at compile), visible to the
-                # group's filters/EXISTS and to the outer query as an
-                # OPTIONAL/UNION-nullable variable
-                self._next()
-                if self._next() != ("punct", "("):
-                    raise SparqlError("BIND needs '('")
-                bexpr = self._bind_expr()
-                if not self._kw_is("AS"):
-                    raise SparqlError("BIND needs AS: BIND(expr AS ?var)")
-                self._next()
-                bk, bv = self._next()
-                if bk != "var":
-                    raise SparqlError("BIND target must be a ?variable")
-                if self._next() != ("punct", ")"):
-                    raise SparqlError("BIND needs ')'")
-                bname = str(bv)
-                if bname in gseen or any(b[1] == bname for b in gbinds):
-                    raise SparqlError(
-                        f"BIND target ?{bname} is already bound in this group "
-                        "(SPARQL requires a fresh variable)"
-                    )
-                gbinds.append((bexpr, bname, frozenset(gseen)))
-                gseen.add(bname)
-                if self._peek() == ("punct", "."):
-                    self._next()
-                continue
-            if self._kw_is("GRAPH"):
-                raise SparqlError(
-                    "GRAPH is supported at the top level of WHERE only, "
-                    "not nested inside other groups"
-                )
-            if self._kw_is("OPTIONAL") or self._kw_is("MINUS") or self._kw_is("BIND"):
-                raise SparqlError(
-                    "OPTIONAL/MINUS/BIND nested inside this braced group is "
-                    "not supported"
-                )
+            if self._peek()[0] == "eof":
+                raise SparqlError("unterminated group: expected '}'")
             if self._kw_is("FILTER"):
                 self._next()
-                node = self._filter()
-                if node[0] == "exists":
-                    if not allow_exists:
-                        raise SparqlError(
-                            "EXISTS/NOT EXISTS nested inside this braced "
-                            "group is not supported (it compiles inside "
-                            "OPTIONAL groups and at the top level of WHERE)"
-                        )
-                    gexists.append((node[1], node[2]))
-                    if self._peek() == ("punct", "."):
-                        self._next()
-                    continue
-                gfilters.append(node)
-                if self._peek() == ("punct", "."):
+                filters.append(self._filter())
+            elif self._kw_is("OPTIONAL") or self._kw_is("MINUS"):
+                kind = str(self._next()[1]).lower()
+                elements.append((kind, self._group()))
+            elif self._kw_is("GRAPH"):
+                self._next()
+                gterm = self._graph_term()
+                elements.append(("graph", (gterm, self._group())))
+            elif self._kw_is("BIND"):
+                self._next()
+                elements.append(("bind", self._bind()))
+            elif self._kw_is("VALUES"):
+                self._next()
+                elements.append(("values", self._values()))
+            elif self._peek() == ("punct", "{") and (
+                self._peek2()[0] == "kw"
+                and str(self._peek2()[1]).upper() == "SELECT"
+            ):
+                elements.append(("sub", self._subselect()))
+            elif self._peek() == ("punct", "{"):
+                branches = [self._group()]
+                while self._kw_is("UNION"):
                     self._next()
-                continue
-            s = self._term("subj")
-            p = self._path_pred()
-            o = self._term("obj")
-            if isinstance(p, tuple) and p[0] == "pathx":
-                branches = self._expand_pathx(s, p[1], o)
-                if len(branches) > 1:
-                    predset = self._maybe_predset(s, branches, o)
-                    if predset is not None:
-                        # simple alternation in OPTIONAL/UNION/EXISTS/
-                        # MINUS groups: one pred-IN scan, exact bag
-                        # semantics (_maybe_predset)
-                        expanded = [predset]
-                    else:
-                        # (r4) general alternation — branches carrying
-                        # sequences, inverses, or closures — inside a
-                        # braced group: alternation cannot distribute
-                        # into a top-level UNION here, so the whole
-                        # path compiles to ONE derived-relation
-                        # pattern (_path_relation; bag semantics for
-                        # sequences/alternation, set for closures)
-                        expanded = [(s, ("pathrel", p[1], None), o)]
-                else:
-                    expanded = branches[0]
+                    branches.append(self._group())
+                elements.append(("union", branches))
             else:
-                expanded = [(s, p, o)]  # incl. negset — plain pattern
-            pvars = {t.name for pat in expanded for t in pat if isinstance(t, Var)}
-            gseen |= {v for v in pvars if not _is_internal(v)}
-            clash = sorted(pvars & nested_vars)
-            if clash:
-                raise SparqlError(
-                    f"a pattern follows a nested OPTIONAL and shares its "
-                    f"variable(s) {clash}: SPARQL evaluates groups in "
-                    "textual order — move the pattern before the OPTIONAL"
-                )
-            group.extend(expanded)
+                elements.append(self._triple_pattern())
             if self._peek() == ("punct", "."):
                 self._next()
         self._next()  # }
-        if not group:
-            # (incl. a BIND-only group: it has no patterns to join on)
-            raise SparqlError("empty braced group (OPTIONAL/UNION/EXISTS)")
-        return group, gfilters, nested, gexists, gbinds
+        return SimpleNamespace(elements=elements, filters=filters)
+
+    def _triple_pattern(self) -> tuple[str, object]:
+        """One ``s path o`` → a ``patterns`` element, or a ``union``
+        element when a general alternation distributes (§9.3: its
+        branches bind the same endpoints, and the bag union keeps the
+        per-alternative multiplicity). A simple forward alternation
+        ``(p1|p2|...)`` over distinct IRIs stays ONE ``pred IN`` scan
+        (``_maybe_predset``)."""
+        s = self._term("subj")
+        p = self._path_pred()
+        o = self._term("obj")
+        if not (isinstance(p, tuple) and p[0] == "pathx"):
+            return ("patterns", [(s, p, o)])  # incl. negset
+        branches = self._expand_pathx(s, p[1], o)
+        if len(branches) == 1:
+            return ("patterns", branches[0])
+        predset = self._maybe_predset(s, branches, o)
+        if predset is not None:
+            return ("patterns", [predset])
+        return ("union", [
+            SimpleNamespace(elements=[("patterns", br)], filters=[])
+            for br in branches
+        ])
+
+    def _bind(self) -> tuple[object, str]:
+        """``BIND`` body: ``(expr AS ?var)`` → (expr AST, target)."""
+        if self._next() != ("punct", "("):
+            raise SparqlError("BIND needs '('")
+        expr = self._bind_expr()
+        if not self._kw_is("AS"):
+            raise SparqlError("BIND needs AS: BIND(expr AS ?var)")
+        self._next()
+        kv, vv = self._next()
+        if kv != "var":
+            raise SparqlError("BIND target must be a ?variable")
+        if self._next() != ("punct", ")"):
+            raise SparqlError("BIND needs ')'")
+        return expr, str(vv)
 
     # node tags that denote a BOOLEAN-valued expression; everything
     # else (Var/Lit/Iri/StrOf/... instances and the value-tuple tags
@@ -2725,14 +2156,7 @@ class _Parser:
                     raise SparqlError(
                         "expected EXISTS after NOT in a boolean expression"
                     )
-            # (late r4) the boolean-expression probe accepts nested
-            # OPTIONALs and statement-level FILTER [NOT] EXISTS too —
-            # compiled through the shared group compiler at flag time
-            g = self._group(
-                allow_nested_optional=True, allow_exists=True,
-                allow_bind=True,
-            )
-            node = ("exists_e", g)
+            node = ("exists_e", self._group())
             return node if positive else ("not", node)
         if (
             k == "kw"
@@ -2780,8 +2204,8 @@ class _Parser:
 
     def _filter(self) -> tuple:
         """SPARQL Constraint: a bracketted expression, a bare builtin
-        call, or (at the top level of the main group only)
-        ``[NOT] EXISTS { ... }``."""
+        call, or ``[NOT] EXISTS { ... }`` (→ ``("exists", positive,
+        group)``)."""
         k, v = self._peek()
         if k == "kw" and str(v).upper() in ("EXISTS", "NOT"):
             positive = str(v).upper() == "EXISTS"
@@ -2790,17 +2214,7 @@ class _Parser:
                 k2, v2 = self._next()
                 if k2 != "kw" or str(v2).upper() != "EXISTS":
                     raise SparqlError("expected EXISTS after NOT in FILTER")
-            # (r4) the probe group may itself carry FILTER [NOT]
-            # EXISTS — nested existence tests compile recursively —
-            # and (late r4) OPTIONAL groups: LeftJoin never removes a
-            # probe solution, so the existence test is unchanged
-            # unless a correlation key is OPTIONAL-nullable (rejected
-            # at compile)
-            g = self._group(
-                allow_nested_optional=True, allow_exists=True,
-                allow_bind=True,
-            )
-            return ("exists", positive, g)
+            return ("exists", positive, self._group())
         if k == "kw":
             self._next()
             call = self._call_of(str(v))
@@ -2819,101 +2233,6 @@ class _Parser:
         raise SparqlError(
             "unsupported FILTER form (use (expr) or a builtin call)"
         )
-
-
-def _apply_group_exists(
-    triples: DataFrame,
-    gdf: DataFrame,
-    gvars: set[str],
-    gexists: list[tuple],
-    outer_bound: set[str],
-    scope: str,
-    nullable_vars: set[str] | None = None,
-    graph_var: str | None = None,
-) -> DataFrame:
-    """Filter(EXISTS(P), G): apply ``[NOT] EXISTS`` entries over a
-    group's solution relation as semi/anti joins correlated through
-    variables the group itself binds. Recursive (r4): the probe group
-    may carry its own nested EXISTS filters and OPTIONAL groups
-    (``_exists_probe``). An EXISTS correlating through variables bound
-    outside the group would need SPARQL's substitution semantics —
-    rejected; a join variable a nested OPTIONAL of the GROUP may have
-    left unbound takes the bound-mask slice decomposition."""
-    for positive, payload in gexists:
-        edf, evars, eshared = _exists_probe(
-            triples, payload, outer_bound | gvars, scope, graph_var
-        )
-        eshared = [v for v in eshared if v in gvars]
-        outer_corr = sorted(
-            v for v in evars
-            if not _is_internal(v) and v in outer_bound and v not in gvars
-        )
-        if outer_corr:
-            raise SparqlError(
-                f"an EXISTS inside {scope} references variable(s) "
-                f"{outer_corr} bound outside the group — SPARQL's "
-                "substitution semantics for that correlation are not "
-                "expressible as a semi-join on group keys"
-            )
-        # a shared variable a nested OPTIONAL may have left unbound
-        # takes the bound-mask slice decomposition (§18.6 substitution)
-        gdf = _compat_join(
-            gdf, nullable_vars or set(), edf, set(), eshared,
-            "semi" if positive else "anti", f"an EXISTS inside {scope}",
-        )
-    return gdf
-
-
-def _exists_probe(
-    triples: DataFrame,
-    payload: tuple,
-    outer: set[str],
-    scope: str,
-    graph_var: str | None = None,
-) -> tuple[DataFrame, set[str], list[str]]:
-    """Compile one [NOT] EXISTS probe group → (probe solutions, probe
-    variables, correlation variables: those ``outer`` binds). The probe
-    compiles as a group through the recursive LeftJoin machinery
-    (nested OPTIONALs, BINDs, its own EXISTS): LeftJoin preserves
-    every base solution, so the existence test's key set and emptiness
-    are unchanged. Probe filters must be probe-local.
-
-    A correlation key bound only inside the PROBE's own OPTIONAL: with
-    no top-level probe filter and no nested probe EXISTS, nothing can
-    remove a probe base solution — LeftJoin keeps every required-part
-    row, Extend never drops — so §18.6 substitution of that key
-    constrains only the OPTIONAL's extensions, never emptiness;
-    existence is INDEPENDENT of the key and it simply leaves the
-    correlation. With probe filters/EXISTS present (they CAN remove
-    rows whose OPTIONAL bindings the substitution would constrain) it
-    is rejected."""
-    pats, filters, nested, inner, binds = payload
-    gdf, gvars, p_nullable, deferred = _compile_optional_group(
-        triples, pats, filters, nested, inner, binds, outer,
-        graph_var=graph_var,
-    )
-    if deferred:
-        deep = sorted({
-            v
-            for f in deferred
-            for v in _expr_vars(f)
-            if not _is_internal(v) and v not in gvars
-        })
-        raise SparqlError(
-            f"an EXISTS in {scope} references variable(s) {deep} not "
-            "bound in the probe group — SPARQL's §18.6 substitution for "
-            "that correlation is not expressible here"
-        )
-    shared = sorted(v for v in gvars if v in outer)
-    probe_null = [v for v in shared if v in p_nullable]
-    if probe_null and (filters or inner):
-        raise SparqlError(
-            f"an EXISTS in {scope} correlates through variable(s) "
-            f"{probe_null} its own OPTIONAL may leave unbound — §18.6 "
-            "substitution over a nullable probe key is not expressible "
-            "when the probe carries top-level filters or nested EXISTS"
-        )
-    return gdf, gvars, [v for v in shared if v not in p_nullable]
 
 
 def _pattern_df(
@@ -2983,15 +2302,18 @@ def _pattern_df(
             )
         ]
     )
-    # class slice (?x rdf:type <C>): hint broadcast so Catalyst can pick
-    # BHJ without a stats pass. Gated to rdf:type only — a generic
-    # constant-pred+obj slice (e.g. every customer in one market
-    # segment) can be a large fraction of the graph, and an explicit
-    # hint would force a broadcast AQE cannot demote; for those, size
-    # estimation is left to Catalyst/AQE.
-    if isinstance(p, Iri) and p.value == RDF_TYPE and not isinstance(o, Var):
-        out = F.broadcast(out)
     return out, variables
+
+
+def _is_class_slice(pat: tuple) -> bool:
+    """``?x rdf:type <C>``: a slice small enough to broadcast-hint, so
+    Catalyst can pick a broadcast hash join without a stats pass. Gated
+    to rdf:type only — a generic constant-pred+obj slice (every
+    customer in one market segment) can be a large fraction of the
+    graph, and an explicit hint would force a broadcast AQE cannot
+    demote; for those, size estimation is left to Catalyst/AQE."""
+    _s, p, o = pat
+    return isinstance(p, Iri) and p.value == RDF_TYPE and not isinstance(o, Var)
 
 
 _CLOSURE_MAX_ITERS = 24  # path-doubling: covers diameter 2^24
@@ -3055,13 +2377,11 @@ def _path_relation(triples: DataFrame, alts: list[list[tuple]]) -> DataFrame:
     modifier runs the reachability fixpoint over the element's own
     relation (SET semantics per §18.4 — the only dedup points).
 
-    It evaluates two surfaces: the edge relation of every closed path
-    group (``(p1/p2)+``, ``(p1|^p2)*``, ``(p+/q)*`` — the
-    "closure_path" spec, deduplicated by the caller), and full path
-    expressions inside braced OPTIONAL/UNION/EXISTS/MINUS groups (the
-    "pathrel" pattern), where alternation cannot distribute into a
-    top-level UNION. Plans stay join/union/aggregate-only — no UDFs,
-    no driver loops beyond the bounded fixpoint rounds."""
+    It evaluates the edge relation of every closed path group
+    (``(p1/p2)+``, ``(p1|^p2)*``, ``(p+/q)*`` — the "closure_path"
+    spec, deduplicated by the caller). Plans stay
+    join/union/aggregate-only — no UDFs, no driver loops beyond the
+    bounded fixpoint rounds."""
     rel: DataFrame | None = None
     for seq in alts:
         seq_rel: DataFrame | None = None
@@ -3360,9 +2680,13 @@ def _is_closure(p) -> bool:
 
 def _join_patterns(
     triples: DataFrame, patterns: list[tuple], graph_var: str | None = None
-) -> tuple[DataFrame, set[str]]:
+) -> tuple[DataFrame, set[str], bool]:
     """Inner-join a pattern group on its shared variables (full-term
-    keys); unshared patterns cross-join (SPARQL product).
+    keys); unshared patterns cross-join (SPARQL product) →
+    (solutions, bound vars, lone class slice). Class slices
+    (``_is_class_slice``) are broadcast-hinted as inputs of these
+    inner joins; a BGP that IS one class slice comes back unhinted,
+    flagged, for the caller to hint where it can be a build side.
 
     ``graph_var`` (r5): compile a ``GRAPH ?g`` block's patterns —
     ``triples`` is the named-graph quad slice and every plain pattern
@@ -3385,12 +2709,17 @@ def _join_patterns(
     same way forward and backward."""
     df: DataFrame | None = None
     bound: set[str] = set()
+    small = False  # df is still the first pattern, a class slice
 
-    def attach(pat_df: DataFrame, variables: list[str]) -> None:
-        nonlocal df, bound
+    def attach(pat_df: DataFrame, variables: list[str], slice_: bool = False) -> None:
+        nonlocal df, bound, small
         if df is None:
-            df, bound = pat_df, set(variables)
+            df, bound, small = pat_df, set(variables), slice_
             return
+        if small:
+            df, small = F.broadcast(df), False
+        if slice_:
+            pat_df = F.broadcast(pat_df)
         shared = [v for v in variables if v in bound]
         if shared:
             join_keys = [x for v in shared for x in _term_key(v)]
@@ -3433,16 +2762,10 @@ def _join_patterns(
             )
             variables = [v for v in variables if v != "__np"]
             pat_df = pat_df.drop("__np", "____np_kind", "____np_lang", "____np_dtype")
-        elif isinstance(p, tuple) and p[0] == "pathrel":
-            # full path expression inside a braced group: evaluate the
-            # path's binary relation recursively and bind endpoints
-            # like any pattern (constant-endpoint filters push into
-            # the relation's joins via Catalyst)
-            pat_df, variables = _closure_pattern_df(
-                triples, s, p, o, pairs=_path_relation(triples, p[1])
-            )
         else:
             pat_df, variables = _pattern_df(triples, s, p, o, graph_var=graph_var)
+            attach(pat_df, variables, _is_class_slice((s, p, o)))
+            continue
         attach(pat_df, variables)
 
     while deferred:
@@ -3472,84 +2795,7 @@ def _join_patterns(
         pat_df, variables = _closure_pattern_df(triples, s, p, o, pairs=pairs)
         attach(pat_df, variables)
     assert df is not None
-    return df, bound
-
-
-def _compile_graph_block(
-    triples: DataFrame,
-    quads: DataFrame | None,
-    gterm,
-    group: tuple,
-    outer_bound: set[str],
-) -> tuple[DataFrame, set[str], set[str]]:
-    """One top-level ``GRAPH`` block → (solutions, bound vars, nullable
-    vars) — §13.3 evaluated against the dataset's NAMED graphs.
-
-    ``GRAPH <iri> { ... }`` is a pure dataset slice: the block (a full
-    group — nested OPTIONALs, EXISTS, BINDs, paths all compile) runs
-    against the 7-column projection of that one named graph through
-    the ordinary group machinery. ``GRAPH ?g { ... }`` threads the
-    graph column through every pattern scan as the ?g binding — the
-    FULL group grammar (nested OPTIONALs, FILTER EXISTS, BINDs)
-    compiles, ?g riding the joins as an ordinary shared variable;
-    property paths and EXISTS-in-BIND probes under a variable graph
-    are rejected, not mis-evaluated. A 7-column dataset has no
-    named graphs, so every GRAPH block evaluates to the empty
-    solution bag — the spec's answer, not an error."""
-    pats, gfilters, nested, gexists, gbinds = group
-    if quads is None:
-        # no named graphs in this dataset: empty solutions over the
-        # block's variables (typed columns so later joins analyze)
-        gvars = {
-            v
-            for v in (
-                _group_all_vars(pats, nested, gbinds)
-                | ({gterm.name} if isinstance(gterm, Var) else set())
-            )
-            if not _is_internal(v)
-        }
-        cols = [c for v in sorted(gvars) for c in _term_key(v)]
-        empty = triples.sparkSession.createDataFrame(
-            [], ", ".join(f"`{c}` string" for c in cols)
-        )
-        return empty, gvars, set()
-    named = quads.where(F.col(_GRAPH_COL).isNotNull())
-    if isinstance(gterm, Iri):
-        sliced = named.where(F.col(_GRAPH_COL) == gterm.value).drop(_GRAPH_COL)
-        gdf, gvars, g_nullable, deferred = _compile_optional_group(
-            sliced, pats, gfilters, nested, gexists, gbinds, set()
-        )
-        if deferred:  # pragma: no cover — outer_vars=∅ defers nothing
-            raise SparqlError(
-                "a GRAPH block filter may only reference variables "
-                "bound inside the block"
-            )
-        return (
-            gdf,
-            {v for v in gvars if not _is_internal(v)},
-            {v for v in g_nullable if not _is_internal(v)},
-        )
-    # variable graph: the FULL group grammar (nested OPTIONALs, FILTER
-    # EXISTS, BINDs) compiles with ?g threaded through every pattern
-    # scan — nested groups and EXISTS probes share ?g as an ordinary
-    # join/correlation variable, so §13.3's same-graph evaluation holds
-    # at every depth (r5 session 2; property paths and EXISTS-in-BIND
-    # probes stay cleanly rejected — their relations are graph-blind).
-    gname = gterm.name
-    gdf, gvars, g_nullable, deferred = _compile_optional_group(
-        named, pats, gfilters, nested, gexists, gbinds, set(),
-        graph_var=gname,
-    )
-    if deferred:  # pragma: no cover — outer_vars=∅ defers nothing
-        raise SparqlError(
-            "a GRAPH block filter may only reference variables bound "
-            "inside the block"
-        )
-    return (
-        gdf,
-        {v for v in gvars if not _is_internal(v)} | {gname},
-        {v for v in g_nullable if not _is_internal(v)},
-    )
+    return df, bound, small
 
 
 def _numeric_const(term) -> bool:
@@ -4129,8 +3375,8 @@ def _compile_bool(node, bound: set[str], scope: str = "the query") -> "F.Column"
         if tag == "exists_e":
             raise SparqlError(
                 f"EXISTS inside a boolean expression is only supported in "
-                f"FILTER clauses and BIND/projection expressions at the "
-                f"top level of WHERE, not in {scope}"
+                f"a group's FILTER and BIND/projection expressions, not in "
+                f"{scope}"
             )
         if tag == "ebv":
             # §17.2.2 effective boolean value of a VALUE operand —
@@ -4618,6 +3864,7 @@ def _compat_join(
     how: str = "inner",
     what: str = "this join",
     filters: list[tuple] | tuple = (),
+    left_hint: bool = False,
 ) -> DataFrame:
     """SPARQL's compatible join of two solution relations on their
     ``shared`` variables, when those may be UNBOUND (NULL) on either
@@ -4683,7 +3930,11 @@ def _compat_join(
     also leaves it unbound compiles over NULL columns → error → μ1
     kept. A pair with no effective key and F present anti-joins on F
     alone. Slices are disjoint row subsets projecting one column-name
-    set, so every by-name union here is bag-exact."""
+    set, so every by-name union here is bag-exact.
+
+    ``left_hint`` broadcast-hints the left side where it can be a build
+    side: in the inner-join pieces (Join, and the Join half of the
+    two-sided LeftJoin), never in the preserved left/semi/anti joins."""
     l_null = sorted(v for v in shared if v in left_nullable)
     r_null = sorted(v for v in shared if v in right_nullable)
     if len(l_null) + len(r_null) > _COMPAT_MAX_NULLABLE:
@@ -4744,6 +3995,8 @@ def _compat_join(
                 drop_l = keys_of(v for v in shared if v in br - bl)
                 drop_r = keys_of(v for v in shared if v not in br)
                 pl = sl.drop(*drop_l) if drop_l else sl
+                if left_hint:
+                    pl = F.broadcast(pl)
                 pr = r_sl.drop(*drop_r) if drop_r else r_sl
                 keys = keys_of(v for v in shared if v in bl & br)
                 pieces.append(
@@ -4809,150 +4062,37 @@ def _compat_join(
 _EXISTS_FLAG_SEQ = itertools.count(1)
 
 
-def _attach_expr_exists_flags(
-    triples: DataFrame,
-    df: DataFrame,
-    bound: set[str],
-    nullable: set[str],
-    node,
-    flags: list[str],
-    scope: str,
-):
-    """Replace ``("exists_e", …)`` nodes in an expression AST with
-    ``("flag", col)`` references attached to ``df`` — EXISTS inside
-    FILTER and BIND/projection expressions, top-level or GROUP-local
-    (late r4), each at its own evaluation point: the probe compiles
-    bottom-up against ``bound`` — the group-so-far at that point,
-    outer variables being out of scope there (§18.6 substitution only
-    covers dom(μ)) — and correlates through the compatible semi/anti
-    joins, flagging every row once. A probe sharing no variable with ``bound``
-    is a constant, evaluated once here. Returns (df, node); attached
-    flag column names accumulate in ``flags`` for the caller to
-    drop."""
-    if isinstance(node, tuple):
-        if node and node[0] == "exists_e":
-            gdf, _gvars, shared = _exists_probe(triples, node[1], bound, scope)
-            if not shared:
-                return df, ("const", not gdf.isEmpty())
-            # the EXISTS slice tagged true ∪ the NOT EXISTS slice tagged
-            # false: a per-row flag that never multiplies rows
-            flag = f"__exists_flag{next(_EXISTS_FLAG_SEQ)}"
-            what = f"an EXISTS in {scope}"
-            df = _compat_join(
-                df, nullable, gdf, set(), shared, "semi", what
-            ).withColumn(flag, F.lit(True)).unionByName(
-                _compat_join(
-                    df, nullable, gdf, set(), shared, "anti", what
-                ).withColumn(flag, F.lit(False))
-            )
-            flags.append(flag)
-            return df, ("flag", flag)
-        parts = []
-        for x in node:
-            df, nx = _attach_expr_exists_flags(
-                triples, df, bound, nullable, x, flags, scope
-            )
-            parts.append(nx)
-        return df, tuple(parts)
-    if isinstance(node, list):
-        parts = []
-        for x in node:
-            df, nx = _attach_expr_exists_flags(
-                triples, df, bound, nullable, x, flags, scope
-            )
-            parts.append(nx)
-        return df, parts
-    return df, node
+def _active_graph(dataset: DataFrame, graph) -> DataFrame:
+    """The relation a group's triple patterns scan — §13.3's active
+    graph. A 7-column relation is the all-default dataset. Over quads
+    (an 8th ``graph`` column, NULL for the default graph) a group
+    outside any GRAPH scans the default graph, ``GRAPH <iri>`` that
+    named graph, and ``GRAPH ?g`` every named graph with the ``graph``
+    column kept for the patterns to bind ?g from."""
+    if _GRAPH_COL not in dataset.columns:
+        return dataset
+    if graph is None:
+        return dataset.where(F.col(_GRAPH_COL).isNull()).drop(_GRAPH_COL)
+    named = dataset.where(F.col(_GRAPH_COL).isNotNull())
+    if isinstance(graph, Iri):
+        return named.where(F.col(_GRAPH_COL) == graph.value).drop(_GRAPH_COL)
+    return named
 
 
-def _apply_group_binds(
-    df: DataFrame,
-    gbinds: list[tuple],
-    outer_bound: set[str],
-    scope: str,
-    triples: DataFrame | None = None,
-    nullable: set[str] | None = None,
-) -> tuple[DataFrame, set[str]]:
-    """Group-local BINDs (r4): evaluated over the group's own solutions
-    in textual order — each (expr, name, seen) entry recorded the
-    variables bound textually BEFORE it inside the group, so an
-    expression referencing anything else (outer variables, which are
-    out of scope at bottom-up group evaluation, or textually later
-    bindings) is rejected rather than mis-evaluated. A target name
-    colliding with an outer variable is rejected too: SPARQL would
-    make it a compatibility-join variable at the enclosing
-    LeftJoin/Union/Minus, which the equi-join key sets here do not
-    carry. (Late r4) [NOT] EXISTS inside a group-bind expression
-    compiles when ``triples`` is provided: the probe flags against the
-    group's own solutions at the bind's textual point, exactly like a
-    group-level FILTER EXISTS — correlation through variables the
-    group binds (bottom-up scoping; a probe referencing outer-only
-    variables is rejected via the group-so-far check below), nullable
-    correlation keys through the slice decomposition via ``nullable``
-    (earlier bind targets are always included). Returns (df, bind
-    names) — callers add the names to the group's variables and to
-    the nullable set (§10.1: an evaluation error leaves the variable
-    unbound with the row kept)."""
-    names: set[str] = set()
-    for expr, name, seen in gbinds:
-        if name in outer_bound:
-            raise SparqlError(
-                f"BIND target ?{name} in {scope} collides with a variable "
-                "bound outside the group — SPARQL's compatibility join on "
-                "it is not expressible here; rename the BIND target"
-            )
-        refs = {v for v in _expr_input_vars(expr) if not _is_internal(v)}
-        bad = sorted(refs - set(seen))
-        if bad:
-            raise SparqlError(
-                f"a BIND in {scope} references variable(s) {bad} bound "
-                "outside the group or textually later — SPARQL evaluates "
-                "BIND over the group-so-far"
-            )
-        bind_flags: list[str] = []
-        if _has_exists_e(expr):
-            if triples is None:
-                raise SparqlError(
-                    f"EXISTS inside a BIND expression is not supported "
-                    f"in {scope}"
-                )
-            df, expr = _attach_expr_exists_flags(
-                triples, df, set(seen),
-                (nullable or set()) | names, expr, bind_flags, scope,
-            )
-        val, kind, lg, dt = _eval_bind_expr(expr, set(seen), scope)
-        k, l, d = _shadow_cols(name)
-        df = (
-            df.withColumn(name, val)
-            .withColumn(k, F.when(val.isNotNull(), kind))
-            .withColumn(l, F.when(val.isNotNull(), lg))
-            .withColumn(d, F.when(val.isNotNull(), dt))
-        )
-        if bind_flags:
-            df = df.drop(*bind_flags)
-        names.add(name)
-    return df, names
-
-
-def _null_substitute_unscoped(
+def _apply_unscoped(
     df: DataFrame, filters: list[tuple], scoped: set[str], scope: str
-) -> tuple[DataFrame, list[tuple], set[str], list[str]]:
-    """§18.2 filter scoping (r5, closing the VERDICT r4 residue): a
-    filter variable bound neither in its own group nor in the scope the
-    caller passes (the immediate left side for OPTIONAL groups; nothing
-    for UNION branches, which evaluate independently) is UNBOUND where
-    SPARQL evaluates F — even if some textually-outer level binds the
-    same name. Formerly these forms were REJECTED; now the reference is
-    rewritten to a fresh always-NULL term column, so the ordinary
-    unbound semantics apply exactly: value tests error → false,
-    ``bound()`` false, ``!bound()`` true, ``COALESCE`` falls through.
+) -> DataFrame:
+    """Apply filters whose references ``scoped`` does not cover, with
+    those references UNBOUND (§18.2 scoping: a group SPARQL evaluates
+    on its own sees nothing outside it, even where an outer level binds
+    the same name). Each such reference is rewritten to a fresh
+    always-NULL term column, so the ordinary unbound semantics apply:
+    value tests error → false, ``bound()`` false, ``!bound()`` true,
+    ``COALESCE`` falls through.
 
-    Filters carrying [NOT] EXISTS keep the rejection: renaming would
-    also rewrite probe-pattern occurrences, and §18.6 substitution
-    treats an out-of-scope probe variable as probe-local, not unbound.
-
-    Returns (df-with-null-columns, rewritten filters, internal names to
-    extend the bound set with, columns to drop after the filters run)."""
+    Filters carrying [NOT] EXISTS are rejected: §18.6 substitution
+    treats an out-of-scope probe variable as probe-local, not unbound,
+    which the rename cannot express."""
     out: list[tuple] = []
     extra: set[str] = set()
     drop: list[str] = []
@@ -4981,298 +4121,201 @@ def _null_substitute_unscoped(
                     )
                     drop += [nv, k, l, d]
         out.append(f)
-    return df, out, extra, drop
+    df = _apply_filters(df, out, scoped | extra, scope)
+    return df.drop(*drop) if drop else df
 
 
-def _compile_optional_group(
-    triples: DataFrame,
-    gpats: list[tuple], gfilters: list[tuple], nested: list[tuple],
-    gexists: list[tuple], gbinds: list[tuple], outer_vars: set[str],
-    graph_var: str | None = None,
-) -> tuple[DataFrame, set[str], set[str], list[tuple]]:
-    """One OPTIONAL group with arbitrarily deep nested OPTIONALs →
-    (solutions, bound vars, nullable vars, deferred filters). Each
-    nested group compiles recursively and left-joins its parent in
-    textual order — LeftJoin(A, B) at every level, the
-    well-designed-pattern evaluation — through the same compatible
-    LEFT join as the top-level LeftJoin (``_compat_join``): disjoint
-    domains, join keys an earlier nested OPTIONAL left nullable on
-    the PARENT side, and keys nullable on the NESTED side (bound only
-    inside a deeper OPTIONAL of the nested group) all compile, each
-    composing with deferred cross-group filters — no LeftJoin form is
-    rejected.
+def _exists_probe(
+    dataset: DataFrame,
+    probe: SimpleNamespace,
+    bound: set[str],
+    outer_bound: set[str],
+    scope: str,
+    graph=None,
+) -> tuple[DataFrame, list[str]]:
+    """Compile one [NOT] EXISTS probe group evaluated against a group
+    that binds ``bound`` → (probe solutions, correlation variables).
 
-    A group filter referencing variables the group itself never
-    binds — but its immediate LEFT side does (``outer_vars``) — is
-    SPARQL's LeftJoin(A, G, F) with a cross-group F: it cannot be
-    applied inside the group, so it is RETURNED and the caller
-    compiles it into the left-join condition (``_compat_join``).
-    Filters reaching past the immediate left side (two levels up)
-    are rejected: SPARQL scopes F at its own LeftJoin, where such
-    variables are unbound."""
-    gdf, gvars = _join_patterns(triples, gpats, graph_var=graph_var)
-    g_nullable: set[str] = set()
-    for npats, nfilters, nnested, nexists, nbinds in nested:
-        ndf, nvars, n_nullable, ndeferred = _compile_optional_group(
-            triples, npats, nfilters, nnested, nexists, nbinds,
-            gvars | outer_vars, graph_var=graph_var,
-        )
-        if ndeferred:
-            # (r5, formerly the "two levels up" rejection) classify the
-            # nested group's deferred filters by what they actually
-            # reach: refs confined to the nested group + THIS group
-            # stay deferred (true LeftJoin(G,N,F) cross-group F); refs
-            # to variables bound at NEITHER level are UNBOUND at the
-            # nested LeftJoin per §18.2 — when the filter's in-scope
-            # refs stay inside the nested group it applies to N itself
-            # with the unbound refs NULL-substituted (local filters
-            # commute into N for well-designed patterns); a filter
-            # mixing THIS group's vars with unbound refs keeps a clean
-            # rejection.
-            still, nlocal = [], []
-            for f in ndeferred:
-                fv = {v for v in _expr_vars(f) if not _is_internal(v)}
-                deepv = fv - nvars - gvars
-                if not deepv:
-                    still.append(f)
-                elif fv & gvars:
-                    raise SparqlError(
-                        f"a nested OPTIONAL filter references both the "
-                        f"enclosing group's variables and variable(s) "
-                        f"{sorted(deepv)} bound further out or nowhere "
-                        "— unbound there per §18.2 scoping; this "
-                        "combined form is not supported, split the "
-                        "filter"
-                    )
-                else:
-                    nlocal.append(f)
-            if nlocal:
-                ndf, nlocal, unb_names, unb_cols = _null_substitute_unscoped(
-                    ndf, nlocal, nvars, "this nested OPTIONAL group"
-                )
-                ndf = _apply_filters(
-                    ndf, nlocal, nvars | unb_names,
-                    "this nested OPTIONAL group",
-                )
-                ndf = ndf.drop(*unb_cols)
-            ndeferred = still
-        nshared = sorted(v for v in nvars if v in gvars)
-        gdf = _compat_join(
-            gdf, g_nullable, ndf, n_nullable, nshared, "left",
-            "this nested OPTIONAL group", ndeferred,
-        )
-        g_nullable |= (nvars - gvars) | n_nullable
-        gvars |= nvars
-    # (r4) group-local BINDs: over the group's own solutions
-    # (incl. nested-OPTIONAL bindings textually before them),
-    # before the group filters, which see the targets group-wide
-    gdf, bnames = _apply_group_binds(
-        gdf, gbinds, outer_vars, "this OPTIONAL group",
-        # under GRAPH ?g an EXISTS-in-BIND probe would scan across
-        # graphs without binding ?g — triples=None makes that combo a
-        # clean rejection while plain BINDs compile
-        triples=None if graph_var is not None else triples,
-        nullable=set(g_nullable),
+    §18.6 substitutes the row's bindings into the probe, so the probe
+    correlates through the variables it shares with ``bound``.
+    ``outer_bound`` is what the enclosing operator also puts in scope
+    (the left side of an OPTIONAL's LeftJoin): a probe variable bound
+    only there would need that substitution at bottom-up compile time,
+    so it is rejected. Probe filters referencing the outer row are
+    rejected for the same reason; references bound nowhere are unbound.
+
+    A correlation key bound only inside the probe's own OPTIONAL: with
+    no probe filter nothing can remove a probe base solution —
+    LeftJoin keeps every required-part row, Extend never drops — so
+    existence does not depend on the key and it leaves the
+    correlation. With probe filters (they can remove rows whose
+    OPTIONAL bindings the substitution would constrain) it is
+    rejected."""
+    outer = bound | outer_bound
+    gdf, gvars, p_nullable, deferred = _compile_group(
+        dataset, probe, outer, graph, f"an EXISTS probe in {scope}"
     )
-    gvars |= bnames
-    g_nullable |= bnames  # §10.1: NULL on evaluation error
-    # group filter == LeftJoin(A, G, F): filters bound entirely
-    # inside the group apply over the whole group result (incl.
-    # nested-OPTIONAL bindings) — equivalent to putting them in F;
-    # filters that also need the LEFT side's variables defer to the
-    # caller's join condition
-    # split the filters: fully-group-local apply here; referencing the
-    # immediate left side defer to the caller's join condition; and (r5,
-    # formerly rejected by the callers) a filter whose OTHER references
-    # are group-local but which also names variables bound neither here
-    # nor on the immediate left side takes the §18.2 unbound
-    # substitution — those variables are unbound at this group's own
-    # LeftJoin even if a textually-outer level binds the name — and
-    # then applies locally. A filter that BOTH defers and carries
-    # unscoped references keeps the clean rejection (the join-condition
-    # compiler's renames do not carry the substitution columns).
-    local: list[tuple] = []
-    deferred: list[tuple] = []
-    subst: list[tuple] = []
-    for f in gfilters:
-        fv = {v for v in _expr_vars(f) if not _is_internal(v)}
-        refs = {v for v in _expr_input_vars(f) if not _is_internal(v)}
-        unscoped = refs - gvars - outer_vars
-        if unscoped and (fv - unscoped) <= gvars:
-            subst.append(f)
-        elif unscoped:
-            raise SparqlError(
-                f"a filter in this OPTIONAL group references both the "
-                f"enclosing group's variables and variable(s) "
-                f"{sorted(unscoped)} bound in neither — the combined "
-                "cross-group + unbound-substitution form is not "
-                "supported; split the filter"
+    deep = sorted({
+        v for f in deferred for v in _expr_vars(f)
+        if v in outer and v not in gvars and not _is_internal(v)
+    })
+    if deep:
+        raise SparqlError(
+            f"an EXISTS in {scope} references variable(s) {deep} not "
+            "bound in the probe group — SPARQL's §18.6 substitution for "
+            "that correlation is not expressible here"
+        )
+    gdf = _apply_unscoped(gdf, deferred, gvars, f"an EXISTS probe in {scope}")
+    corr = sorted(
+        v for v in gvars
+        if v in outer_bound and v not in bound and not _is_internal(v)
+    )
+    if corr:
+        raise SparqlError(
+            f"an EXISTS inside {scope} references variable(s) {corr} "
+            "bound outside the group — SPARQL's substitution semantics "
+            "for that correlation are not expressible as a semi-join on "
+            "group keys"
+        )
+    shared = sorted(v for v in gvars if v in bound and not _is_internal(v))
+    probe_null = [v for v in shared if v in p_nullable]
+    if probe_null and probe.filters:
+        raise SparqlError(
+            f"an EXISTS in {scope} correlates through variable(s) "
+            f"{probe_null} its own OPTIONAL may leave unbound — §18.6 "
+            "substitution over a nullable probe key is not expressible "
+            "when the probe carries filters"
+        )
+    return gdf, [v for v in shared if v not in p_nullable]
+
+
+def _attach_expr_exists_flags(
+    dataset: DataFrame,
+    df: DataFrame,
+    node,
+    bound: set[str],
+    nullable: set[str],
+    outer_bound: set[str],
+    scope: str,
+    graph=None,
+) -> tuple[DataFrame, object, list[str]]:
+    """Replace the ``("exists_e", …)`` nodes of a FILTER or BIND
+    expression with ``("flag", col)`` references to boolean columns
+    attached to ``df``: the probe's semi-join slice tagged true ∪ its
+    anti-join slice tagged false, so a flag never multiplies rows. A
+    probe sharing no variable with ``bound`` is a constant, evaluated
+    once here. Returns (df, node, flag columns for the caller to drop
+    after evaluating the expression)."""
+    flags: list[str] = []
+
+    def walk(n):
+        nonlocal df
+        if isinstance(n, tuple) and n and n[0] == "exists_e":
+            gdf, shared = _exists_probe(
+                dataset, n[1], bound, outer_bound, scope, graph
             )
-        elif fv <= gvars:
-            local.append(f)
-        else:
-            deferred.append(f)
-    gdf = _apply_filters(gdf, local, gvars, "this OPTIONAL group")
-    if subst:
-        gdf, subst, unb_names, unb_cols = _null_substitute_unscoped(
-            gdf, subst, gvars, "this OPTIONAL group"
-        )
-        gdf = _apply_filters(
-            gdf, subst, gvars | unb_names, "this OPTIONAL group"
-        )
-        gdf = gdf.drop(*unb_cols)
-    # [NOT] EXISTS group filters (r4): Filter(EXISTS(P), G) — the
-    # same semi/anti-join compilation as top-level EXISTS, applied
-    # to the GROUP's solutions. Correlation is through variables
-    # the group itself binds; an EXISTS pattern referencing an
-    # outer-only variable would need SPARQL's substitution
-    # semantics, which a semi-join on group keys cannot express.
-    # Recursive for EXISTS-in-EXISTS.
-    gdf = _apply_group_exists(
-        triples, gdf, gvars, gexists, outer_vars, "an OPTIONAL group",
-        nullable_vars=g_nullable, graph_var=graph_var,
-    )
-    return gdf, gvars, g_nullable, deferred
+            if not shared:
+                return ("const", not gdf.isEmpty())
+            flag = f"__exists_flag{next(_EXISTS_FLAG_SEQ)}"
+            what = f"an EXISTS in {scope}"
+            df = _compat_join(
+                df, nullable, gdf, set(), shared, "semi", what
+            ).withColumn(flag, F.lit(True)).unionByName(
+                _compat_join(
+                    df, nullable, gdf, set(), shared, "anti", what
+                ).withColumn(flag, F.lit(False))
+            )
+            flags.append(flag)
+            return ("flag", flag)
+        if isinstance(n, tuple):
+            return tuple(walk(x) for x in n)
+        if isinstance(n, list):
+            return [walk(x) for x in n]
+        return n
+
+    node = walk(node)
+    return df, node, flags
 
 
-def _compile_where(
-    triples: DataFrame, parsed: SimpleNamespace
+def _apply_bind(
+    dataset: DataFrame,
+    df: DataFrame,
+    bound: set[str],
+    nullable: set[str],
+    bind: tuple[object, str],
+    snap: set[str],
+    outer_bound: set[str] = frozenset(),
+    scope: str = "the query",
+    graph=None,
 ) -> tuple[DataFrame, set[str], set[str]]:
-    """Compile the WHERE clause (patterns, UNION, VALUES, OPTIONAL,
-    FILTER, EXISTS, GRAPH) → (solutions DF with term shadow columns,
-    bound variables, OPTIONAL-nullable variables)."""
-    # (r5) RDF dataset split: an 8-column quad relation carries named
-    # graphs in the `graph` column; patterns OUTSIDE any GRAPH block
-    # match only the DEFAULT graph (graph IS NULL, §13.3), GRAPH
-    # blocks see the named slice. A 7-column relation is the
-    # all-default dataset, unchanged.
-    quads = triples if _GRAPH_COL in triples.columns else None
-    # subqueries re-enter the FULL dataset (their own _compile_where
-    # re-splits it), so a GRAPH block inside { SELECT } still sees the
-    # named graphs; every other consumer here evaluates against the
-    # default graph per §13.3's active-graph rule
-    dataset = triples
-    if quads is not None:
-        triples = quads.where(F.col(_GRAPH_COL).isNull()).drop(_GRAPH_COL)
-    patterns, unions = parsed.patterns, parsed.unions
-    filters, exists_blocks = parsed.filters, parsed.exists_blocks
-    values_blocks = parsed.values_blocks
-    df: DataFrame | None = None
-    bound: set[str] = set()
-    # vars that may be NULL (= SPARQL unbound): introduced by OPTIONAL,
-    # by UNION branches that don't all bind them, and by BIND errors
-    nullable: set[str] = set()
-    if patterns:
-        df, bound = _join_patterns(triples, patterns)
+    """BIND(expr AS ?v) — Extend at its textual point: computed per row
+    over the group-so-far (``snap``: the variables textually earlier
+    elements bind), so an EXISTS in the expression substitutes exactly
+    those. An evaluation error leaves ?v unbound with the row kept
+    (§10.1), so ?v is nullable from here on. The target must be fresh:
+    bound in the group already, or (in an OPTIONAL group or EXISTS
+    probe) by the enclosing operator's outer side, it is rejected."""
+    expr, name = bind
+    if name in bound:
+        raise SparqlError(
+            f"BIND target ?{name} is already bound in this group "
+            "(SPARQL requires a fresh variable)"
+        )
+    if name in outer_bound:
+        raise SparqlError(
+            f"BIND target ?{name} in {scope} collides with a variable "
+            "bound outside the group — rename the BIND target"
+        )
+    df, expr, flags = _attach_expr_exists_flags(
+        dataset, df, expr, bound & snap, nullable, set(), scope, graph
+    )
+    val, kind, lg, dt = _eval_bind_expr(expr, bound, scope)
+    k, l, d = _shadow_cols(name)
+    df = (
+        df.withColumn(name, val)
+        .withColumn(k, F.when(val.isNotNull(), kind))
+        .withColumn(l, F.when(val.isNotNull(), lg))
+        .withColumn(d, F.when(val.isNotNull(), dt))
+    )
+    if flags:
+        df = df.drop(*flags)
+    return df, bound | {name}, nullable | {name}
 
-    # the join-element compilers below are shared by the early
-    # (hoisted, join-commutative) loops AND the textual timeline walk —
-    # each takes and returns the evolving (df, bound, nullable) triple
 
-    def _join_in(df, bound, nullable, rdf, rvars, r_nullable, what):
-        """Join(df, rdf) on the shared variables, either side possibly
-        leaving them unbound (the compatible join)."""
-        if df is None:
-            return rdf, set(rvars), nullable | r_nullable
-        shared = sorted(v for v in rvars if v in bound and not _is_internal(v))
-        df = _compat_join(df, nullable, rdf, r_nullable, shared, "inner", what)
-        # a shared variable leaves the nullable set unless BOTH sides
-        # could leave it unbound (the neither-bound piece keeps it
-        # NULL); unshared right-side nullables stay nullable
-        both = {v for v in shared if v in nullable and v in r_nullable}
-        nullable = (nullable - (set(shared) - both)) | (set(r_nullable) - set(shared))
-        return df, bound | set(rvars), nullable
+def _compile_scoped(
+    dataset: DataFrame, group: SimpleNamespace, graph, scope: str
+) -> tuple[DataFrame, set[str], set[str]]:
+    """A group SPARQL evaluates on its own — a UNION branch, a MINUS
+    group, a GRAPH block: nothing outside it is in scope, so its
+    filters' references to variables it does not bind are UNBOUND
+    (``_apply_unscoped``). → (solutions, bound vars, nullable vars)."""
+    df, bound, nullable, deferred = _compile_group(
+        dataset, group, set(), graph, scope
+    )
+    return _apply_unscoped(df, deferred, bound, scope), bound, nullable
 
-    def _join_union(df, bound, nullable, branches):
+
+def _element_relation(
+    dataset: DataFrame, kind: str, payload, bound: set[str], graph
+) -> tuple[DataFrame, set[str], set[str], str]:
+    """A join element other than a triple pattern — UNION, { SELECT },
+    VALUES, GRAPH — → (relation, variables, variables it may leave
+    unbound, a name for error messages)."""
+    if kind == "union":
         compiled = []
-        for branch in branches:
-            if branch and branch[0] == "graphbranch":
-                # (r5) a branch that IS one GRAPH block — the common
-                # per-graph alternation — compiles through the GRAPH
-                # compiler and unions like any branch
-                _, gterm_, gblock_ = branch
-                bdf, bvars, b_nullable = _compile_graph_block(
-                    triples, quads, gterm_, gblock_, bound
-                )
-                compiled.append((
-                    bdf,
-                    {v for v in bvars if not _is_internal(v)},
-                    {v for v in b_nullable if not _is_internal(v)},
-                ))
-                continue
-            pats, gfilters, nested, gexists, gbinds = branch
-            if nested:
-                # (late r4, formerly rejected) OPTIONAL inside a UNION
-                # branch: the branch IS a group — compile it with the
-                # same recursive LeftJoin machinery as an OPTIONAL
-                # group; variables its OPTIONALs may leave unbound are
-                # branch-nullable and flow into the union's nullable
-                # set. Branch filters must be branch-local: SPARQL
-                # evaluates each branch independently, so an outer
-                # variable is unbound inside it.
-                bdf, bvars, b_nullable, bdeferred = _compile_optional_group(
-                    triples, pats, gfilters, nested, gexists, gbinds, bound
-                )
-                if bdeferred:
-                    # (r5, formerly rejected) a UNION branch has no
-                    # left side: every non-branch reference is UNBOUND
-                    # where the branch filter evaluates (§18.2 — each
-                    # branch evaluates independently), even when the
-                    # outer query binds the name — NULL-substitute and
-                    # apply branch-locally
-                    bdf, bdeferred, unb_names, unb_cols = (
-                        _null_substitute_unscoped(
-                            bdf, bdeferred, bvars, "this UNION branch"
-                        )
-                    )
-                    bdf = _apply_filters(
-                        bdf, bdeferred, bvars | unb_names,
-                        "this UNION branch",
-                    )
-                    bdf = bdf.drop(*unb_cols)
-            else:
-                bdf, bvars = _join_patterns(triples, pats)
-                bdf, bnames = _apply_group_binds(
-                    bdf, gbinds, bound, "this UNION branch",
-                    triples=triples, nullable=set(),
-                )
-                bvars |= bnames
-                b_nullable = set(bnames)
-                # (r5) non-branch refs are unbound inside the branch —
-                # NULL-substitute instead of rejecting (§18.2 scoping)
-                bdf, gfilters, unb_names, unb_cols = (
-                    _null_substitute_unscoped(
-                        bdf, gfilters, bvars, "this UNION branch"
-                    )
-                )
-                bdf = _apply_filters(
-                    bdf, gfilters, bvars | unb_names, "this UNION branch"
-                )
-                if unb_cols:
-                    bdf = bdf.drop(*unb_cols)
-                # (r4) [NOT] EXISTS inside the branch: Filter(EXISTS(P), B)
-                # — the same semi/anti-join compilation as the top level,
-                # applied to the BRANCH's solutions (SPARQL evaluates the
-                # branch group bottom-up, so correlation is through
-                # variables the branch itself binds); recursive for
-                # EXISTS-in-EXISTS
-                bdf = _apply_group_exists(
-                    triples, bdf, bvars, gexists, bound, "a UNION branch"
-                )
-            # path-expansion internals are branch-local: project them
-            # away before the union (bag semantics keep multiplicity)
+        for br in payload:
+            bdf, bvars, b_nullable = _compile_scoped(
+                dataset, br, graph, "this UNION branch"
+            )
+            # path-expansion internals are branch-local
             compiled.append((
                 bdf,
                 {v for v in bvars if not _is_internal(v)},
                 {v for v in b_nullable if not _is_internal(v)},
             ))
-        # branches may bind DIFFERENT variables (SPARQL 1.1 UNION):
-        # a variable missing from a branch is unbound there — padded
-        # with NULL term columns, and tracked as nullable so every
-        # later join either decomposes (compatible join) or rejects
+        # branches may bind DIFFERENT variables: a variable missing
+        # from a branch is unbound there — NULL-padded and nullable
         varset = set().union(*(vs for _, vs, _nn in compiled))
-        # definitely bound in EVERY branch (not via an OPTIONAL/BIND
-        # that may leave it NULL) → never unbound after the union
         definite = set.intersection(*(vs - nn for _, vs, nn in compiled))
         cols = [x for v in sorted(varset) for x in _term_key(v)]
         padded = []
@@ -5281,16 +4324,16 @@ def _compile_where(
                 for c in _term_key(v):
                     bdf = bdf.withColumn(c, F.lit(None).cast("string"))
             padded.append(bdf.select(*cols))
-        u = padded[0]
-        for bdf in padded[1:]:
-            u = u.unionByName(bdf)  # bag union (SPARQL UNION)
-        return _join_in(
-            df, bound, nullable, u, varset, varset - definite,
-            "this UNION block",
-        )
-
-    def _join_sub(df, bound, nullable, sub):
-        sdf, svars, alias_names, s_nullable = _compile_subselect(dataset, sub)
+        union = functools.reduce(DataFrame.unionByName, padded)  # bag union
+        return union, varset, varset - definite, "this UNION block"
+    if kind == "sub":
+        if graph is not None:
+            raise SparqlError(
+                "a { SELECT } subquery inside GRAPH is not supported — "
+                "put the GRAPH block inside the subquery"
+            )
+        # subqueries see the FULL dataset: their own WHERE splits it
+        sdf, svars, alias_names, s_nullable = _compile_subselect(dataset, payload)
         clash = sorted(alias_names & bound)
         if clash:
             raise SparqlError(
@@ -5298,21 +4341,12 @@ def _compile_where(
                 "variables — aliases cannot be outer join keys (their term "
                 "components are derived); rename the alias"
             )
-        # a projected variable the subquery may leave unbound (inner
-        # OPTIONAL / mixed-variable UNION) takes the compatible join,
-        # not a raw equi-join that would drop the row
-        return _join_in(
-            df, bound, nullable, sdf, svars | alias_names, s_nullable,
-            "this subquery",
-        )
-
-    def _join_values(df, bound, nullable, block):
-        vars_, rows = block
-        if df is None:  # defensive: VALUES as the only relation so far
-            raise SparqlError("VALUES needs a graph pattern to join")
+        return sdf, svars | alias_names, s_nullable, "this subquery"
+    if kind == "values":
         # inline constant bindings as a tiny broadcast relation carrying
         # the same 4 term columns per variable as any pattern; an UNDEF
         # cell is NULL across all four columns (unbound in that row)
+        vars_, rows = payload
         data = []
         v_nullable: set[str] = set()
         for row in rows:
@@ -5328,233 +4362,279 @@ def _compile_where(
             data.append(tuple(flat))
         cols = [c for v in vars_ for c in _term_key(v)]
         vdf = F.broadcast(
-            triples.sparkSession.createDataFrame(
+            dataset.sparkSession.createDataFrame(
                 data, ", ".join(f"`{c}` string" for c in cols)
             )
         )
-        # either side may be nullable on a shared variable — the VALUES
-        # side via UNDEF rows, df via a mixed-variable UNION — or both;
-        # unshared variables with UNDEF rows reach the outer query as
-        # nullable (a later FILTER bound(?v) sees them unbound)
-        return _join_in(
-            df, bound, nullable, vdf, set(vars_), v_nullable,
-            "this VALUES block",
+        return vdf, set(vars_), v_nullable, "this VALUES block"
+    assert kind == "graph", kind
+    gterm, group = payload
+    gv = {gterm.name} if isinstance(gterm, Var) else set()
+    if _GRAPH_COL not in dataset.columns:
+        # no named graphs in a 7-column dataset: the empty bag over the
+        # block's variables (typed columns so later joins analyze)
+        gvars = _group_vars(group)[0] | gv
+        cols = [c for v in sorted(gvars) for c in _term_key(v)]
+        empty = dataset.sparkSession.createDataFrame(
+            [], ", ".join(f"`{c}` string" for c in cols)
         )
+        return empty, gvars, set(), "this GRAPH block"
+    gdf, gvars, g_nullable = _compile_scoped(
+        dataset, group, gterm, "this GRAPH block"
+    )
+    if gv and (not gv <= gvars or gv & g_nullable):
+        raise SparqlError(
+            f"GRAPH ?{gterm.name} needs every solution of its block to "
+            "come from its own triple patterns (a nested GRAPH or an "
+            "OPTIONAL-only block does not bind the graph variable)"
+        )
+    return (
+        gdf,
+        {v for v in gvars if not _is_internal(v)},
+        {v for v in g_nullable if not _is_internal(v)},
+        "this GRAPH block",
+    )
 
-    def _join_graph(df, bound, nullable, gterm, group):
-        gdf, gvars, g_nullable = _compile_graph_block(
-            triples, quads, gterm, group, bound
-        )
-        return _join_in(
-            df, bound, nullable, gdf, gvars, g_nullable, "this GRAPH block"
-        )
 
-    for branches in unions:
-        df, bound, nullable = _join_union(df, bound, nullable, branches)
-    for sub in parsed.subselects:
-        df, bound, nullable = _join_sub(df, bound, nullable, sub)
-    for gterm, group in getattr(parsed, "graph_blocks", []):
-        df, bound, nullable = _join_graph(df, bound, nullable, gterm, group)
-    for block in values_blocks:
-        df, bound, nullable = _join_values(df, bound, nullable, block)
+_ORDERED = ("optional", "minus", "bind")
 
-    # ---- the textual timeline (full r4) ----
-    # OPTIONAL, MINUS, and BIND do not commute with joins on the
-    # variables they leave unbound, key on, or consume — so the parser
-    # records them, plus every join element (triple-pattern run, UNION,
-    # VALUES, subquery) sharing such a variable, in textual order, and
-    # this walk applies each at its own position: Join(LeftJoin(A,G),B),
-    # Join(Minus(A,M),B), Join(Extend(A,?v,e),B) exactly as §18.2
-    # translates the group. Join elements sharing none of those
-    # variables were hoisted into the early loops above, exact because
-    # SPARQL Join is commutative and associative.
 
-    def _apply_optional(df, bound, nullable, group):
-        gpats, gfilters, nested, gexists, gbinds = group
-        gdf, gvars, g_nullable, deferred = _compile_optional_group(
-            triples, gpats, gfilters, nested, gexists, gbinds, bound
-        )
-        deep = sorted(
-            v
-            for f in deferred
-            for v in _expr_vars(f)
-            if not _is_internal(v) and v not in gvars and v not in bound
-        )
-        if deep:
-            raise SparqlError(
-                f"an OPTIONAL filter references unbound variable(s) {deep}"
+def _compile_group(
+    dataset: DataFrame,
+    group: SimpleNamespace,
+    outer_bound: set[str],
+    graph=None,
+    scope: str = "the query",
+) -> tuple[DataFrame, set[str], set[str], list[tuple]]:
+    """Every braced group — the WHERE clause, OPTIONAL, MINUS, UNION
+    branches, GRAPH blocks, EXISTS probes — by §18.2's translation →
+    (solutions with term shadow columns, bound variables, variables
+    that may be unbound, deferred filters).
+
+    ``dataset`` is the full relation (7 columns, or quads with a
+    ``graph`` column); ``graph`` (None, an Iri, or a Var) picks the
+    active graph the patterns scan (``_active_graph``). ``outer_bound``
+    is what the enclosing operator puts in scope besides the group: the
+    left side of an OPTIONAL's LeftJoin, the outer row of an EXISTS.
+
+    Order: OPTIONAL, MINUS and BIND do not commute with joins on the
+    variables they leave unbound, key on, or consume (the guard set), so
+    they apply at their textual position — Join(LeftJoin(A,G),B),
+    Join(Minus(A,M),B), Join(Extend(A,?v,e),B) — together with every
+    join element sharing a guard variable. Join elements sharing none
+    hoist before them as one BGP (then UNION, subquery, GRAPH and
+    VALUES relations): exact, since Join is commutative and associative
+    and the guard covers every variable the non-commuting operators
+    observe. Then the filters, over the whole group: EXISTS inside an
+    expression becomes a per-row flag, a statement-level [NOT] EXISTS
+    a semi/anti join. A filter referencing a variable the group does
+    not bind is returned, not applied: an OPTIONAL puts it in its
+    LeftJoin condition, a group evaluated on its own substitutes
+    unbound (``_compile_scoped``), the top level rejects it.
+
+    A lone ``?x rdf:type <C>`` slice is broadcast-hinted only where it
+    can be the build side: when an inner join consumes it, or when the
+    group returns it — never while it is the preserved side of the
+    group's own LeftJoin/MINUS/EXISTS."""
+    active = _active_graph(dataset, graph)
+    graph_var = graph.name if isinstance(graph, Var) else None
+    hoisted: dict[str, list] = {
+        k: [] for k in ("patterns", "union", "sub", "graph", "values")
+    }
+    timeline: list[tuple[str, object, set[str]]] = []
+    guard: set[str] = set()
+    maybe_null: set[str] = set()  # superset: vars possibly unbound here
+    seen: set[str] = set()  # vars textually earlier elements bind
+    for kind, payload in group.elements:
+        may, must = _elem_vars(kind, payload)
+        if kind == "optional":
+            guard |= may | {v for f in payload.filters for v in _expr_vars(f)}
+            maybe_null |= may - seen
+        elif kind == "minus":
+            # its compatibility domain: the group-so-far's variables
+            guard |= _group_vars(payload)[0] & seen
+        elif kind == "bind":
+            expr, _name = payload
+            later = sorted(
+                v for v in _expr_input_vars(expr)
+                if v not in seen and not _is_internal(v)
             )
-        shared = sorted(v for v in gvars if v in bound)
-        df = _compat_join(
-            df, nullable, gdf, g_nullable, shared, "left", "this OPTIONAL",
-            deferred,
-        )
-        return df, bound | gvars, nullable | (gvars - bound)
-
-    def _apply_minus(df, bound, nullable, group):
-        # MINUS (SPARQL 1.1 §8.3): drop solutions compatible with some
-        # right-side solution on a NON-EMPTY shared domain. With every
-        # shared variable non-nullable this is exactly an anti join; a
-        # MINUS sharing no variable removes nothing and compiles away.
-        # The compatibility domain is the group-so-far AT THE MINUS'S
-        # TEXTUAL POINT: `snap` holds the variables bound before it,
-        # and the anti join runs HERE, at the Minus's own timeline
-        # position — an element rebinding a snapshot variable evaluates
-        # after the removal, exactly as §18.2 orders it (full r4; such
-        # elements were formerly rejected).
-        gpats, gfilters, gnested, gexists, gbinds, snap = group
-        if gnested:
-            # (late r4) nested OPTIONALs inside the MINUS group: the
-            # right side compiles as a group; its OPTIONAL-nullable
-            # variables feed the two-sided §8.3 decomposition below.
-            # Group filters must be group-local (a filter referencing
-            # outer variables would need substitution scoping).
-            gdf, gvars, m_nullable, mdeferred = _compile_optional_group(
-                triples, gpats, gfilters, gnested, gexists, gbinds, bound
-            )
-            if mdeferred:
-                deep = sorted({
-                    v
-                    for f in mdeferred
-                    for v in _expr_vars(f)
-                    if not _is_internal(v) and v not in gvars
-                })
+            if later:
                 raise SparqlError(
-                    f"a MINUS filter references variable(s) {deep} not "
-                    "bound in the group"
+                    f"BIND expression references variable(s) {later} the "
+                    "group-so-far does not bind: SPARQL evaluates BIND over "
+                    "the group-so-far, so a variable bound textually later, "
+                    "outside the group, or nowhere is unbound there — move "
+                    "the BIND after the pattern that binds it"
                 )
+            # a later element rebinding a possibly-unbound input would
+            # change what the BIND computed at its textual point
+            guard |= _expr_vars(expr) & maybe_null
+            maybe_null |= may
         else:
-            gdf, gvars = _join_patterns(triples, gpats)
-            gdf, bnames = _apply_group_binds(
-                gdf, gbinds, bound, "this MINUS group",
-                triples=triples, nullable=set(),
+            maybe_null = (maybe_null - must) | (may - must)
+        if kind in _ORDERED or may & guard:
+            timeline.append((kind, payload, set(seen)))
+        else:
+            hoisted[kind].append(payload)
+        seen |= may
+
+    df: DataFrame | None = None
+    bound: set[str] = set()
+    nullable: set[str] = set()
+    hint = False  # df is a lone class slice not yet hinted
+    pats = [pat for run in hoisted["patterns"] for pat in run]
+    if pats:
+        df, bound, hint = _join_patterns(active, pats, graph_var)
+
+    def join(rdf, rvars, r_nullable, what):
+        """Join(df, rdf), either side possibly leaving shared
+        variables unbound (the compatible join)."""
+        nonlocal df, bound, nullable, hint
+        if df is None:
+            df, bound, nullable = rdf, set(rvars), set(r_nullable)
+            return
+        if hint:
+            df, hint = F.broadcast(df), False
+        shared = sorted(v for v in rvars if v in bound and not _is_internal(v))
+        df = _compat_join(df, nullable, rdf, r_nullable, shared, "inner", what)
+        # a shared variable stays nullable only if BOTH sides may leave
+        # it unbound; unshared right-side nullables stay nullable
+        both = {v for v in shared if v in nullable and v in r_nullable}
+        nullable = (nullable - (set(shared) - both)) | (set(r_nullable) - set(shared))
+        bound |= set(rvars)
+
+    for kind in ("union", "sub", "graph", "values"):
+        for payload in hoisted[kind]:
+            join(*_element_relation(dataset, kind, payload, bound, graph))
+
+    run: list[tuple] = []  # consecutive timeline patterns join as one BGP
+
+    def flush():
+        if run:
+            rdf, rvars, small = _join_patterns(active, list(run), graph_var)
+            run.clear()
+            join(
+                F.broadcast(rdf) if small else rdf, rvars, set(),
+                "a pattern following an OPTIONAL, MINUS, or BIND",
             )
-            gvars |= bnames
-            m_nullable = set(bnames)
-            gdf = _apply_filters(gdf, gfilters, gvars, "this MINUS group")
-            # (r4) [NOT] EXISTS inside the MINUS group: Filter(EXISTS(P), G)
-            # over the right-side solutions before the anti join —
-            # correlation through variables the group itself binds, same
-            # bottom-up scoping as the UNION-branch compilation; recursive
-            # for EXISTS-in-EXISTS
-            gdf = _apply_group_exists(
-                triples, gdf, gvars, gexists, bound, "a MINUS group"
-            )
-        # §8.3 compatibility with possibly-unbound variables (r4): a
-        # shared variable an earlier OPTIONAL/BIND left NULL is absent
-        # from dom(μ) — it drops out of the compatibility test instead
-        # of key-matching NULL, and a row binding NONE of the shared
-        # variables has a disjoint domain, which MINUS keeps; a MINUS
-        # sharing no variable removes nothing and compiles away
-        shared = sorted(v for v in gvars if v in bound and v in snap)
-        return _compat_join(df, nullable, gdf, m_nullable, shared, "minus", "MINUS")
 
-    def _apply_bind(df, bound, nullable, expr, name):
-        # BIND(expr AS ?v): computed per row at its textual position,
-        # BEFORE the group filters (which see ?v group-wide). Evaluation
-        # errors leave ?v unbound (NULL), row kept — SPARQL 1.1 §10.1.
-        if name in bound:
-            raise SparqlError(
-                f"BIND target ?{name} is already bound in this group "
-                "(SPARQL requires a fresh variable)"
-            )
-        # (late r4) [NOT] EXISTS inside the BIND expression — bare
-        # (BIND(EXISTS {…} AS ?b)), inside IF() conditions, or anywhere
-        # in a boolean ladder: flag-substituted against the relation AT
-        # THIS timeline point, so the probe sees exactly the
-        # group-so-far bindings §18.6 substitutes from
-        bind_flags: list[str] = []
-        df, expr = _attach_expr_exists_flags(
-            triples, df, bound, nullable, expr, bind_flags, "the query"
-        )
-        val, kind, lg, dt = _eval_bind_expr(expr, bound)
-        k, l, d = _shadow_cols(name)
-        df = (
-            df.withColumn(name, val)
-            .withColumn(k, F.when(val.isNotNull(), kind))
-            .withColumn(l, F.when(val.isNotNull(), lg))
-            .withColumn(d, F.when(val.isNotNull(), dt))
-        )
-        if bind_flags:
-            df = df.drop(*bind_flags)
-        return df, bound | {name}, nullable | {name}
-
-    # consecutive timeline pattern entries fold into ONE BGP before
-    # joining (Join is associative/commutative within the run)
-    pat_run: list[tuple] = []
-
-    def _flush_run(df, bound, nullable):
-        if not pat_run:
-            return df, bound, nullable
-        bdf, bvars = _join_patterns(triples, list(pat_run))
-        pat_run.clear()
-        # the pattern side always binds its variables: the unbound-left
-        # slices take the pattern's binding
-        return _join_in(
-            df, bound, nullable, bdf, bvars, set(),
-            "a pattern following an OPTIONAL, MINUS, or BIND",
-        )
-
-    for t_kind, payload in getattr(parsed, "timeline", []):
-        if t_kind == "patterns":
-            pat_run.extend(payload)
+    for kind, payload, snap in timeline:
+        if kind == "patterns":
+            run.extend(payload)
             continue
-        df, bound, nullable = _flush_run(df, bound, nullable)
+        flush()
+        if kind not in _ORDERED:
+            join(*_element_relation(dataset, kind, payload, bound, graph))
+            continue
         if df is None:
             raise SparqlError(
                 "OPTIONAL/MINUS/BIND needs a required pattern before it"
             )
-        if t_kind == "optional":
-            df, bound, nullable = _apply_optional(df, bound, nullable, payload)
-        elif t_kind == "minus":
-            df = _apply_minus(df, bound, nullable, payload)
-        elif t_kind == "bind":
-            expr, name, _snap = payload
-            df, bound, nullable = _apply_bind(df, bound, nullable, expr, name)
-        elif t_kind == "union":
-            df, bound, nullable = _join_union(df, bound, nullable, payload)
-        elif t_kind == "values":
-            df, bound, nullable = _join_values(df, bound, nullable, payload)
-        else:
-            assert t_kind == "sub", t_kind
-            df, bound, nullable = _join_sub(df, bound, nullable, payload)
-    df, bound, nullable = _flush_run(df, bound, nullable)
+        if kind == "bind":
+            hint = hint and not _has_exists_e(payload[0])
+            df, bound, nullable = _apply_bind(
+                dataset, df, bound, nullable, payload, snap, outer_bound,
+                scope, graph,
+            )
+            continue
+        if kind == "minus":
+            # §8.3: removal needs a compatible solution over a NON-EMPTY
+            # shared domain — the variables bound at the MINUS's own
+            # textual point; sharing none removes nothing
+            gdf, gvars, m_nullable = _compile_scoped(
+                dataset, payload, graph, "this MINUS group"
+            )
+            shared = sorted(v for v in gvars if v in bound and v in snap)
+            df = _compat_join(
+                df, nullable, gdf, m_nullable, shared, "minus", "MINUS"
+            )
+            hint = False
+            continue
+        # LeftJoin(A, G, F): a group filter referencing the left side
+        # joins the ON condition; one whose other references are the
+        # group's own but which names variables bound on neither side
+        # sees them unbound (§18.2 scoping at this LeftJoin)
+        gdf, gvars, g_nullable, deferred = _compile_group(
+            dataset, payload, bound, graph, "this OPTIONAL group"
+        )
+        cond, unscoped_filters = [], []
+        for f in deferred:
+            unscoped = {
+                v for v in _expr_input_vars(f) if not _is_internal(v)
+            } - gvars - bound
+            if not unscoped:
+                cond.append(f)
+            elif {v for v in _expr_vars(f) if not _is_internal(v)} - unscoped <= gvars:
+                unscoped_filters.append(f)
+            else:
+                raise SparqlError(
+                    "a filter in this OPTIONAL group references both the "
+                    f"enclosing group's variables and variable(s) "
+                    f"{sorted(unscoped)} bound in neither — the combined "
+                    "cross-group + unbound-substitution form is not "
+                    "supported; split the filter"
+                )
+        gdf = _apply_unscoped(gdf, unscoped_filters, gvars, "this OPTIONAL group")
+        shared = sorted(v for v in gvars if v in bound)
+        df = _compat_join(
+            df, nullable, gdf, g_nullable, shared, "left", "this OPTIONAL",
+            cond, left_hint=hint,
+        )
+        nullable |= gvars - bound
+        bound |= gvars
+        hint = False
+    flush()
     if df is None:
         raise SparqlError("empty graph pattern")
 
-    for expr, name in parsed.binds:
-        # hidden pre-aggregation BINDs and SELECT projection expressions
-        # — these textually follow the whole WHERE clause
-        df, bound, nullable = _apply_bind(df, bound, nullable, expr, name)
+    local: list[tuple] = []
+    deferred: list[tuple] = []
+    for f in group.filters:
+        if f[0] != "exists":
+            refs = {v for v in _expr_input_vars(f) if not _is_internal(v)}
+            (local if refs <= bound else deferred).append(f)
+    flags: list[str] = []
+    flagged = []
+    for f in local:
+        df, nf, fl = _attach_expr_exists_flags(
+            dataset, df, f, bound, nullable, outer_bound, scope, graph
+        )
+        flagged.append(nf)
+        flags += fl
+    df = _apply_filters(df, flagged, bound, scope)
+    if flags:
+        df, hint = df.drop(*flags), False
+    for f in group.filters:
+        if f[0] == "exists":
+            gdf, shared = _exists_probe(
+                dataset, f[2], bound, outer_bound, scope, graph
+            )
+            df = _compat_join(
+                df, nullable, gdf, set(), shared,
+                "semi" if f[1] else "anti", f"an EXISTS in {scope}",
+            )
+            hint = False
+    if hint:
+        df = F.broadcast(df)
+    return df, bound, nullable, deferred
 
-    # [NOT] EXISTS inside boolean FILTER expressions: flag-substituted
-    # against the final WHERE relation (all filters evaluate over the
-    # whole group per §18.2), through the same flag attachment the
-    # timeline BINDs use
-    filter_flags: list[str] = []
-    flagged_filters = []
-    for f in filters:
-        df, nf = _attach_expr_exists_flags(
-            triples, df, bound, nullable, f, filter_flags, "the query"
-        )
-        flagged_filters.append(nf)
-    df = _apply_filters(df, flagged_filters, bound)
-    if filter_flags:
-        df = df.drop(*filter_flags)
-    for positive, payload in exists_blocks:
-        # FILTER [NOT] EXISTS → semi/anti join on the shared term keys:
-        # per-row existence test, never multiplies outer rows, and the
-        # probe side stays a pruned pattern join Catalyst can broadcast;
-        # an uncorrelated probe is a per-query CONSTANT (§18.6:
-        # substituting nothing leaves the pattern as-is) — keep
-        # everything or nothing on one emptiness probe
-        gdf, _gvars, shared = _exists_probe(
-            triples, payload, bound, "the query"
-        )
-        df = _compat_join(
-            df, nullable, gdf, set(), shared,
-            "semi" if positive else "anti", "FILTER EXISTS",
-        )
+
+def _compile_where(
+    triples: DataFrame, parsed: SimpleNamespace
+) -> tuple[DataFrame, set[str], set[str]]:
+    """The WHERE group, then the binds that textually follow it (SELECT
+    expressions, pre-aggregation BINDs) → (solutions DF with term
+    shadow columns, bound variables, possibly-unbound variables)."""
+    df, bound, nullable, deferred = _compile_group(triples, parsed.where, set())
+    if deferred:
+        never = sorted({
+            v for f in deferred for v in _expr_input_vars(f)
+            if v not in bound and not _is_internal(v)
+        })
+        raise SparqlError(f"FILTER variable(s) {never} are not bound in the query")
+    for bind in parsed.binds:
+        df, bound, nullable = _apply_bind(triples, df, bound, nullable, bind, bound)
     return df, bound, nullable
 
 

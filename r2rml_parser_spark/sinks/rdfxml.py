@@ -49,8 +49,29 @@ RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 _LOCAL_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_.\-]*$")
 
 
+#: the most distinct predicates (and, for ABBREV, rdf:type classes) a
+#: dump collects to the driver for its QName tables. Both come from the
+#: mapping document, so a real vocabulary is far smaller; a larger one
+#: means data-derived predicates, whose tables would not fit the driver
+#: or the plan's literal maps — the dump fails loud instead.
+VOCAB_LIMIT = 10_000
+
+
 class RdfXmlDumpError(ValueError):
     pass
+
+
+def _collect_vocab(df: DataFrame, col: str, what: str) -> list[str]:
+    """The distinct values of ``col``, at most ``VOCAB_LIMIT`` of them:
+    only ``VOCAB_LIMIT + 1`` rows ever reach the driver."""
+    rows = df.select(col).distinct().limit(VOCAB_LIMIT + 1).collect()
+    if len(rows) > VOCAB_LIMIT:
+        raise RdfXmlDumpError(
+            f"more than {VOCAB_LIMIT} distinct {what}: too many for the "
+            "namespace tables of an RDF/XML or Turtle dump — use the "
+            "N-Triples sink"
+        )
+    return [r[0] for r in rows]
 
 
 def split_iri(iri: str) -> tuple[str, str]:
@@ -102,7 +123,7 @@ def _build_tables(
     elements, so there the unsplittable predicate stays fatal, like
     Jena). ``local_ok`` adds a syntax check on the local part beyond
     NCName (Turtle PN_LOCAL is stricter: no trailing '.')."""
-    preds = [r.pred for r in triples.select("pred").distinct().collect()]
+    preds = _collect_vocab(triples, "pred", "predicates")
     ns_to_prefix: dict[str, str] = {RDF_NS: "rdf"}
     counter = 0
 
@@ -126,12 +147,12 @@ def _build_tables(
             # Turtle: the block renderer coalesces to the <full-iri> form
     class_qnames: dict[str, str] = {}
     if include_classes:
-        classes = [
-            r.obj
-            for r in triples.where(
+        classes = _collect_vocab(
+            triples.where(
                 (F.col("pred") == RDF_NS + "type") & (F.col("obj_kind") == "iri")
-            ).select("obj").distinct().collect()
-        ]
+            ),
+            "obj", "rdf:type classes",
+        )
         for c in sorted(classes):
             try:
                 class_qnames[c] = assign(c)

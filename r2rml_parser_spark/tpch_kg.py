@@ -786,8 +786,8 @@ FROM base b LEFT JOIN opt o
     #     split !F | ^!I — a UNION whose inverse half is empty here, since
     #     nothing but inNation ever points at a customer);
     #   * alternation branches carrying a SEQUENCE inside an OPTIONAL
-    #     group ((segment|inNation/name) → one derived-relation "pathrel"
-    #     pattern — alternation cannot distribute into UNION there).
+    #     group ((segment|inNation/name) distributes into UNION branches
+    #     there, as in every group).
     "sparql_npspath_kg": Case(build_tpch_kg, query="""
 PREFIX ex: <http://kg.example/ontology#>
 SELECT ?c ?dst ?via ?via2 WHERE {
@@ -1313,7 +1313,7 @@ WHERE n.n_regionkey = 0
     # compatible with EVERY (nation, region) pair and takes its bindings,
     # while non-AUTOMOBILE customers miss the whole group. Exercises the
     # single-sided LEFT compatible-join slice decomposition at a nested
-    # level (plans/sparql.py::_compile_optional_group).
+    # level (plans/sparql.py::_compile_group).
     "sparql_nestedopt_kg": Case(build_tpch_kg, query="""
 PREFIX ex: <http://kg.example/ontology#>
 SELECT ?customer ?cname ?nation ?region WHERE {

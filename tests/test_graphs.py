@@ -169,12 +169,16 @@ def test_graph_seven_col_nested_optional_is_empty(quads):
 
 
 def test_graph_rejections(quads):
-    # nested GRAPH
-    with pytest.raises(SparqlError, match="top level"):
-        sparql_select(
-            quads,
-            "SELECT ?s WHERE { OPTIONAL { GRAPH ?g { ?s ?p ?o } } }",
-        )
+    # GRAPH inside OPTIONAL: a <q> link into ?s exists in g1 (to a) and
+    # g2 (to c), so each default-graph subject picks up its graph
+    got = sparql_select(
+        quads,
+        f"SELECT ?s ?g WHERE {{ ?s <{EX}p> ?o "
+        f"OPTIONAL {{ GRAPH ?g {{ ?x <{EX}q> ?s }} }} }}",
+    ).collect()
+    assert sorted((r.s, r.g) for r in got) == [
+        (EX + "a", EX + "g1"), (EX + "c", EX + "g2"),
+    ]
     # paths under a variable graph
     with pytest.raises(SparqlError, match="paths"):
         sparql_select(
@@ -191,14 +195,19 @@ def test_graph_rejections(quads):
     # literal graph name
     with pytest.raises(SparqlError, match="IRI"):
         sparql_select(quads, 'SELECT ?s WHERE { GRAPH "g" { ?s ?p ?o } }')
-    # GRAPH textually after an OPTIONAL sharing its variables
-    with pytest.raises(SparqlError, match="GRAPH"):
-        sparql_select(
-            quads,
-            f"""SELECT ?s WHERE {{ ?s <{EX}p> ?o .
-              OPTIONAL {{ ?s <{EX}q> ?x }}
-              GRAPH ?g {{ ?y <{EX}q> ?x }} }}""",
-        )
+    # GRAPH textually after an OPTIONAL sharing its variables: the
+    # default graph has no <q> triple, so ?x is unbound on the left and
+    # compatible with both graph rows — Join(LeftJoin(A, G), GRAPH)
+    got = sparql_select(
+        quads,
+        f"""SELECT ?s ?x ?g WHERE {{ ?s <{EX}p> ?o .
+          OPTIONAL {{ ?s <{EX}q> ?x }}
+          GRAPH ?g {{ ?y <{EX}q> ?x }} }}""",
+    ).collect()
+    assert sorted((r.s, r.x, r.g) for r in got) == [
+        (EX + "a", EX + "a", EX + "g1"), (EX + "a", EX + "c", EX + "g2"),
+        (EX + "c", EX + "a", EX + "g1"), (EX + "c", EX + "c", EX + "g2"),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -447,14 +456,18 @@ def test_graph_union_branches(quads):
     assert got2 == {
         (EX + "a", "litG1"), (EX + "a", "litA"), (EX + "c", "litC"),
     }
-    # a branch mixing GRAPH with sibling patterns stays rejected
-    with pytest.raises(SparqlError, match="exactly the GRAPH block"):
-        sparql_select(
-            quads,
-            f"""SELECT ?s WHERE {{
-              {{ GRAPH ?g {{ ?s <{EX}p> ?o }} . ?s <{EX}p> ?z }}
-              UNION {{ ?s <{EX}p> ?o }} }}""",
-        )
+    # a branch mixing GRAPH with sibling patterns is a group like any
+    # other: its GRAPH rows (litG1, litG2) join the default ?s <p> ?z
+    got3 = sparql_select(
+        quads,
+        f"""SELECT ?s ?o WHERE {{
+          {{ GRAPH ?g {{ ?s <{EX}p> ?o }} . ?s <{EX}p> ?z }}
+          UNION {{ ?s <{EX}p> ?o }} }}""",
+    ).collect()
+    assert sorted((r.s, r.o) for r in got3) == [
+        (EX + "a", "litA"), (EX + "a", "litG1"), (EX + "a", "litG2"),
+        (EX + "c", "litC"),
+    ]
 
 
 def test_graph_inside_subquery(quads):

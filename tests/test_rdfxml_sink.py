@@ -275,3 +275,21 @@ def test_rdfxml_hot_subject_chunked_fold(spark):
         assert v.startswith('  <rdf:Description rdf:about="http://x/hot">')
         got |= set(_re.findall(r"<ns1:v>(o\d+)</ns1:v>", v))
     assert got == {f"o{i:04d}" for i in range(500)}
+
+
+def test_vocabulary_over_limit_fails_loud(spark):
+    """~10^5 data-derived predicates: the namespace table fails with
+    RdfXmlDumpError instead of collecting them all to the driver."""
+    from pyspark.sql import functions as F
+
+    from r2rml_parser_spark.sinks.rdfxml import namespace_table
+
+    triples = spark.range(100_000).select(
+        F.lit("http://x/s").alias("subj"), F.lit("iri").alias("subj_kind"),
+        F.concat(F.lit("http://p/v"), F.col("id").cast("string")).alias("pred"),
+        F.lit("o").alias("obj"), F.lit("literal").alias("obj_kind"),
+        F.lit(None).cast("string").alias("lang"),
+        F.lit(None).cast("string").alias("dtype"),
+    )
+    with pytest.raises(RdfXmlDumpError, match="distinct predicates"):
+        namespace_table(triples)

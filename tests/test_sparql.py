@@ -605,8 +605,11 @@ def test_union_both_sides_nullable_joins(graph):
 
 
 def test_union_errors(graph):
-    with pytest.raises(SparqlError):  # lone braced group is not a UNION
-        sparql_select(graph, "PREFIX ex: <http://ex.org/> SELECT ?s WHERE { { ?s ex:name ?n } }")
+    # a lone braced group is a group like any other: Join(Ω, G) = G
+    got = sparql_select(
+        graph, "PREFIX ex: <http://ex.org/> SELECT ?s WHERE { { ?s ex:name ?n } }"
+    ).collect()
+    assert sorted(r.s for r in got) == [EX + "p1", EX + "p2"]
 
 
 def test_sql_over_triples_matches_sparql(graph, spark):
@@ -1594,11 +1597,13 @@ def test_minus(graph, spark):
     q3 = """PREFIX ex: <http://ex.org/>
     SELECT ?p WHERE { ?p a ex:Person . MINUS { ?x ex:name ?n } }"""
     assert sparql_select(graph, q3).count() == 2
-    with pytest.raises(SparqlError):  # nested inside a group
-        sparql_select(
-            graph,
-            "PREFIX ex: <http://ex.org/> SELECT ?p WHERE { ?p a ex:Person . OPTIONAL { ?p ex:knows ?q . MINUS { ?q ex:name ?n } } }",
-        )
+    # nested inside an OPTIONAL group: p1 knows p2, who has a name, so
+    # the MINUS empties the group and both persons keep ?q unbound
+    got = sparql_select(
+        graph,
+        "PREFIX ex: <http://ex.org/> SELECT ?p ?q WHERE { ?p a ex:Person . OPTIONAL { ?p ex:knows ?q . MINUS { ?q ex:name ?n } } }",
+    ).collect()
+    assert sorted((r.p, r.q) for r in got) == [(EX + "p1", None), (EX + "p2", None)]
     # pattern after MINUS sharing its var (full r4, formerly rejected):
     # the anti join runs at the MINUS's textual point (p1 removed),
     # THEN the pattern joins — Join(Minus(A,M),B) per §18.2
@@ -2914,15 +2919,18 @@ def test_optional_inside_union_branch_filter_scope(graph):
 
 def test_nested_optional_textual_order_guard(graph):
     # a pattern following a deeper nested OPTIONAL that shares its
-    # variable is still rejected (textual-order rule at every level)
+    # variable joins at its textual point at every level: the innermost
+    # group binds ?kn = "Grace"@en, a literal, which no ?kn ex:note
+    # subject matches, so that group is empty and both persons keep
+    # their names with ?k unbound
     q = """PREFIX ex: <http://ex.org/>
-    SELECT ?p WHERE {
+    SELECT ?p ?n ?k WHERE {
       ?p a ex:Person .
       OPTIONAL { ?p ex:name ?n
         OPTIONAL { ?p ex:knows ?k OPTIONAL { ?k ex:name ?kn } . ?kn ex:note ?z } }
     }"""
-    with pytest.raises(SparqlError):
-        sparql_select(graph, q)
+    got = sorted((r.p, r.n, r.k) for r in sparql_select(graph, q).collect())
+    assert got == [(EX + "p1", "Ada", None), (EX + "p2", "Grace", None)]
 
 
 def test_bind_textual_order_guard(graph):
@@ -3025,9 +3033,9 @@ def test_alternation_inside_union_branch_and_exists(graph):
 
 
 def test_complex_alternation_branches_inside_groups(graph):
-    # (r4) alternation branches carrying sequences compile inside an
-    # OPTIONAL as ONE derived-relation pattern ("pathrel"): knows/name
-    # reaches Grace via p2, the name branch reaches Ada directly
+    # alternation branches carrying sequences distribute into UNION
+    # branches inside an OPTIONAL: knows/name reaches Grace via p2, the
+    # name branch reaches Ada directly
     q = """PREFIX ex: <http://ex.org/>
     SELECT ?p ?v WHERE {
       ?p a ex:Person .
@@ -4700,3 +4708,30 @@ def test_path_range_rejections(chain_graph):
                 chain_graph,
                 f"PREFIX ex: <http://ex.org/> SELECT ?o WHERE {{ ex:a {bad} ?o }}",
             )
+
+
+def test_class_slice_hint_only_where_it_can_build(graph):
+    """A lone ``?x rdf:type <C>`` slice is broadcast-hinted only where
+    Spark can build it: not as the preserved left side of the
+    OPTIONAL / NOT EXISTS / MINUS join (Spark drops that hint with a
+    warning), but still as an input of an inner join."""
+    import re
+
+    def plan(q):
+        df = sparql_select(graph, "PREFIX ex: <http://ex.org/> " + q)
+        return df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+
+    for q in (
+        "SELECT ?p ?q WHERE { ?p a ex:Person OPTIONAL { ?p ex:knows ?q } }",
+        "SELECT ?p WHERE { ?p a ex:Person FILTER NOT EXISTS { ?p ex:knows ?q } }",
+        "SELECT ?p WHERE { ?p a ex:Person MINUS { ?p ex:knows ?q } }",
+    ):
+        preserved = [
+            ln for ln in plan(q) if re.search(r"Join (LeftOuter|LeftAnti|LeftSemi)", ln)
+        ]
+        assert preserved, q
+        assert not any("leftHint=(strategy=broadcast)" in ln for ln in preserved), q
+    inner = plan("SELECT ?p ?n WHERE { ?p a ex:Person . ?p ex:name ?n }")
+    assert any(
+        "Join Inner" in ln and "leftHint=(strategy=broadcast)" in ln for ln in inner
+    )

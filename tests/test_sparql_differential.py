@@ -569,9 +569,9 @@ def test_full_path_grammar_differential(spark, graph, ast, ends):
 @settings(max_examples=8, deadline=None)
 @given(graph=graph_st, ast=path_ast_st if HAVE_HYP else st.none())
 def test_full_path_in_optional_differential(spark, graph, ast):
-    # OPTIONAL { ?a <full-path> ?b } — the "pathrel" derived-relation
-    # pattern (or predset/sequence fast paths, whichever the shape
-    # takes) vs naive §18.5 LeftJoin over the §18.4 path pairs
+    # OPTIONAL { ?a <full-path> ?b } — alternation distributed into
+    # UNION branches (or predset/sequence fast paths, whichever the
+    # shape takes) vs naive §18.5 LeftJoin over the §18.4 path pairs
     rows = [
         (s[0], s[1], p, o[0], o[1], o[2] or None, o[3] or None)
         for s, p, o in graph
@@ -956,23 +956,32 @@ def _naive_minus(left, right):
     ]
 
 
+def _naive_group(graph, payload):
+    """A group payload: one triple pattern, or (nested groups) an
+    element sequence folded recursively."""
+    if isinstance(payload, list):
+        return naive_timeline_eval(graph, payload)
+    return naive_eval(graph, [payload])
+
+
 def naive_timeline_eval(graph, elements):
     """Fold the element sequence per §18.2: G := Join/LeftJoin/Minus/
-    Extend(G, element) in TEXTUAL order. BIND models the engine's
-    documented STR leniency (lexical form of any bound term; unbound
-    source → target unbound, row kept)."""
+    Extend(G, element) in TEXTUAL order, each OPTIONAL/MINUS/UNION
+    group evaluated on its own first (bottom-up). BIND models the
+    engine's documented STR leniency (lexical form of any bound term;
+    unbound source → target unbound, row kept)."""
     sols = [dict()]
     for kind, payload in elements:
         if kind == "pattern":
             sols = _naive_join(sols, naive_eval(graph, [payload]))
         elif kind == "optional":
-            sols = _naive_leftjoin(sols, naive_eval(graph, [payload]))
+            sols = _naive_leftjoin(sols, _naive_group(graph, payload))
         elif kind == "minus":
-            sols = _naive_minus(sols, naive_eval(graph, [payload]))
+            sols = _naive_minus(sols, _naive_group(graph, payload))
         elif kind == "union":
             a, b = payload
             sols = _naive_join(
-                sols, naive_eval(graph, [a]) + naive_eval(graph, [b])
+                sols, _naive_group(graph, a) + _naive_group(graph, b)
             )
         elif kind == "bind":
             src, tgt = payload
@@ -988,6 +997,13 @@ def naive_timeline_eval(graph, elements):
     return sols
 
 
+def _render_group(payload):
+    """The inside of a group's braces: one pattern or a sequence."""
+    if isinstance(payload, list):
+        return " ".join(_render_element(k, p) for k, p in payload)
+    return _render_element("pattern", payload)
+
+
 def _render_element(kind, payload):
     def fmt(term):
         mode, v = term
@@ -997,17 +1013,12 @@ def _render_element(kind, payload):
         s, p, o = payload
         return f"{fmt(s)} {fmt(p)} {fmt(o)} ."
     if kind == "optional":
-        s, p, o = payload
-        return f"OPTIONAL {{ {fmt(s)} {fmt(p)} {fmt(o)} }}"
+        return f"OPTIONAL {{ {_render_group(payload)} }}"
     if kind == "minus":
-        s, p, o = payload
-        return f"MINUS {{ {fmt(s)} {fmt(p)} {fmt(o)} }}"
+        return f"MINUS {{ {_render_group(payload)} }}"
     if kind == "union":
-        (s1, p1, o1), (s2, p2, o2) = payload
-        return (
-            f"{{ {fmt(s1)} {fmt(p1)} {fmt(o1)} }} UNION "
-            f"{{ {fmt(s2)} {fmt(p2)} {fmt(o2)} }}"
-        )
+        a, b = payload
+        return f"{{ {_render_group(a)} }} UNION {{ {_render_group(b)} }}"
     if kind == "bind":
         src, tgt = payload
         return f"BIND(STR(?{src}) AS ?{tgt})"
@@ -1096,6 +1107,111 @@ def test_textual_timeline_differential(spark, graph, first, rest):
     except SparqlError:
         return  # rejection is always safe; mis-evaluation is the bug
     got = Counter(tuple(r[v] for v in vars_) for r in out.collect())
+    want = Counter(
+        tuple(b[v][0] if v in b else None for v in vars_)
+        for b in naive_timeline_eval(graph, elements)
+    )
+    assert got == want, f"query {q!r} diverged"
+
+
+# ---------------------------------------------------------------------------
+# Nested groups: OPTIONAL, MINUS and UNION-branch payloads are element
+# sequences themselves (depth ≤ 2), so every braced group carries the
+# full group grammar — MINUS/UNION/VALUES inside OPTIONAL, patterns
+# after a nested OPTIONAL — and the naive fold recurses over them.
+# Sequences of patterns, OPTIONAL, MINUS, UNION and VALUES must all be
+# ACCEPTED (each group starts with a pattern, so every OPTIONAL/MINUS
+# has a required part; two variables keep every compatible join under
+# the engine's mask-bit cap) and match the naive multiset.
+# ---------------------------------------------------------------------------
+
+if HAVE_HYP:
+    _VARS2 = ["a", "b"]
+    _pat2 = st.tuples(
+        st.sampled_from(
+            [("var", v) for v in _VARS2]
+            + [("const", t) for t in SUBJECTS if t[1] != "bnode"]
+        ),
+        st.sampled_from(
+            [("var", v) for v in _VARS2]
+            + [("const", (p, "iri", "", "")) for p in PREDS]
+        ),
+        st.sampled_from(
+            [("var", v) for v in _VARS2]
+            + [("const", t) for t in OBJECTS if t[1] != "bnode"]
+        ),
+    )
+    _values2 = st.tuples(
+        st.just("values"),
+        st.tuples(
+            st.sampled_from(_VARS2),
+            st.lists(
+                st.one_of(
+                    st.none(),
+                    st.sampled_from([t for t in OBJECTS if t[1] != "bnode"]),
+                ),
+                min_size=1,
+                max_size=2,
+            ),
+        ),
+    )
+
+    def _seq_st(el_st):
+        return st.tuples(_pat2, st.lists(el_st, max_size=2)).map(
+            lambda t: [("pattern", t[0])] + t[1]
+        )
+
+    _flat_seq = _seq_st(st.one_of(
+        st.tuples(st.just("pattern"), _pat2),
+        st.tuples(st.just("optional"), _pat2),
+        st.tuples(st.just("minus"), _pat2),
+        st.tuples(st.just("union"), st.tuples(_pat2, _pat2)),
+        _values2,
+    ))
+    nested_timeline_st = _seq_st(st.one_of(
+        st.tuples(st.just("pattern"), _pat2),
+        st.tuples(st.just("optional"), _flat_seq),
+        st.tuples(st.just("minus"), _flat_seq),
+        st.tuples(st.just("union"), st.tuples(_flat_seq, _flat_seq)),
+        _values2,
+    ))
+
+
+def _timeline_vars(elements):
+    """The variables a sequence can bind (MINUS binds nothing)."""
+    out = set()
+    for kind, payload in elements:
+        if kind == "minus":
+            continue
+        if kind == "values":
+            out.add(payload[0])
+            continue
+        groups = list(payload) if kind == "union" else [payload]
+        for g in groups:
+            if isinstance(g, list):
+                out |= _timeline_vars(g)
+            else:
+                out |= {v for mode, v in g if mode == "var"}
+    return out
+
+
+@pytest.mark.skipif(not HAVE_HYP, reason="hypothesis not installed")
+@settings(max_examples=25, deadline=None)
+@given(graph=graph_st, elements=nested_timeline_st if HAVE_HYP else st.none())
+def test_nested_group_differential(spark, graph, elements):
+    vars_ = sorted(_timeline_vars(elements))
+    if not vars_:
+        return  # nothing to project
+    rows = [
+        (s[0], s[1], p, o[0], o[1], o[2] or None, o[3] or None)
+        for s, p, o in graph
+    ]
+    g = spark.createDataFrame(rows, ", ".join(f"{c} string" for c in COLS))
+    q = (
+        f"SELECT {' '.join('?' + v for v in vars_)} "
+        f"WHERE {{ {_render_group(elements)} }}"
+    )
+    got = Counter(tuple(r[v] for v in vars_) for r in sparql_select(g, q).collect())
     want = Counter(
         tuple(b[v][0] if v in b else None for v in vars_)
         for b in naive_timeline_eval(graph, elements)
