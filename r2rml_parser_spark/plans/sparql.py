@@ -278,7 +278,8 @@ the left side of an OPTIONAL joins the LeftJoin condition
 branch, MINUS, GRAPH) or an OPTIONAL filter cannot see is UNBOUND there
 (always-NULL substitution: value tests error → false, ``bound()``
 false). ``GRAPH <iri>`` scans that named graph, ``GRAPH ?g`` binds ?g
-from the quad relation's ``graph`` column in every pattern, and
+from the quad relation's ``graph`` column in every pattern (so a MINUS
+or EXISTS inside the block compares within the same graph), and
 patterns outside GRAPH match the default graph only (§13.3).
 Rejected, never mis-evaluated: property paths under ``GRAPH ?g``
 (their edge relations are graph-blind), EXISTS-carrying filters that
@@ -483,10 +484,12 @@ def _expr_vars(node) -> set[str]:
         elif isinstance(n, list):
             for x in n:
                 walk(x)
-        elif isinstance(n, SimpleNamespace):  # a probe group
+        elif isinstance(n, SimpleNamespace) and hasattr(n, "elements"):
+            # a probe group; a { SELECT } element in it is a parsed query
+            # whose projection _group_vars already counts
             out.update(_group_vars(n)[0])
-            for x in vars(n).values():
-                walk(x)
+            walk(n.elements)
+            walk(n.filters)
 
     walk(node)
     return out
@@ -3864,7 +3867,6 @@ def _compat_join(
     how: str = "inner",
     what: str = "this join",
     filters: list[tuple] | tuple = (),
-    left_hint: bool = False,
 ) -> DataFrame:
     """SPARQL's compatible join of two solution relations on their
     ``shared`` variables, when those may be UNBOUND (NULL) on either
@@ -3930,11 +3932,7 @@ def _compat_join(
     also leaves it unbound compiles over NULL columns → error → μ1
     kept. A pair with no effective key and F present anti-joins on F
     alone. Slices are disjoint row subsets projecting one column-name
-    set, so every by-name union here is bag-exact.
-
-    ``left_hint`` broadcast-hints the left side where it can be a build
-    side: in the inner-join pieces (Join, and the Join half of the
-    two-sided LeftJoin), never in the preserved left/semi/anti joins."""
+    set, so every by-name union here is bag-exact."""
     l_null = sorted(v for v in shared if v in left_nullable)
     r_null = sorted(v for v in shared if v in right_nullable)
     if len(l_null) + len(r_null) > _COMPAT_MAX_NULLABLE:
@@ -3995,8 +3993,6 @@ def _compat_join(
                 drop_l = keys_of(v for v in shared if v in br - bl)
                 drop_r = keys_of(v for v in shared if v not in br)
                 pl = sl.drop(*drop_l) if drop_l else sl
-                if left_hint:
-                    pl = F.broadcast(pl)
                 pr = r_sl.drop(*drop_r) if drop_r else r_sl
                 keys = keys_of(v for v in shared if v in bl & br)
                 pieces.append(
@@ -4444,7 +4440,9 @@ def _compile_group(
     timeline: list[tuple[str, object, set[str]]] = []
     guard: set[str] = set()
     maybe_null: set[str] = set()  # superset: vars possibly unbound here
-    seen: set[str] = set()  # vars textually earlier elements bind
+    # vars textually earlier elements bind; under GRAPH ?g every pattern
+    # binds ?g, so a MINUS domain or an EXISTS correlation keeps it
+    seen: set[str] = {graph_var} if graph_var else set()
     for kind, payload in group.elements:
         may, must = _elem_vars(kind, payload)
         if kind == "optional":
@@ -4531,8 +4529,10 @@ def _compile_group(
             raise SparqlError(
                 "OPTIONAL/MINUS/BIND needs a required pattern before it"
             )
+        # the preserved side of a LeftJoin, MINUS or EXISTS-flag join
+        # cannot be a build side: there the slice goes unhinted
+        hint = hint and kind == "bind" and not _has_exists_e(payload[0])
         if kind == "bind":
-            hint = hint and not _has_exists_e(payload[0])
             df, bound, nullable = _apply_bind(
                 dataset, df, bound, nullable, payload, snap, outer_bound,
                 scope, graph,
@@ -4549,7 +4549,6 @@ def _compile_group(
             df = _compat_join(
                 df, nullable, gdf, m_nullable, shared, "minus", "MINUS"
             )
-            hint = False
             continue
         # LeftJoin(A, G, F): a group filter referencing the left side
         # joins the ON condition; one whose other references are the
@@ -4578,16 +4577,17 @@ def _compile_group(
         gdf = _apply_unscoped(gdf, unscoped_filters, gvars, "this OPTIONAL group")
         shared = sorted(v for v in gvars if v in bound)
         df = _compat_join(
-            df, nullable, gdf, g_nullable, shared, "left", "this OPTIONAL",
-            cond, left_hint=hint,
+            df, nullable, gdf, g_nullable, shared, "left", "this OPTIONAL", cond
         )
         nullable |= gvars - bound
         bound |= gvars
-        hint = False
     flush()
     if df is None:
         raise SparqlError("empty graph pattern")
 
+    hint = hint and not any(
+        f[0] == "exists" or _has_exists_e(f) for f in group.filters
+    )
     local: list[tuple] = []
     deferred: list[tuple] = []
     for f in group.filters:
@@ -4604,7 +4604,7 @@ def _compile_group(
         flags += fl
     df = _apply_filters(df, flagged, bound, scope)
     if flags:
-        df, hint = df.drop(*flags), False
+        df = df.drop(*flags)
     for f in group.filters:
         if f[0] == "exists":
             gdf, shared = _exists_probe(
@@ -4614,7 +4614,6 @@ def _compile_group(
                 df, nullable, gdf, set(), shared,
                 "semi" if f[1] else "anti", f"an EXISTS in {scope}",
             )
-            hint = False
     if hint:
         df = F.broadcast(df)
     return df, bound, nullable, deferred

@@ -8,9 +8,9 @@ same code: expression ids (``#123`` → ``#N``), ``plan_id=`` values and
 ``/tmp`` paths. Two dumps compare with plain ``diff``, so a refactor
 that claims "same plans" can show it:
 
-    python scripts/plan_dump.py --sf-dir /root/testdata/sf0.001 --out a.txt
+    python scripts/plan_dump.py --sf-dir DATA/sf0.001 --out a.txt
     (check out the other revision)
-    python scripts/plan_dump.py --sf-dir /root/testdata/sf0.001 --out b.txt
+    python scripts/plan_dump.py --sf-dir DATA/sf0.001 --out b.txt
     diff a.txt b.txt
 
 A query that raises is dumped as its exception line, so a new failure
@@ -43,7 +43,7 @@ def normalize(plan: str) -> str:
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
+    ap.add_argument("--sf-dir", required=True, help="TPC-H parquet directory")
     ap.add_argument("--out", default=None, help="output file (default: stdout)")
     ap.add_argument("names", nargs="*", help="only these queries (default: all)")
     args = ap.parse_args()

@@ -148,6 +148,25 @@ def test_graph_var_full_group_content(quads):
     assert got3 == {(EX + "g1", "LITG1"), (EX + "g2", "LITG2")}
 
 
+def test_graph_var_minus_and_bind_exists_keep_same_graph(quads):
+    """Inside GRAPH ?g every pattern binds ?g, so a MINUS domain and a
+    BIND(EXISTS) correlation include it: each compares within the same
+    graph only."""
+    # g1 has b-q-a, so the MINUS removes g1's row (domain {?b, ?g});
+    # g2's b-q-c row has no same-graph b-q-a and stays
+    q = f"""SELECT ?g ?x WHERE {{ GRAPH ?g {{
+      ?b <{EX}q> ?x MINUS {{ ?b <{EX}q> <{EX}a> }}
+    }} }}"""
+    got = sorted((r.g, r.x) for r in sparql_select(quads, q).collect())
+    assert got == [(EX + "g2", EX + "c")]
+    # the probe substitutes ?b and ?g: true only in g1
+    q2 = f"""SELECT ?g ?x ?k WHERE {{ GRAPH ?g {{
+      ?b <{EX}q> ?x BIND(EXISTS {{ ?b <{EX}q> <{EX}a> }} AS ?k)
+    }} }}"""
+    got2 = sorted((r.g, r.x, r.k) for r in sparql_select(quads, q2).collect())
+    assert got2 == [(EX + "g1", EX + "a", "true"), (EX + "g2", EX + "c", "false")]
+
+
 def test_graph_seven_col_dataset_is_empty(quads):
     """A 7-column dataset has no named graphs: GRAPH matches nothing
     (the spec's answer), while default patterns still work."""

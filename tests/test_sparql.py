@@ -1244,6 +1244,24 @@ def test_exists_formerly_rejected_shapes(graph):
     )
 
 
+def test_exists_over_subquery(graph):
+    """An EXISTS probe whose group is a { SELECT } correlates through the
+    subquery's projection, in a BIND and in an OPTIONAL group's filter."""
+    p = "PREFIX ex: <http://ex.org/> "
+    sub = "{ { SELECT ?p WHERE { ?p ex:knows ?q } } }"
+    got = sparql_select(
+        graph, p + f"SELECT ?p ?k WHERE {{ ?p a ex:Person . BIND(EXISTS {sub} AS ?k) }}"
+    ).collect()
+    assert sorted((r.p, r.k) for r in got) == [(EX + "p1", "true"), (EX + "p2", "false")]
+    # only p1 knows someone: p2's OPTIONAL group filters to empty
+    got = sparql_select(
+        graph,
+        p + "SELECT ?p ?n WHERE { ?p a ex:Person . "
+        f"OPTIONAL {{ ?p ex:name ?n FILTER EXISTS {sub} }} }}",
+    ).collect()
+    assert sorted((r.p, r.n) for r in got) == [(EX + "p1", "Ada"), (EX + "p2", None)]
+
+
 def test_cross_group_optional_filter_semantics(spark):
     # LeftJoin(A, G, F) with F referencing A: employees with optional
     # bonus kept only when bonus > salary-dependent threshold — the
